@@ -1,41 +1,92 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared plumbing for the write-time BANDED-SIGNATURE index layouts —
-  * the skeleton [[Dedup.writeNearDupIndex]] (minhash band keys),
-  * [[Dedup.writeSimhashIndex]] (hamming band slices),
-  * [[Similarity.writeLshIndex]] (hyperplane buckets), and
-  * [[Dedup.writeExactDupIndex]] (content hash — the degenerate
-  * one-band case) all instantiate. Each family differs ONLY in its
-  * per-member signature function; everything below is common:
+import graft.ops.Materialize
+
+/** One write-time BANDED-SIGNATURE index family — everything
+  * [[BandedIndex]]'s single write / append / probe core needs to know
+  * about a layout. Families differ ONLY in these values; the core owns
+  * the sidecar check, the bucket column, the static-prune / DPP branch,
+  * the post-kernel pin and the broadcast guard bound.
   *
-  *  - WRITE: one row per (member, band) with a bounded partition
-  *    bucket, under `partitionBy(band, bkt)` — `band` is the
-  *    signature family's outer index (minhash band / hamming slice /
-  *    LSH table), `bkt` the bounded directory key derived from the
-  *    band's value.
-  *  - APPEND: signatures are pure per-member functions of deterministic
-  *    parameters, so a delta batch lands in exactly the directories a
-  *    full rebuild would use — probing a grown index equals probing a
-  *    rebuilt one.
-  *  - PROBE: the (small) query side's band rows broadcast-join the
-  *    index on the PARTITION columns — dynamic partition pruning reads
-  *    only the directories the delta hashes into — with any unbounded
-  *    band key finishing the match as an equi-join residual inside the
-  *    pruned read; self-pairs are dropped. The family-specific verify
-  *    measure (Jaccard / hamming / cosine) stays with the caller.
-  *
-  * A params SIDECAR (`_GRAFT_INDEX_PARAMS`, underscore-hidden from
-  * Spark's file listing) records the signature parameters at build
-  * time. Appends and probes validate it first and fail loud on a
-  * mismatch: an index probed (or grown) with different
-  * shingleK/bands/maxHamming/numPlanes/nBuckets than it was written
-  * with would silently return missing or wrong pairs — the one failure
-  * mode a layout of pure hash directories cannot surface by itself.
+  * @param params the sidecar entries that identify the layout (`family`
+  *   plus its signature parameters). `nBuckets` is not among them: the
+  *   writer records it, and append / probe read it back from the sidecar
+  *   in the same read that validates `params`.
+  * @param members the per-member KERNEL: input rows -> one narrow row
+  *   per member (`query` = probe side, else index side; the family picks
+  *   its column names per side). When `pinsQuery` and the probe prunes
+  *   statically, this frame is what gets pinned — before the explode,
+  *   never after (at fan-out one there is no explode, and the pin takes
+  *   the bucketed band frame).
+  * @param banding the constant-arity band explode of the member frame:
+  *   rows carrying the side's id (`cand_id` / `query_id`), `band`, the
+  *   payload the verify reads, and `key` when the family buckets keys
+  *   (else `bkt` itself).
+  * @param fanOut band rows per member on the probe side — the broadcast
+  *   guard bound is input rows x `fanOut`.
+  * @param bucket the bucket rule: `bkt = pmod(rule(key), nBuckets)`;
+  *   None when `banding` emits a bounded `bkt` itself (the layout then
+  *   records no `nBuckets`).
+  * @param residual equi-join keys beyond the partition columns.
+  * @param pinsQuery whether a static-pruned probe pins the member frame
+  *   (wide hamming does not: its callers pin their own decoded hashes).
   */
-private[llm] object BandedIndex {
+private[llm] final case class BandFamily(
+    params: Map[String, String],
+    members: (DataFrame, Boolean) => DataFrame,
+    banding: (DataFrame, Boolean) => DataFrame,
+    fanOut: Long,
+    bucket: Option[Column => Column],
+    residual: Seq[String],
+    pinsQuery: Boolean = true,
+    maxBroadcastRows: Long = BandedIndex.MaxProbeBroadcastRows)
+
+/** The one core behind every flat write-time banded index:
+  *
+  *  - WRITE: one row per (member, band) under `partitionBy(band, bkt)` —
+  *    `band` is the family's outer index (minhash band / hamming slice /
+  *    LSH table), `bkt` the bounded directory key of the band's value.
+  *  - APPEND: signatures are pure per-member functions of deterministic
+  *    parameters, so a delta lands in exactly the directories a full
+  *    rebuild would use — probing a grown index equals probing a rebuilt
+  *    one.
+  *  - PROBE: the (small) query side's band rows broadcast-join the index
+  *    on the PARTITION columns — dynamic partition pruning (or, for
+  *    pinned stats-less batches, a static key prune) reads only the
+  *    directories the delta hashes into — with any unbounded band key
+  *    finishing the match as an equi-join residual inside the pruned
+  *    read; self-pairs are dropped. The family's verify measure
+  *    (Jaccard / hamming / cosine) runs on the joined rows.
+  *
+  * The families ([[BandFamily]] instances) and their params SIDECAR
+  * entries (`_GRAFT_INDEX_PARAMS`, underscore-hidden from Spark's file
+  * listing, written at build time):
+  *
+  *  - `exactdup-text` ([[Dedup.writeExactDupIndex]]): `nBuckets` — the
+  *    degenerate one-band case, normalized-text hash key, md5 verify.
+  *  - `neardup-text` ([[Dedup.writeNearDupIndex]]): `shingleK`, `bands`,
+  *    `rowsPerBand`, `nBuckets` — minhash band keys, Jaccard verify.
+  *  - `simhash` ([[Dedup.writeSimhashIndex]]): `maxHamming`, `nBuckets` —
+  *    60-bit simhash pigeonhole slices.
+  *  - `simhash-wide` ([[Dedup.writeSimhashWideIndex]]): `maxHamming`,
+  *    `nBuckets` — 120-bit two-word simhash slices.
+  *  - `hamming-sig-wide` ([[Dedup.writeHammingWideIndex]]): `nLoBits`,
+  *    `nHiBits`, `maxHamming`, `nBuckets` — any two-word perceptual hash.
+  *  - `lsh-hyperplane` ([[Similarity.writeLshIndex]]): `numPlanes`,
+  *    `numTables` — hyperplane buckets are already bounded, so no
+  *    `nBuckets`; probed single-bucket or multi-probe (Hamming-1).
+  *
+  * Appends and probes validate the sidecar first and fail loud on a
+  * mismatch: an index probed (or grown) with other signature parameters
+  * than it was written with would silently return missing or wrong pairs
+  * — the one failure a layout of pure hash directories cannot surface by
+  * itself. The bucket width is the layout's own: append and probe read
+  * it from the sidecar instead of taking it from the caller.
+  */
+private[graft] object BandedIndex {
 
   /** Sidecar file name; the leading underscore hides it from Spark's
     * parquet file discovery (Hadoop's hiddenFileFilter).
@@ -50,20 +101,27 @@ private[llm] object BandedIndex {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Swap a freshly-built layout at `tmpPath` into place at `path` with
-    * the same rename-aside protocol as [[compactPartitionedDir]] (a
-    * crash between the renames preserves the old layout under
-    * `<path>_PREREBUILD`; the path itself is briefly absent — on an
-    * object store this is the metastore pointer flip). Used by the
-    * whole-index rebuild operators, where the entire directory (data +
-    * model artifacts) must change as one unit.
+  /** The one suffix a layout being replaced is parked under while
+    * [[swapInPlace]] moves its successor in.
+    */
+  val AsideSuffix = "_ASIDE"
+
+  /** Swap a freshly-built layout at `tmpPath` into place at `path`:
+    * rename-aside + rename-in, never delete-then-write. A crash before
+    * the renames leaves the original untouched; a crash between them
+    * leaves it intact under `<path>_ASIDE` ([[AsideSuffix]]). The path
+    * itself is briefly absent (a concurrent probe fails; recovery from a
+    * crash in that window is a manual rename back) — on an object store
+    * the equivalent swap is a metastore pointer flip. Used by compaction
+    * ([[compactPartitionedDir]]) and by the whole-index rebuilds, where
+    * the entire directory (data + model artifacts) changes as one unit.
     */
   private[llm] def swapInPlace(spark: SparkSession, path: String,
                                tmpPath: String): Unit = {
     val (fs, dir) = hadoopFs(spark, path)
     val tmp = new org.apache.hadoop.fs.Path(tmpPath)
     val aside = new org.apache.hadoop.fs.Path(dir.getParent,
-      dir.getName + "_PREREBUILD")
+      dir.getName + AsideSuffix)
     fs.delete(aside, true)
     if (!fs.rename(dir, aside)) throw new java.io.IOException(
       s"swapInPlace: could not move $dir aside to $aside")
@@ -122,37 +180,113 @@ private[llm] object BandedIndex {
     finally out.close()
   }
 
-  /** Fail loud unless the layout at `path` was built with exactly
-    * `params`. Called by every probe and every append.
-    */
-  def validateParams(spark: SparkSession, path: String,
-                     params: Map[String, String], op: String): Unit =
-    readSidecar(spark, path) match {
-      case None => throw new IllegalArgumentException(
-        s"$op: no $ParamsFile sidecar at $path - not a graft banded index " +
-          "(or built before sidecars existed); rebuild it with the " +
-          "matching write*Index call")
-      case Some(found) =>
-        val expected = render(params)
-        if (found != expected) throw new IllegalArgumentException(
-          s"$op: index at $path was built with different parameters.\n" +
-            s"index sidecar:\n$found\nthis call:\n$expected\n" +
-            "Probing or growing a banded layout with mismatched signature " +
-            "parameters silently returns missing or wrong pairs; rebuild " +
-            "the index or pass its recorded parameters.")
-    }
+  private def parse(sidecar: String): Map[String, String] =
+    sidecar.linesIterator.map(_.split("=", 2))
+      .collect { case Array(k, v) => k -> v }.toMap
 
-  /** Write (Overwrite) or grow (Append) a banded layout. `banded` must
-    * carry `cand_id`, `band`, `bkt` plus the family's payload columns.
-    * Append validates the sidecar BEFORE touching data; Overwrite
-    * re-writes the sidecar AFTER the data lands (a failed build leaves
-    * no fresh sidecar behind).
+  private def noSidecar(op: String, path: String) =
+    new IllegalArgumentException(s"$op: no $ParamsFile sidecar at $path - " +
+      "not a graft banded index (or built before sidecars existed); " +
+      "rebuild it with the matching write*Index call")
+
+  /** Fail loud unless the layout at `path` was built by family `f` with
+    * exactly its params, and return the layout's recorded `nBuckets` —
+    * validation and the width readback are ONE sidecar read, taken by
+    * every append and every probe.
     */
-  def writeLayout(banded: DataFrame, path: String, mode: SaveMode,
-                  params: Map[String, String]): Unit = {
-    val spark = banded.sparkSession
-    if (mode == SaveMode.Append)
-      validateParams(spark, path, params, "append to banded index")
+  private def layoutBuckets(spark: SparkSession, path: String,
+                            f: BandFamily, op: String): Option[Int] = {
+    val found = readSidecar(spark, path).getOrElse(throw noSidecar(op, path))
+    val kv = parse(found)
+    val nBuckets = kv.get("nBuckets")
+    if (kv - "nBuckets" != f.params || nBuckets.isDefined != f.bucket.isDefined)
+      throw new IllegalArgumentException(
+        s"$op: index at $path was built with different parameters.\n" +
+          s"index sidecar:\n$found\nthis call:\n${render(f.params)}\n" +
+          "Probing or growing a banded layout with mismatched signature " +
+          "parameters silently returns missing or wrong pairs; rebuild " +
+          "the index or pass its recorded parameters.")
+    nBuckets.map(_.toInt)
+  }
+
+  /** `f`'s banded rows for one side, with the bucket column appended. */
+  private def banded(f: BandFamily, members: DataFrame, query: Boolean,
+                     nBuckets: Option[Int]): DataFrame = {
+    val rows = f.banding(members, query)
+    f.bucket.zip(nBuckets).fold(rows) { case (rule, n) =>
+      rows.select(col("*"),
+        pmod(rule(col("key")), lit(n.toLong)).cast("int").as("bkt"))
+    }
+  }
+
+  /** Build (Overwrite) family `f`'s layout over `rows` at `path`;
+    * `nBuckets` is the directory width of a bucketed family (None for a
+    * family whose `banding` emits bounded buckets itself).
+    */
+  private[llm] def write(f: BandFamily, rows: DataFrame, path: String,
+                         nBuckets: Option[Int]): Unit = {
+    nBuckets.foreach(n => require(n > 0, s"nBuckets must be positive, got $n"))
+    writeLayout(banded(f, f.members(rows, false), query = false, nBuckets),
+      path, Some(f.params ++ nBuckets.map(n => "nBuckets" -> n.toString)))
+  }
+
+  /** INCREMENTAL maintenance: append `rows` to family `f`'s layout at
+    * `path` — sidecar validated BEFORE any data is touched, bucket width
+    * read back from it.
+    */
+  private[llm] def append(f: BandFamily, rows: DataFrame, path: String): Unit = {
+    val nBuckets = layoutBuckets(rows.sparkSession, path, f,
+      "append to banded index")
+    writeLayout(banded(f, f.members(rows, false), query = false, nBuckets),
+      path, None)
+  }
+
+  /** Probe family `f`'s layout at `indexPath` with `rows`: sidecar check
+    * + width readback, member kernel (pinned post-kernel when
+    * `staticPrune` and the family pins), band explode, then the
+    * static-prune ([[probeJoinStatic]]) or DPP ([[probeJoin]]) join.
+    * `verify` gets the joined rows and the (possibly pinned) member frame
+    * and applies the family's measure.
+    *
+    * `staticPrune` is the caller's call: pinned (stats-less) batch
+    * frames defeat DPP's benefit heuristic, so the streaming gates prune
+    * statically; query paths over plain frames keep DPP. On the DPP path
+    * the broadcast guard bound is `rows.count()` (or `rowsHint` when the
+    * caller already counted it) x the family's fan-out — a column-pruned
+    * count of the un-exploded input that never runs the signature kernel
+    * or the explode.
+    */
+  private[llm] def probe(spark: SparkSession, f: BandFamily, indexPath: String,
+                         rows: DataFrame, staticPrune: Boolean,
+                         rowsHint: Long = -1L)
+                        (verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val nBuckets = layoutBuckets(spark, indexPath, f, "probe banded index")
+    // A static probe reads its query frame twice, so it pins post-kernel:
+    // the member frame BEFORE the explode (an exploded frame would copy
+    // the payload once per band), or, at fan-out one, the band frame
+    // itself — no wider than the members, bucket column included.
+    val pin = staticPrune && f.pinsQuery
+    val members = Materialize.pinIf(pin && f.fanOut > 1, f.members(rows, true))
+    val qb = Materialize.pinIf(pin && f.fanOut == 1,
+      banded(f, members, query = true, nBuckets))
+    val joined =
+      if (staticPrune)
+        probeJoinStatic(spark, indexPath, qb, f.residual,
+          maxBroadcastRows = f.maxBroadcastRows)
+      else
+        probeJoin(spark, indexPath, qb, f.residual, f.maxBroadcastRows,
+          (if (rowsHint >= 0L) rowsHint else rows.count()) * f.fanOut)
+    verify(joined, members)
+  }
+
+  /** Write a banded layout. `banded` must carry `cand_id`, `band`, `bkt`
+    * plus the family's payload columns. `sidecar` Some = (re)build:
+    * Overwrite, and the sidecar is written AFTER the data lands (a failed
+    * build leaves no fresh sidecar behind); None = grow an existing,
+    * already-validated layout (Append).
+    */
+  private[llm] def writeLayout(banded: DataFrame, path: String,
+                               sidecar: Option[Map[String, String]]): Unit = {
     // Shuffle onto the partition columns BEFORE the partitioned write:
     // without it every task writes a file into every directory its rows
     // touch — at bands x nBuckets directories that is O(tasks x dirs)
@@ -161,8 +295,9 @@ private[llm] object BandedIndex {
     // and the one extra shuffle is write-time cost on a build-once
     // layout, never probe-time.
     banded.repartition(col("band"), col("bkt"))
-      .write.mode(mode).partitionBy("band", "bkt").parquet(path)
-    if (mode != SaveMode.Append) writeSidecar(spark, path, params)
+      .write.mode(if (sidecar.isDefined) SaveMode.Overwrite else SaveMode.Append)
+      .partitionBy("band", "bkt").parquet(path)
+    sidecar.foreach(writeSidecar(banded.sparkSession, path, _))
   }
 
   /** The DPP probe join: index rows joined to the broadcast query band
@@ -184,28 +319,20 @@ private[llm] object BandedIndex {
     * fallback is WARN-logged with both counts and recorded per index
     * path in [[probeBroadcastFallback]].
     *
-    * `qbRows` is the guard's row figure for `qb`. Every probe builder
-    * passes it EXACTLY — input-frame rows × the family's fixed band
-    * fan-out (the band explodes are constant-arity by construction), a
-    * column-pruned count of the UN-exploded input that never evaluates
-    * the signature kernel or the explode — because the round-19 shape
-    * (`qb.count()` here) paid one full extra evaluation of the
-    * band-exploded frame, kernel included, per probe (round-20; the
-    * r19 verdict's item 3). Negative means unknown and falls back to
-    * counting `qb` itself — the conservative path for external callers
-    * that cannot bound their frame.
+    * `qbRows` is the guard's row figure for `qb`: [[probe]] passes input
+    * rows × the family's fixed band fan-out (the band explodes are
+    * constant-arity by construction), a column-pruned count of the
+    * UN-exploded input that never evaluates the signature kernel or the
+    * explode — the round-19 shape (`qb.count()` here) paid one full extra
+    * evaluation of the band-exploded frame, kernel included, per probe.
     */
-  def probeJoin(spark: SparkSession, indexPath: String, qb: DataFrame,
-                residual: Seq[String], params: Map[String, String],
-                maxBroadcastRows: Long = MaxProbeBroadcastRows,
-                qbRows: Long = -1L): DataFrame = {
-    validateParams(spark, indexPath, params, "probe banded index")
-    val rows = if (qbRows >= 0L) qbRows else qb.count()
+  private[llm] def probeJoin(spark: SparkSession, indexPath: String,
+                             qb: DataFrame, residual: Seq[String],
+                             maxBroadcastRows: Long, qbRows: Long): DataFrame =
     readLayout(spark, indexPath)
-      .join(guardedQueryBroadcast(indexPath, qb, rows, maxBroadcastRows),
+      .join(guardedQueryBroadcast(indexPath, qb, qbRows, maxBroadcastRows),
         Seq("band", "bkt") ++ residual)
       .filter(col("cand_id") =!= col("query_id"))
-  }
 
   /** Apply (or, past the cap, drop) the probe-side broadcast hint —
     * the shared guard of [[probeJoin]] / [[probeJoinStatic]] and the
@@ -246,9 +373,9 @@ private[llm] object BandedIndex {
     * probe costs one extra pass of `qb`'s plan, not a payload copy.
     * Column pruning does NOT prune the per-row KERNEL that computes
     * the band key (a simhash token pass, an md5 normalize, an LSH
-    * projection — the key derives from it), so the probe BUILDERS pin
-    * their POST-KERNEL pre-explode signature frame when static
-    * pruning is on (round-19; [[graft.ops.Materialize.pinIf]]): one
+    * projection — the key derives from it), so [[probe]] pins the
+    * family's POST-KERNEL pre-explode member frame when static
+    * pruning is on (round-19; [[BandFamily.pinsQuery]]): one
     * narrow row per doc, and both passes read stored blocks instead
     * of re-running the kernel. Round-18 measured the tempting
     * alternative — pinning `qb` itself here — at ~3× the whole
@@ -278,11 +405,11 @@ private[llm] object BandedIndex {
     * definition) the hint is dropped and the optimizer/AQE pick sides;
     * recorded in [[probeBroadcastFallback]].
     */
-  def probeJoinStatic(spark: SparkSession, indexPath: String, qb: DataFrame,
-                      residual: Seq[String], params: Map[String, String],
-                      maxKeys: Int = MaxStaticPruneKeys,
-                      maxBroadcastRows: Long = MaxProbeBroadcastRows): DataFrame = {
-    validateParams(spark, indexPath, params, "probe banded index")
+  private[llm] def probeJoinStatic(spark: SparkSession, indexPath: String,
+                                   qb: DataFrame, residual: Seq[String],
+                                   maxKeys: Int = MaxStaticPruneKeys,
+                                   maxBroadcastRows: Long = MaxProbeBroadcastRows)
+      : DataFrame = {
     val keys = qb.groupBy(col("band"), col("bkt"))
       .agg(count(lit(1)).as("__qn"))
       .limit(maxKeys + 1).collect()
@@ -379,8 +506,8 @@ private[llm] object BandedIndex {
     * a 2048-directory layout pays 3.4 s to read KB-sized files). A
     * corpus-derived width gives fixtures narrow layouts and 100 TB
     * corpora wide ones from the same call; the write records the chosen
-    * value in the sidecar, so probes/appends can resolve it with
-    * [[bucketsOf]] instead of re-deriving.
+    * value in the sidecar, and probes/appends read it from there
+    * instead of re-deriving.
     */
   def autoBuckets(rows: Long, targetRowsPerBucket: Long = 512,
                   minBuckets: Int = 16, maxBuckets: Int = 32768): Int = {
@@ -405,19 +532,14 @@ private[llm] object BandedIndex {
     * preserved. The row set is unchanged by construction, so a probe of
     * the compacted layout returns exactly what the fragmented one did.
     *
-    * The swap is rename-aside + rename-in (never delete-then-write):
-    * a crash before the renames leaves the original untouched, and a
-    * crash between them leaves the old layout intact under
-    * `<path>_PRECOMPACT` — the data always exists somewhere, though in
-    * the brief window between the two renames the index PATH itself is
-    * absent (a concurrent probe fails, and recovery from a crash in
-    * that window is a manual rename of `_PRECOMPACT` back into place).
-    * On a production object store the equivalent swap is a
-    * metastore/table pointer flip, which closes that window too; the
-    * maintenance dataflow (read, re-cluster, write, swap) is identical.
+    * The swap is [[swapInPlace]]'s rename-aside + rename-in (never
+    * delete-then-write): the data always exists somewhere, though the
+    * index PATH is briefly absent between the two renames. The
+    * maintenance dataflow (read, re-cluster, write, swap) is the one a
+    * production object store runs behind a metastore pointer flip.
     *
-    * Applies to the flat banded families (exact-dup / near-dup text /
-    * simhash / wide-simhash / LSH / hamming). The nested IVF family's
+    * Applies to every flat banded family (exact-dup / near-dup text /
+    * simhash / wide simhash / wide hamming / LSH). The nested IVF family's
     * cell-partitioned data compacts through the same core via
     * [[graft.llm.Similarity.compactIvfIndex]] /
     * [[graft.llm.Similarity.compactIvfPqIndex]].
@@ -439,15 +561,13 @@ private[llm] object BandedIndex {
     *   distinct row count) into their own row-preservation contract.
     */
   def compactLayout(spark: SparkSession, path: String): (Long, Long, Long) = {
-    val sidecar = readSidecar(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"compactLayout: no $ParamsFile sidecar at $path - not a graft " +
-          "banded index (or built before sidecars existed)"))
+    val sidecar = readSidecar(spark, path)
+      .getOrElse(throw noSidecar("compactLayout", path))
     val out = compactPartitionedDir(spark, path, Seq("band", "bkt"),
       dropExactDuplicates = true)
     // The sidecar must have survived the copy - a layout without it
     // would refuse every future probe/append.
-    if (readSidecar(spark, path).isEmpty || readSidecar(spark, path).get != sidecar)
+    if (!readSidecar(spark, path).contains(sidecar))
       throw new IllegalStateException(
         s"compactLayout: sidecar at $path changed across compaction")
     out
@@ -456,7 +576,7 @@ private[llm] object BandedIndex {
   /** The compaction core shared by [[compactLayout]] and the IVF-family
     * compactors: re-cluster `path`'s rows on `partitionCols` (one writer
     * task per directory → one file per directory), verify the copy's
-    * row count against the source, then swap via rename-aside. Root
+    * row count against the source, then [[swapInPlace]]. Root
     * `_`-prefixed marker files (params sidecars, completion markers)
     * are carried over verbatim. With `dropExactDuplicates` the rewrite
     * is `distinct()` and the gate compares against the source's
@@ -510,43 +630,24 @@ private[llm] object BandedIndex {
           s"$compactedRows rows, source had $rowsBefore - aborting swap " +
           "(original layout untouched)")
     }
-    val aside = new org.apache.hadoop.fs.Path(dir.getParent, dir.getName + "_PRECOMPACT")
-    fs.delete(aside, true)
-    if (!fs.rename(dir, aside)) throw new java.io.IOException(
-      s"compactPartitionedDir: could not move $dir aside to $aside")
-    if (!fs.rename(tmp, dir)) throw new java.io.IOException(
-      s"compactPartitionedDir: could not move compacted layout $tmp into " +
-        s"place at $dir - the original is preserved at $aside")
-    fs.delete(aside, true)
+    swapInPlace(spark, path, tmp.toString)
     (before, dataFiles(dir), compactedRows)
   }
 
-  /** The `nBuckets` a layout was written with, from its params sidecar —
-    * the resolution path for probes/appends against an auto-sized index.
-    * Fails loud on a missing sidecar or a family mismatch.
-    */
-  def bucketsOf(spark: SparkSession, path: String, family: String): Int =
-    paramOf(spark, path, family, "nBuckets").toInt
-
   /** Read ONE layout parameter from the params sidecar, validating the
-    * family first — the generic readback behind [[bucketsOf]] and the
-    * auto-sized LSH gate's plane resolution: callers of an auto-sized
-    * layout never thread build-time sizing through by hand (they'd
-    * drift from what was actually built; the sidecar is the truth).
+    * family first — the readback behind the auto-sized LSH layouts'
+    * plane/table resolution: callers of an auto-sized layout never
+    * thread build-time sizing through by hand (they'd drift from what
+    * was actually built; the sidecar is the truth).
     */
   def paramOf(spark: SparkSession, path: String, family: String,
-              key: String): String =
-    readSidecar(spark, path) match {
-      case None => throw new IllegalArgumentException(
-        s"paramOf: no $ParamsFile sidecar at $path - not a graft banded " +
-          "index (or built before sidecars existed)")
-      case Some(found) =>
-        val kv = found.linesIterator.map(_.split("=", 2))
-          .collect { case Array(k, v) => k -> v }.toMap
-        if (!kv.get("family").contains(family))
-          throw new IllegalArgumentException(
-            s"paramOf: index at $path is family '${kv.getOrElse("family", "?")}', expected '$family'")
-        kv.getOrElse(key, throw new IllegalArgumentException(
-          s"paramOf: sidecar at $path has no $key entry"))
-    }
+              key: String): String = {
+    val kv = parse(readSidecar(spark, path)
+      .getOrElse(throw noSidecar("paramOf", path)))
+    if (!kv.get("family").contains(family))
+      throw new IllegalArgumentException(
+        s"paramOf: index at $path is family '${kv.getOrElse("family", "?")}', expected '$family'")
+    kv.getOrElse(key, throw new IllegalArgumentException(
+      s"paramOf: sidecar at $path has no $key entry"))
+  }
 }

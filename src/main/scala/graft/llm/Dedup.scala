@@ -183,65 +183,48 @@ object Dedup {
         .as(Seq("band", "key")))
   }
 
-  /** Materialize the write-time NEAR-DUP TEXT index: one row per (doc,
-    * band) — `(cand_id, key, shingles)` under `partitionBy(band, bkt)`,
-    * `bkt = hash60(key) % nBuckets`. Band keys are unbounded-cardinality
-    * strings, so (unlike the embedding-LSH layout's integral buckets)
-    * the PARTITION key is the band plus a bounded hash bucket of the
-    * key; the full key stays a data column and finishes the match as an
-    * equi-join residual inside the pruned read. Built once at write
-    * time, the index turns every "is this delta batch a near-dup of
-    * anything in the corpus?" question from a corpus re-shingle into a
-    * DPP-pruned read of ~the delta's bucket directories.
+  /** The NEAR-DUP TEXT [[BandFamily]]: one row per (doc, band) —
+    * `(cand_id, key, shingles)` with `bkt = hash60(key) % nBuckets`.
+    * Band keys are unbounded-cardinality strings, so (unlike the
+    * embedding-LSH layout's integral buckets) the PARTITION key is the
+    * band plus a bounded hash bucket of the key; the full key stays a
+    * data column and finishes the match as an equi-join residual inside
+    * the pruned read. The shingle arrays are pinned once by `mat` (the
+    * [[minhashLshPairs]] materialization contract): they feed the
+    * signature pass AND the carried payload.
+    */
+  private[llm] def nearDupFamily(idCol: String, textCol: String,
+                                 shingleK: Int, bands: Int, rowsPerBand: Int,
+                                 mat: graft.ops.Materialize): BandFamily =
+    BandFamily(
+      Map("family" -> "neardup-text", "shingleK" -> shingleK.toString,
+        "bands" -> bands.toString, "rowsPerBand" -> rowsPerBand.toString),
+      members = (rows, _) =>
+        mat(ensureParallelism(rows.select(col(idCol).as("id"), col(textCol)))
+          .select(col("id"), wordShingles(col(textCol), shingleK).as("shingles"))),
+      banding = (sets, query) =>
+        if (query)
+          bandKeys(sets, bands, rowsPerBand)
+            .join(sets.select(col("id"), col("shingles").as("q_sh")), Seq("id"))
+            .select(col("id").as("query_id"), col("q_sh"), col("band"), col("key"))
+        else
+          bandKeys(sets, bands, rowsPerBand).join(sets, Seq("id"))
+            .select(col("id").as("cand_id"), col("key"), col("shingles"),
+              col("band")),
+      fanOut = bands, bucket = Some(hash60(_)), residual = Seq("key"))
+
+  /** Materialize the write-time near-dup text index ([[nearDupFamily]]).
+    * Built once at write time, the index turns every "is this delta
+    * batch a near-dup of anything in the corpus?" question from a corpus
+    * re-shingle into a DPP-pruned read of ~the delta's bucket
+    * directories.
     */
   def writeNearDupIndex(corpus: DataFrame, idCol: String, textCol: String,
                         shingleK: Int, bands: Int, rowsPerBand: Int,
                         nBuckets: Int, path: String,
                         mat: graft.ops.Materialize = graft.ops.Materialize.Local): Unit =
-    writeNearDupLayout(corpus, idCol, textCol, shingleK, bands, rowsPerBand,
-      nBuckets, path, org.apache.spark.sql.SaveMode.Overwrite, mat)
-
-  /** INCREMENTAL maintenance: append a delta batch to an existing
-    * [[writeNearDupIndex]] layout. Signatures are a pure per-doc
-    * function (deterministic hash parameters), so appended rows land in
-    * exactly the directories a full rebuild would put them in — probing
-    * the grown index equals probing a from-scratch index of the union.
-    */
-  def appendToNearDupIndex(delta: DataFrame, idCol: String, textCol: String,
-                           shingleK: Int, bands: Int, rowsPerBand: Int,
-                           nBuckets: Int, path: String,
-                           mat: graft.ops.Materialize = graft.ops.Materialize.Local): Unit =
-    writeNearDupLayout(delta, idCol, textCol, shingleK, bands, rowsPerBand,
-      nBuckets, path, org.apache.spark.sql.SaveMode.Append, mat)
-
-  /** The sidecar-recorded signature parameters of a near-dup text
-    * layout ([[BandedIndex]] validates them on probe and append).
-    */
-  private def nearDupParams(shingleK: Int, bands: Int, rowsPerBand: Int,
-                            nBuckets: Int): Map[String, String] = Map(
-    "family" -> "neardup-text", "shingleK" -> shingleK.toString,
-    "bands" -> bands.toString, "rowsPerBand" -> rowsPerBand.toString,
-    "nBuckets" -> nBuckets.toString)
-
-  private def writeNearDupLayout(rows: DataFrame, idCol: String,
-                                 textCol: String, shingleK: Int, bands: Int,
-                                 rowsPerBand: Int, nBuckets: Int, path: String,
-                                 mode: org.apache.spark.sql.SaveMode,
-                                 mat: graft.ops.Materialize): Unit = {
-    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    // Pinned once: the shingle arrays feed the signature pass AND the
-    // output rows (the minhashLshPairs materialization contract —
-    // `mat` picks Local/Reliable/Path per the Materialize docs).
-    val sets = mat(ensureParallelism(rows.select(col(idCol).as("id"), col(textCol)))
-      .select(col("id"), wordShingles(col(textCol), shingleK).as("shingles")))
-    val banded = bandKeys(sets, bands, rowsPerBand)
-      .join(sets, Seq("id"))
-      .select(col("id").as("cand_id"), col("key"), col("shingles"),
-        col("band"),
-        pmod(hash60(col("key")), lit(nBuckets.toLong)).cast("int").as("bkt"))
-    BandedIndex.writeLayout(banded, path, mode,
-      nearDupParams(shingleK, bands, rowsPerBand, nBuckets))
-  }
+    BandedIndex.write(nearDupFamily(idCol, textCol, shingleK, bands,
+      rowsPerBand, mat), corpus, path, Some(nBuckets))
 
   /** Probe a [[writeNearDupIndex]] layout with a delta batch: the
     * delta's band keys join the index on the PARTITION columns (band,
@@ -264,84 +247,63 @@ object Dedup {
                         indexPath: String, delta: DataFrame,
                         idCol: String, textCol: String,
                         shingleK: Int, bands: Int, rowsPerBand: Int,
-                        nBuckets: Int, threshold: Double,
-                        mat: graft.ops.Materialize = graft.ops.Materialize.Local): DataFrame = {
-    val qsets = mat(ensureParallelism(delta.select(col(idCol).as("id"), col(textCol)))
-      .select(col("id"), wordShingles(col(textCol), shingleK).as("shingles")))
-    val qb = bandKeys(qsets, bands, rowsPerBand)
-      .join(qsets.select(col("id"), col("shingles").as("q_sh")), Seq("id"))
-      .select(col("id").as("query_id"), col("q_sh"), col("band"), col("key"),
-        pmod(hash60(col("key")), lit(nBuckets.toLong)).cast("int").as("bkt"))
-    // The guard bound: bandKeys emits exactly `bands` rows per doc with
-    // a non-empty shingle set, so (materialized) delta docs × bands
-    // bounds qb without evaluating the banded frame (round-20).
-    BandedIndex.probeJoin(spark, indexPath, qb, Seq("key"),
-        nearDupParams(shingleK, bands, rowsPerBand, nBuckets),
-        qbRows = qsets.count() * bands)
-      .withColumn("inter", size(array_intersect(col("q_sh"), col("shingles"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("q_sh")) + size(col("shingles")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("query_id"), col("cand_id"), col("jaccard")).distinct()
-  }
+                        threshold: Double,
+                        mat: graft.ops.Materialize = graft.ops.Materialize.Local): DataFrame =
+    BandedIndex.probe(spark, nearDupFamily(idCol, textCol, shingleK, bands,
+        rowsPerBand, mat), indexPath, delta, staticPrune = false) { (joined, _) =>
+      joined
+        .withColumn("inter", size(array_intersect(col("q_sh"), col("shingles"))))
+        .withColumn("jaccard",
+          col("inter").cast("double") /
+            (size(col("q_sh")) + size(col("shingles")) - col("inter")).cast("double"))
+        .filter(col("jaccard") >= threshold)
+        .select(col("query_id"), col("cand_id"), col("jaccard")).distinct()
+    }
 
-  /** Sidecar params of an exact-dup layout (see [[nearDupParams]]). */
-  private def exactDupParams(nBuckets: Int): Map[String, String] =
-    Map("family" -> "exactdup-text", "nBuckets" -> nBuckets.toString)
-
-  /** The exact-dup signature frame shared by write and probe: one row
-    * per doc — `key` = 60-bit hash of the normalized text (the bucket
+  /** The EXACT-DUP [[BandFamily]] — the degenerate single-band case: one
+    * row per doc, `key` = 60-bit hash of the normalized text (the bucket
     * key), the full md5 carried alongside so the probe verifies matches
-    * collision-proof, under the degenerate single band.
+    * collision-proof. The normalize + md5 kernel is one NARROW row per
+    * doc (no explode, no text), so a static-pruned probe pins it and the
+    * kernel runs once per micro-batch instead of twice (round-19).
     */
-  private def exactDupSignature(rows: DataFrame, idCol: String,
-                                textCol: String, idOut: String,
-                                hashOut: String, nBuckets: Int): DataFrame =
-    ensureParallelism(rows.select(col(idCol).as(idOut), col(textCol)))
-      .select(col(idOut), normalize(col(textCol)).as("__norm"))
-      .select(col(idOut), hash60(col("__norm")).as("key"),
-        md5(col("__norm")).as(hashOut))
-      .select(col(idOut), col("key"), col(hashOut), lit(0).as("band"),
-        pmod(col("key"), lit(nBuckets.toLong)).cast("int").as("bkt"))
+  private[llm] def exactDupFamily(idCol: String, textCol: String): BandFamily =
+    BandFamily(Map("family" -> "exactdup-text"),
+      members = (rows, query) => {
+        val (id, h) = if (query) ("query_id", "q_h128") else ("cand_id", "h128")
+        ensureParallelism(rows.select(col(idCol).as(id), col(textCol)))
+          .select(col(id), normalize(col(textCol)).as("__norm"))
+          .select(col(id), hash60(col("__norm")).as("key"),
+            md5(col("__norm")).as(h))
+          .select(col(id), col("key"), col(h), lit(0).as("band"))
+      },
+      banding = (sigs, _) => sigs,
+      fanOut = 1, bucket = Some(k => k), residual = Seq("key"))
 
-  /** Materialize the write-time EXACT-DUP index — the degenerate
-    * single-band [[BandedIndex]] family, and the measure of what a new
-    * family costs on the shared layout: one signature function
-    * ([[exactDupSignature]]) plus parameter plumbing. "Is this delta
-    * batch textually identical to anything in the corpus?" becomes a
-    * DPP-pruned read of the delta's bucket directories — the write-time
-    * twin of [[exactDedup]], as [[writeNearDupIndex]] is of
-    * [[minhashLshPairs]].
+  /** Materialize the write-time EXACT-DUP index ([[exactDupFamily]]):
+    * "is this delta batch textually identical to anything in the
+    * corpus?" becomes a DPP-pruned read of the delta's bucket
+    * directories — the write-time twin of [[exactDedup]], as
+    * [[writeNearDupIndex]] is of [[minhashLshPairs]].
     */
   def writeExactDupIndex(corpus: DataFrame, idCol: String, textCol: String,
                          nBuckets: Int, path: String): Unit =
-    writeExactDupLayout(corpus, idCol, textCol, nBuckets, path,
-      org.apache.spark.sql.SaveMode.Overwrite)
+    BandedIndex.write(exactDupFamily(idCol, textCol), corpus, path,
+      Some(nBuckets))
 
   /** INCREMENTAL maintenance: append a delta batch to an existing
     * [[writeExactDupIndex]] layout (per-doc pure signatures — grown
     * index probes identically to a rebuild; params sidecar-validated).
     */
   def appendToExactDupIndex(delta: DataFrame, idCol: String, textCol: String,
-                            nBuckets: Int, path: String): Unit =
-    writeExactDupLayout(delta, idCol, textCol, nBuckets, path,
-      org.apache.spark.sql.SaveMode.Append)
-
-  private def writeExactDupLayout(rows: DataFrame, idCol: String,
-                                  textCol: String, nBuckets: Int,
-                                  path: String,
-                                  mode: org.apache.spark.sql.SaveMode): Unit = {
-    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    BandedIndex.writeLayout(
-      exactDupSignature(rows, idCol, textCol, "cand_id", "h128", nBuckets),
-      path, mode, exactDupParams(nBuckets))
-  }
+                            path: String): Unit =
+    BandedIndex.append(exactDupFamily(idCol, textCol), delta, path)
 
   /** Probe a [[writeExactDupIndex]] layout with a delta batch: bucket-key
-    * equi-join under dynamic partition pruning, then the carried md5
-    * verifies true text equality (a 60-bit bucket-key collision cannot
-    * produce a false pair).
+    * equi-join under dynamic partition pruning (or a static key prune,
+    * for pinned streaming batches), then the carried md5 verifies true
+    * text equality (a 60-bit bucket-key collision cannot produce a false
+    * pair).
     *
     * @return (query_id, cand_id): delta docs paired with every index
     *   member whose normalized text is identical (self excluded).
@@ -349,33 +311,15 @@ object Dedup {
   def probeExactDupIndex(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, delta: DataFrame,
                          idCol: String, textCol: String,
-                         nBuckets: Int, staticPrune: Boolean = false): DataFrame = {
-    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    // Static pruning evaluates qb twice (key collect + join). The
-    // signature frame is one NARROW row per doc (no explode, no text),
-    // so pinning it post-kernel is safe under the standing rule — and
-    // the normalize + md5 pass over the batch text runs ONCE instead of
-    // twice per micro-batch (round-19; the perceptual sinks' decoded-
-    // hash pin, applied to the text family).
-    val qb = graft.ops.Materialize.pinIf(staticPrune,
-      exactDupSignature(delta, idCol, textCol, "query_id", "q_h128", nBuckets))
-    val joined =
-      if (staticPrune)
-        BandedIndex.probeJoinStatic(spark, indexPath, qb, Seq("key"),
-          exactDupParams(nBuckets))
-      else
-        // Degenerate single band: one qb row per delta doc, so the
-        // guard bound is a column-pruned count of the raw delta — the
-        // normalize + md5 kernel is never evaluated for it (round-20).
-        BandedIndex.probeJoin(spark, indexPath, qb, Seq("key"),
-          exactDupParams(nBuckets), qbRows = delta.count())
-    joined
-      .filter(col("h128") === col("q_h128"))
-      .select(col("query_id"), col("cand_id"))
-  }
+                         staticPrune: Boolean = false): DataFrame =
+    BandedIndex.probe(spark, exactDupFamily(idCol, textCol), indexPath, delta,
+        staticPrune) { (joined, _) =>
+      joined.filter(col("h128") === col("q_h128"))
+        .select(col("query_id"), col("cand_id"))
+    }
 
   /** Compact ANY flat banded-index layout (exact-dup / near-dup text /
-    * simhash / wide-simhash / LSH / image-hamming) in place: rewrite to
+    * simhash / wide simhash / wide hamming / LSH) in place: rewrite to
     * one file per (band, bkt) directory, params sidecar and marker files
     * preserved, row SET unchanged — exact-duplicate rows, which only a
     * crash-replayed append can create and which no probe can observe
@@ -429,21 +373,6 @@ object Dedup {
       // doc, the expression yields null — same membership either way.
       .filter(col("simhash").isNotNull)
 
-  /** SimHash near-duplicate pairs: docs whose 60-bit simhashes lie within
-    * `maxHamming`. Candidate recall is guaranteed by pigeonhole: the 60
-    * bits split into `maxHamming + 1` bands, so any pair within
-    * `maxHamming` differing bits agrees exactly on at least one band; the
-    * true hamming distance then filters the candidates.
-    */
-  /** The hamming band slices of a (id, sh) simhash frame: one row per
-    * (doc, band), key = that band's bit slice. Shared by the inline
-    * pair join and the write-time index layout — identical expressions,
-    * so the index collides exactly where the inline path would
-    * (pigeonhole recall: `maxHamming + 1` bands over 60 bits).
-    */
-  private def simhashBands(sigs: DataFrame, maxHamming: Int): DataFrame =
-    hammingBands(sigs, nBits = 60, maxHamming = maxHamming)
-
   /** The hamming band slices of ANY (id, sh) bit-signature frame — the
     * simhash machinery with the bit width as a parameter, so other
     * hamming-space signatures (e.g. the 56-bit image dHash) reuse the
@@ -490,8 +419,8 @@ object Dedup {
     * either shrink the radius (maxHamming=3 → 14-bit keys, 4096× fewer
     * candidates per the formula) or treat the job as the one-time batch
     * it is; the INGEST path is unaffected — the write-time index probes
-    * ([[probeHammingIndex]]) are delta-bounded and measured ~1.0× per
-    * corpus decade at fixed delta.
+    * ([[probeHammingWideIndex]]) are delta-bounded and measured ~1.0×
+    * per corpus decade at fixed delta.
     *
     * `sigs` must be DETERMINISTIC (or caller-pinned): the self-join
     * evaluates it once per side, and a non-deterministic upstream
@@ -541,31 +470,12 @@ object Dedup {
       .groupBy(col("id_a"), col("id_b"))
       .agg(min(col("hamming")).as("hamming"))
 
-  /** [[probeHammingIndex]] lifted to signature SETS — the write-time
-    * twin of [[hammingNearDupPairsSet]]: the index stores one row per
-    * member signature (e.g. every strided frame hash of a video,
-    * [[writeHammingIndex]] unchanged — it never assumed one row per
-    * id), the delta probes with its own member set, and entity pairs
-    * report the MIN member-pair distance. Any in-budget member pair
-    * makes the entities candidates (per-member pigeonhole recall), so
-    * the index path closes the same first-member evasion the pairs
-    * query does — a re-encode that replaces a video's opening frame
-    * still collides on the shared later frames. Cost shape: k× banded
-    * probe rows (k = member-set size, caller-bounded), one grouped min
-    * on the verified pair frame.
-    *
-    * @return (query_id, cand_id, hamming = min member-pair distance),
-    *   cand ≠ query, hamming ≤ maxHamming.
+  /** SimHash near-duplicate pairs: docs whose 60-bit simhashes lie within
+    * `maxHamming`. Candidate recall is guaranteed by pigeonhole: the 60
+    * bits split into `maxHamming + 1` bands, so any pair within
+    * `maxHamming` differing bits agrees exactly on at least one band; the
+    * true hamming distance then filters the candidates.
     */
-  def probeHammingIndexSet(spark: org.apache.spark.sql.SparkSession,
-                           indexPath: String, sigs: DataFrame,
-                           idCol: String, hashCol: String, nBits: Int,
-                           maxHamming: Int, nBuckets: Int): DataFrame =
-    probeHammingIndex(spark, indexPath, sigs, idCol, hashCol, nBits,
-      maxHamming, nBuckets)
-      .groupBy(col("query_id"), col("cand_id"))
-      .agg(min(col("hamming")).as("hamming"))
-
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 60,
@@ -576,143 +486,48 @@ object Dedup {
       idCol = "id", hashCol = "sh", nBits = 60, maxHamming = maxHamming)
   }
 
-  /** Materialize the write-time SIMHASH index: one row per (doc, band)
-    * — `(cand_id, key, sh)` under `partitionBy(band, bkt)`,
-    * `bkt = key % nBuckets` (band values are bounded ints, but 2^width
-    * can still be thousands of directories; the bucket bounds the
-    * partition count like the near-dup text index's key hash). The
-    * third write-time dedup layout beside [[writeNearDupIndex]] and the
-    * embedding-LSH index: hamming near-dup probes of a delta batch
-    * against the corpus become DPP-pruned reads instead of corpus
-    * re-hashes.
+  /** A hamming family's banded rows for one side: index rows are
+    * (cand_id, key, payload, band) — the layout's data-column order —
+    * query rows (query_id, payload renamed for the probe side, band,
+    * key).
+    */
+  private def hammingSide(banded: DataFrame, query: Boolean,
+                          payload: (String, String)*): DataFrame =
+    if (query)
+      banded.select(col("id").as("query_id") +:
+        payload.map { case (c, q) => col(c).as(q) } :+ col("band") :+ col("key"): _*)
+    else
+      banded.select(col("id").as("cand_id") +: col("key") +:
+        payload.map(p => col(p._1)) :+ col("band"): _*)
+
+  /** The 60-bit SIMHASH [[BandFamily]]: one row per (doc, band) —
+    * `(cand_id, key, sh)` with `bkt = key % nBuckets` (band values are
+    * bounded ints, but 2^width can still be thousands of directories;
+    * the bucket bounds the partition count like the near-dup text
+    * index's key hash). Slices follow [[simhashPairs]]' pigeonhole
+    * layout, so the index collides exactly where the inline path would.
+    */
+  private[llm] def simhashFamily(idCol: String, textCol: String,
+                                 maxHamming: Int): BandFamily = {
+    require(maxHamming >= 0 && maxHamming < 60,
+      s"maxHamming must be in [0, 60), got $maxHamming")
+    BandFamily(Map("family" -> "simhash", "maxHamming" -> maxHamming.toString),
+      members = (rows, _) => simhashFrame(rows, idCol, textCol)
+        .select(col(idCol).as("id"), col("simhash").as("sh")),
+      banding = (sigs, query) =>
+        hammingSide(hammingBands(sigs, 60, maxHamming), query, "sh" -> "q_sh"),
+      fanOut = maxHamming + 1L, bucket = Some(k => k), residual = Seq("key"))
+  }
+
+  /** Materialize the write-time SIMHASH index ([[simhashFamily]]) — the
+    * write-time twin of [[simhashPairs]]: hamming near-dup probes of a
+    * delta batch against the corpus become DPP-pruned reads instead of
+    * corpus re-hashes.
     */
   def writeSimhashIndex(corpus: DataFrame, idCol: String, textCol: String,
                         maxHamming: Int, nBuckets: Int, path: String): Unit =
-    writeSimhashLayout(corpus, idCol, textCol, maxHamming, nBuckets, path,
-      org.apache.spark.sql.SaveMode.Overwrite)
-
-  /** INCREMENTAL maintenance: append a delta batch to an existing
-    * [[writeSimhashIndex]] layout (signatures are per-doc pure — grown
-    * index probes identically to a rebuild).
-    */
-  def appendToSimhashIndex(delta: DataFrame, idCol: String, textCol: String,
-                           maxHamming: Int, nBuckets: Int, path: String): Unit =
-    writeSimhashLayout(delta, idCol, textCol, maxHamming, nBuckets, path,
-      org.apache.spark.sql.SaveMode.Append)
-
-  /** Sidecar params of a simhash layout (see [[nearDupParams]]). */
-  private def simhashParams(maxHamming: Int, nBuckets: Int): Map[String, String] =
-    Map("family" -> "simhash", "maxHamming" -> maxHamming.toString,
-      "nBuckets" -> nBuckets.toString)
-
-  private def writeSimhashLayout(rows: DataFrame, idCol: String,
-                                 textCol: String, maxHamming: Int,
-                                 nBuckets: Int, path: String,
-                                 mode: org.apache.spark.sql.SaveMode): Unit = {
-    require(maxHamming >= 0 && maxHamming < 60,
-      s"maxHamming must be in [0, 60), got $maxHamming")
-    writeHammingLayout(
-      simhashFrame(rows, idCol, textCol)
-        .select(col(idCol).as("id"), col("simhash").as("sh")),
-      "id", "sh", nBits = 60, maxHamming = maxHamming, nBuckets = nBuckets,
-      path = path, mode = mode, params = simhashParams(maxHamming, nBuckets))
-  }
-
-  /** Sidecar params of a GENERIC hamming-signature layout (see
-    * [[nearDupParams]]) — `nBits` is a layout parameter here, unlike
-    * the text-simhash family where 60 is part of the family contract.
-    */
-  private def hammingIndexParams(nBits: Int, maxHamming: Int,
-                                 nBuckets: Int): Map[String, String] = Map(
-    "family" -> "hamming-sig", "nBits" -> nBits.toString,
-    "maxHamming" -> maxHamming.toString, "nBuckets" -> nBuckets.toString)
-
-  /** Materialize the write-time index of ANY fixed-width bit-signature
-    * frame under hamming distance — the [[writeSimhashIndex]] machinery
-    * with the bit width as a parameter, so non-text hamming signatures
-    * (the 56-bit image dHash of
-    * [[graft.llm.Multimodal.decodeImageHash]], an audio fingerprint, …)
-    * get the same DPP-probed, incrementally growable layout without a
-    * per-modality reimplementation. `sigs` must carry one row per
-    * member with `idCol` and a positive int64 `hashCol` of `nBits`
-    * significant bits; band slices follow [[hammingNearDupPairs]]'s
-    * pigeonhole layout (`maxHamming + 1` bands, recall by
-    * construction).
-    */
-  def writeHammingIndex(sigs: DataFrame, idCol: String, hashCol: String,
-                        nBits: Int, maxHamming: Int, nBuckets: Int,
-                        path: String): Unit =
-    writeHammingLayout(sigs.select(col(idCol).as("id"), col(hashCol).as("sh")),
-      "id", "sh", nBits, maxHamming, nBuckets, path,
-      org.apache.spark.sql.SaveMode.Overwrite,
-      hammingIndexParams(nBits, maxHamming, nBuckets))
-
-  /** INCREMENTAL maintenance: append a delta's signatures to an existing
-    * [[writeHammingIndex]] layout (per-member pure signatures — grown
-    * index probes identically to a rebuild; sidecar-validated).
-    */
-  def appendToHammingIndex(sigs: DataFrame, idCol: String, hashCol: String,
-                           nBits: Int, maxHamming: Int, nBuckets: Int,
-                           path: String): Unit =
-    writeHammingLayout(sigs.select(col(idCol).as("id"), col(hashCol).as("sh")),
-      "id", "sh", nBits, maxHamming, nBuckets, path,
-      org.apache.spark.sql.SaveMode.Append,
-      hammingIndexParams(nBits, maxHamming, nBuckets))
-
-  private def writeHammingLayout(sigs: DataFrame, idCol: String,
-                                 hashCol: String, nBits: Int, maxHamming: Int,
-                                 nBuckets: Int, path: String,
-                                 mode: org.apache.spark.sql.SaveMode,
-                                 params: Map[String, String]): Unit = {
-    require(maxHamming >= 0 && maxHamming < nBits,
-      s"maxHamming must be in [0, $nBits), got $maxHamming")
-    require(nBits >= 1 && nBits <= 63,
-      s"nBits must be in [1, 63] (positive int64 signatures), got $nBits")
-    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    val banded = hammingBands(
-      sigs.select(col(idCol).as("id"), col(hashCol).as("sh")),
-      nBits, maxHamming)
-      .select(col("id").as("cand_id"), col("key"), col("sh"),
-        col("band"), pmod(col("key"), lit(nBuckets.toLong)).cast("int").as("bkt"))
-    BandedIndex.writeLayout(banded, path, mode, params)
-  }
-
-  /** Probe a [[writeHammingIndex]] layout with a delta's signatures:
-    * band slices join the index on the PARTITION columns (dynamic
-    * partition pruning), survivors verify exact `bit_count(xor)` — the
-    * [[probeSimhashIndex]] dataflow for any bit width.
-    *
-    * @return (query_id, cand_id, hamming), cand ≠ query,
-    *   hamming ≤ maxHamming.
-    */
-  def probeHammingIndex(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String, sigs: DataFrame,
-                        idCol: String, hashCol: String, nBits: Int,
-                        maxHamming: Int, nBuckets: Int): DataFrame =
-    probeHammingFrames(spark, indexPath,
-      sigs.select(col(idCol).as("id"), col(hashCol).as("sh")),
-      nBits, maxHamming, nBuckets,
-      hammingIndexParams(nBits, maxHamming, nBuckets))
-
-  private def probeHammingFrames(spark: org.apache.spark.sql.SparkSession,
-                                 indexPath: String, qsigs: DataFrame,
-                                 nBits: Int, maxHamming: Int, nBuckets: Int,
-                                 params: Map[String, String]): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < nBits,
-      s"maxHamming must be in [0, $nBits), got $maxHamming")
-    val qb = hammingBands(qsigs, nBits, maxHamming)
-      .select(col("id").as("query_id"), col("sh").as("q_sh"),
-        col("band"), col("key"),
-        pmod(col("key"), lit(nBuckets.toLong)).cast("int").as("bkt"))
-    // Guard bound: hammingBands is a constant-arity explode — exactly
-    // maxHamming + 1 band rows per signature — so a column-pruned count
-    // of the un-exploded frame bounds qb without a kernel pass (r20).
-    BandedIndex.probeJoin(spark, indexPath, qb, Seq("key"), params,
-        qbRows = qsigs.count() * (maxHamming + 1L))
-      .withColumn("hamming", bit_count(col("q_sh").bitwiseXOR(col("sh"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("query_id"), col("cand_id"), col("hamming")).distinct()
-  }
+    BandedIndex.write(simhashFamily(idCol, textCol, maxHamming), corpus, path,
+      Some(nBuckets))
 
   /** Probe a [[writeSimhashIndex]] layout with a delta batch: the
     * delta's band slices join the index on the PARTITION columns
@@ -729,12 +544,13 @@ object Dedup {
   def probeSimhashIndex(spark: org.apache.spark.sql.SparkSession,
                         indexPath: String, delta: DataFrame,
                         idCol: String, textCol: String,
-                        maxHamming: Int, nBuckets: Int): DataFrame =
-    probeHammingFrames(spark, indexPath,
-      simhashFrame(delta, idCol, textCol)
-        .select(col(idCol).as("id"), col("simhash").as("sh")),
-      nBits = 60, maxHamming = maxHamming, nBuckets = nBuckets,
-      params = simhashParams(maxHamming, nBuckets))
+                        maxHamming: Int): DataFrame =
+    BandedIndex.probe(spark, simhashFamily(idCol, textCol, maxHamming),
+        indexPath, delta, staticPrune = false) { (joined, _) =>
+      joined.withColumn("hamming", bit_count(col("q_sh").bitwiseXOR(col("sh"))))
+        .filter(col("hamming") <= maxHamming)
+        .select(col("query_id"), col("cand_id"), col("hamming")).distinct()
+    }
 
   // ---- WIDE (120-bit, two-word) simhash family -----------------------
 
@@ -768,18 +584,6 @@ object Dedup {
       .select(col(idCol),
         element_at(col("_sig"), 1).as("simhash_lo"),
         element_at(col("_sig"), 2).as("simhash_hi"))
-
-  /** Pigeonhole band slices of a two-word (id, sh_lo, sh_hi) signature
-    * frame: `maxHamming + 1` disjoint bands split between the words —
-    * `ceil(nBands/2)` slices over `sh_lo`'s 60 bits, the rest over
-    * `sh_hi`'s. Pigeonhole recall holds for ANY partition of the 120
-    * bit positions into nBands disjoint groups: a pair within
-    * `maxHamming` differing bits agrees exactly on at least one band.
-    * Needs `maxHamming >= 1` so both words contribute a band (for
-    * hamming-0 use the exact-dup family).
-    */
-  private def hammingBandsWide(sigs: DataFrame, maxHamming: Int): DataFrame =
-    hammingBandsWide(sigs, 60, 60, maxHamming)
 
   /** One band slice of a two-word signature layout: which `band` index
     * it is, which `word` it slices (0 = lo, 1 = hi), and the bit
@@ -914,101 +718,6 @@ object Dedup {
       .groupBy(col("id_a"), col("id_b"))
       .agg(min(col("hamming")).as("hamming"))
 
-  /** Sidecar params of a GENERIC WIDE hamming layout (see
-    * [[nearDupParams]]) — both word widths are layout parameters.
-    */
-  private def hammingWideIndexParams(nLoBits: Int, nHiBits: Int,
-                                     maxHamming: Int,
-                                     nBuckets: Int): Map[String, String] = Map(
-    "family" -> "hamming-sig-wide", "nLoBits" -> nLoBits.toString,
-    "nHiBits" -> nHiBits.toString, "maxHamming" -> maxHamming.toString,
-    "nBuckets" -> nBuckets.toString)
-
-  /** Materialize the write-time index of ANY two-word bit-signature
-    * frame under hamming distance — [[writeHammingIndex]]'s WIDE twin
-    * and the ingest-path fix for narrow-signature band-key saturation:
-    * at maxHamming=7 a 110-bit perceptual signature (56 + 54) bands
-    * into 13–14-bit keys (8192–16384 values), so the layout spreads
-    * over full-entropy directories where the 56-bit family's 7-bit
-    * keys cap it at 128 per band — each probe row's candidate set
-    * stays corpus-fraction-bounded instead of growing linearly on
-    * saturated keys. `sigs` must carry one row per member with `idCol`
-    * plus positive int64 `loCol`/`hiCol` words; band slices follow
-    * [[wideBandLayout]] (pigeonhole recall by construction). A
-    * signature-SET entity (strided video) simply contributes one row
-    * per member — the layout never assumes one row per id.
-    */
-  def writeHammingWideIndex(sigs: DataFrame, idCol: String, loCol: String,
-                            hiCol: String, nLoBits: Int, nHiBits: Int,
-                            maxHamming: Int, nBuckets: Int,
-                            path: String): Unit =
-    writeHammingWideLayout(sigs, idCol, loCol, hiCol, nLoBits, nHiBits,
-      maxHamming, nBuckets, path, org.apache.spark.sql.SaveMode.Overwrite)
-
-  /** AUTO-SIZED [[writeHammingWideIndex]]: `nBuckets` derived from the
-    * signature-row cardinality ([[BandedIndex.autoBuckets]] — the same
-    * sizing the wide-simhash text family uses), so a fixture corpus
-    * gets a narrow directory layout and a corpus-scale build a wide
-    * one from the same call, and probe-time DPP pruning keeps biting
-    * as the corpus grows (a FIXED 64 directories saturate — every
-    * probe eventually touches every directory). Returns the chosen
-    * `nBuckets`, also recorded in the params sidecar — consumers
-    * resolve it back with [[hammingWideIndexBuckets]], never by
-    * re-deriving. `rowsHint` (when ≥ 0) supplies the cardinality
-    * without a count job — pass the driving table's row count when
-    * `sigs` is an EXPENSIVE frame (a media decode) that a count()
-    * would otherwise evaluate twice.
-    */
-  def writeHammingWideIndexAuto(sigs: DataFrame, idCol: String, loCol: String,
-                                hiCol: String, nLoBits: Int, nHiBits: Int,
-                                maxHamming: Int, path: String,
-                                rowsHint: Long = -1L): Int = {
-    val rows = if (rowsHint >= 0L) rowsHint else sigs.count()
-    val nBuckets = BandedIndex.autoBuckets(rows)
-    writeHammingWideLayout(sigs, idCol, loCol, hiCol, nLoBits, nHiBits,
-      maxHamming, nBuckets, path, org.apache.spark.sql.SaveMode.Overwrite)
-    nBuckets
-  }
-
-  /** The `nBuckets` a generic wide hamming layout was written with,
-    * from its params sidecar ([[simhashWideIndexBuckets]]'s twin for
-    * the `hamming-sig-wide` family — the perceptual image/audio/video
-    * indexes).
-    */
-  def hammingWideIndexBuckets(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String): Int =
-    BandedIndex.bucketsOf(spark, indexPath, "hamming-sig-wide")
-
-  /** INCREMENTAL maintenance: append a delta's two-word signatures to an
-    * existing [[writeHammingWideIndex]] layout (per-member pure
-    * signatures — grown index probes identically to a rebuild;
-    * sidecar-validated).
-    */
-  def appendToHammingWideIndex(sigs: DataFrame, idCol: String, loCol: String,
-                               hiCol: String, nLoBits: Int, nHiBits: Int,
-                               maxHamming: Int, nBuckets: Int,
-                               path: String): Unit =
-    writeHammingWideLayout(sigs, idCol, loCol, hiCol, nLoBits, nHiBits,
-      maxHamming, nBuckets, path, org.apache.spark.sql.SaveMode.Append)
-
-  private def writeHammingWideLayout(sigs: DataFrame, idCol: String,
-                                     loCol: String, hiCol: String,
-                                     nLoBits: Int, nHiBits: Int,
-                                     maxHamming: Int, nBuckets: Int,
-                                     path: String,
-                                     mode: org.apache.spark.sql.SaveMode): Unit = {
-    requireWideWidths(nLoBits, nHiBits, maxHamming)
-    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    val banded = hammingBandsWide(
-      sigs.select(col(idCol).as("id"), col(loCol).as("sh_lo"),
-        col(hiCol).as("sh_hi")), nLoBits, nHiBits, maxHamming)
-      .select(col("id").as("cand_id"), col("key"), col("sh_lo"),
-        col("sh_hi"), col("band"),
-        pmod(col("key"), lit(nBuckets.toLong)).cast("int").as("bkt"))
-    BandedIndex.writeLayout(banded, path, mode,
-      hammingWideIndexParams(nLoBits, nHiBits, maxHamming, nBuckets))
-  }
-
   private def requireWideWidths(nLoBits: Int, nHiBits: Int,
                                 maxHamming: Int): Unit = {
     require(nLoBits >= 1 && nLoBits <= 63 && nHiBits >= 1 && nHiBits <= 63,
@@ -1017,10 +726,110 @@ object Dedup {
       s"maxHamming must be in [1, ${nLoBits + nHiBits}), got $maxHamming")
   }
 
+  /** A WIDE (two-word) hamming [[BandFamily]] over a member frame of
+    * `(id, sh_lo, sh_hi)`: [[wideBandLayout]] slices (pigeonhole recall
+    * by construction), `bkt = key % nBuckets`, the two-word signature
+    * carried as the verify payload.
+    */
+  private def wideFamily(params: Map[String, String], nLoBits: Int,
+                         nHiBits: Int, maxHamming: Int, pinsQuery: Boolean)
+                        (members: DataFrame => DataFrame): BandFamily = {
+    requireWideWidths(nLoBits, nHiBits, maxHamming)
+    BandFamily(params + ("maxHamming" -> maxHamming.toString),
+      members = (rows, _) => members(rows),
+      banding = (sigs, query) => hammingSide(
+        hammingBandsWide(sigs, nLoBits, nHiBits, maxHamming), query,
+        "sh_lo" -> "q_lo", "sh_hi" -> "q_hi"),
+      fanOut = maxHamming + 1L, bucket = Some(k => k), residual = Seq("key"),
+      pinsQuery = pinsQuery)
+  }
+
+  /** The two-word verify shared by both wide families: exact
+    * `bit_count(xor)` sum, multi-band collisions deduped on the
+    * identical computed distance.
+    */
+  private def wideVerify(maxHamming: Int)(joined: DataFrame,
+                                          members: DataFrame): DataFrame =
+    joined
+      .withColumn("hamming",
+        bit_count(col("q_lo").bitwiseXOR(col("sh_lo"))) +
+          bit_count(col("q_hi").bitwiseXOR(col("sh_hi"))))
+      .filter(col("hamming") <= maxHamming)
+      .select(col("query_id"), col("cand_id"), col("hamming")).distinct()
+
+  /** The GENERIC WIDE hamming family (`hamming-sig-wide`) over any
+    * two-word bit-signature frame. Deliberately NOT pinned by a static
+    * probe: callers with an expensive kernel (a media decode) pin their
+    * own decoded hashes before probing.
+    */
+  private[llm] def hammingWideFamily(idCol: String, loCol: String, hiCol: String,
+                                     nLoBits: Int, nHiBits: Int,
+                                     maxHamming: Int): BandFamily =
+    wideFamily(Map("family" -> "hamming-sig-wide",
+        "nLoBits" -> nLoBits.toString, "nHiBits" -> nHiBits.toString),
+      nLoBits, nHiBits, maxHamming, pinsQuery = false) {
+      _.select(col(idCol).as("id"), col(loCol).as("sh_lo"), col(hiCol).as("sh_hi"))
+    }
+
+  /** Materialize the write-time index of ANY two-word bit-signature
+    * frame under hamming distance ([[hammingWideFamily]]) — the
+    * ingest-path fix for narrow-signature band-key saturation:
+    * at maxHamming=7 a 110-bit perceptual signature (56 + 54) bands
+    * into 13–14-bit keys (8192–16384 values), so the layout spreads
+    * over full-entropy directories where a 56-bit signature's 7-bit
+    * keys cap it at 128 per band — each probe row's candidate set
+    * stays corpus-fraction-bounded instead of growing linearly on
+    * saturated keys. `sigs` must carry one row per member with `idCol`
+    * plus positive int64 `loCol`/`hiCol` words. A signature-SET entity
+    * (strided video) simply contributes one row per member — the layout
+    * never assumes one row per id.
+    */
+  def writeHammingWideIndex(sigs: DataFrame, idCol: String, loCol: String,
+                            hiCol: String, nLoBits: Int, nHiBits: Int,
+                            maxHamming: Int, nBuckets: Int,
+                            path: String): Unit =
+    BandedIndex.write(hammingWideFamily(idCol, loCol, hiCol, nLoBits, nHiBits,
+      maxHamming), sigs, path, Some(nBuckets))
+
+  /** AUTO-SIZED [[writeHammingWideIndex]]: `nBuckets` derived from the
+    * signature-row cardinality ([[BandedIndex.autoBuckets]] — the same
+    * sizing the wide-simhash text family uses), so a fixture corpus
+    * gets a narrow directory layout and a corpus-scale build a wide
+    * one from the same call, and probe-time DPP pruning keeps biting
+    * as the corpus grows (a FIXED 64 directories saturate — every
+    * probe eventually touches every directory). Returns the chosen
+    * `nBuckets`, also recorded in the params sidecar, from which every
+    * append and probe reads it. `rowsHint` (when ≥ 0) supplies the
+    * cardinality without a count job — pass the driving table's row
+    * count when `sigs` is an EXPENSIVE frame (a media decode) that a
+    * count() would otherwise evaluate twice.
+    */
+  def writeHammingWideIndexAuto(sigs: DataFrame, idCol: String, loCol: String,
+                                hiCol: String, nLoBits: Int, nHiBits: Int,
+                                maxHamming: Int, path: String,
+                                rowsHint: Long = -1L): Int = {
+    val nBuckets = BandedIndex.autoBuckets(
+      if (rowsHint >= 0L) rowsHint else sigs.count())
+    writeHammingWideIndex(sigs, idCol, loCol, hiCol, nLoBits, nHiBits,
+      maxHamming, nBuckets, path)
+    nBuckets
+  }
+
+  /** INCREMENTAL maintenance: append a delta's two-word signatures to an
+    * existing [[writeHammingWideIndex]] layout (per-member pure
+    * signatures — grown index probes identically to a rebuild;
+    * sidecar-validated).
+    */
+  def appendToHammingWideIndex(sigs: DataFrame, idCol: String, loCol: String,
+                               hiCol: String, nLoBits: Int, nHiBits: Int,
+                               maxHamming: Int, path: String): Unit =
+    BandedIndex.append(hammingWideFamily(idCol, loCol, hiCol, nLoBits, nHiBits,
+      maxHamming), sigs, path)
+
   /** Probe a [[writeHammingWideIndex]] layout with a delta's two-word
     * signatures: band slices join the index on the PARTITION columns
-    * (dynamic partition pruning), survivors verify the exact two-word
-    * `bit_count(xor)` sum — [[probeHammingIndex]]'s wide twin.
+    * (dynamic partition pruning, or a static key prune for pinned
+    * batches), survivors verify the exact two-word `bit_count(xor)` sum.
     *
     * @return (query_id, cand_id, hamming), cand ≠ query,
     *   hamming ≤ maxHamming.
@@ -1029,40 +838,17 @@ object Dedup {
                             indexPath: String, sigs: DataFrame,
                             idCol: String, loCol: String, hiCol: String,
                             nLoBits: Int, nHiBits: Int, maxHamming: Int,
-                            nBuckets: Int,
-                            staticPrune: Boolean = false): DataFrame = {
-    requireWideWidths(nLoBits, nHiBits, maxHamming)
-    val qb = hammingBandsWide(
-      sigs.select(col(idCol).as("id"), col(loCol).as("sh_lo"),
-        col(hiCol).as("sh_hi")), nLoBits, nHiBits, maxHamming)
-      .select(col("id").as("query_id"), col("sh_lo").as("q_lo"),
-        col("sh_hi").as("q_hi"), col("band"), col("key"),
-        pmod(col("key"), lit(nBuckets.toLong)).cast("int").as("bkt"))
-    val params = hammingWideIndexParams(nLoBits, nHiBits, maxHamming, nBuckets)
-    val joined =
-      if (staticPrune)
-        BandedIndex.probeJoinStatic(spark, indexPath, qb, Seq("key"), params)
-      else
-        // Guard bound: hammingBandsWide explodes exactly maxHamming + 1
-        // band slices per signature, so a column-pruned count of the
-        // un-exploded input bounds qb without a kernel pass (round-20).
-        BandedIndex.probeJoin(spark, indexPath, qb, Seq("key"), params,
-          qbRows = sigs.count() * (maxHamming + 1L))
-    joined
-      .withColumn("hamming",
-        bit_count(col("q_lo").bitwiseXOR(col("sh_lo"))) +
-          bit_count(col("q_hi").bitwiseXOR(col("sh_hi"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("query_id"), col("cand_id"), col("hamming")).distinct()
-  }
+                            staticPrune: Boolean = false): DataFrame =
+    BandedIndex.probe(spark, hammingWideFamily(idCol, loCol, hiCol, nLoBits,
+      nHiBits, maxHamming), indexPath, sigs, staticPrune)(wideVerify(maxHamming))
 
-  /** [[probeHammingWideIndex]] lifted to signature SETS — the wide twin
-    * of [[probeHammingIndexSet]]: the index stores one row per member
-    * signature pair, the delta probes with its own member set, entity
-    * pairs report the MIN member-pair distance (any in-budget member
-    * pair makes the entities candidates — per-member pigeonhole
-    * recall, so the strided-set first-frame-evasion closure holds on
-    * the wide ingest path too).
+  /** [[probeHammingWideIndex]] lifted to signature SETS — the write-time
+    * twin of [[hammingNearDupPairsSetWide]]: the index stores one row per
+    * member signature pair, the delta probes with its own member set,
+    * entity pairs report the MIN member-pair distance (any in-budget
+    * member pair makes the entities candidates — per-member pigeonhole
+    * recall, so a re-encode that replaces a video's opening frame still
+    * collides on the shared later frames).
     *
     * @return (query_id, cand_id, hamming = min member-pair distance),
     *   cand ≠ query, hamming ≤ maxHamming.
@@ -1070,10 +856,10 @@ object Dedup {
   def probeHammingWideIndexSet(spark: org.apache.spark.sql.SparkSession,
                                indexPath: String, sigs: DataFrame,
                                idCol: String, loCol: String, hiCol: String,
-                               nLoBits: Int, nHiBits: Int, maxHamming: Int,
-                               nBuckets: Int): DataFrame =
+                               nLoBits: Int, nHiBits: Int,
+                               maxHamming: Int): DataFrame =
     probeHammingWideIndex(spark, indexPath, sigs, idCol, loCol, hiCol,
-      nLoBits, nHiBits, maxHamming, nBuckets)
+      nLoBits, nHiBits, maxHamming)
       .groupBy(col("query_id"), col("cand_id"))
       .agg(min(col("hamming")).as("hamming"))
 
@@ -1092,31 +878,40 @@ object Dedup {
       idCol, "simhash_lo", "simhash_hi", 60, 60, maxHamming)
   }
 
-  /** Sidecar params of a wide-simhash layout (see [[nearDupParams]]). */
-  private def simhashWideParams(maxHamming: Int,
-                                nBuckets: Int): Map[String, String] =
-    Map("family" -> "simhash-wide", "maxHamming" -> maxHamming.toString,
-      "nBuckets" -> nBuckets.toString)
+  /** The WIDE-SIMHASH [[BandFamily]] (`simhash-wide`): the 120-bit
+    * two-word simhash in [[wideFamily]]'s layout — 15-bit band keys at
+    * maxHamming=7, so `nBuckets` scales to 32768 directories per band
+    * instead of the 60-bit family's 128: the text family whose DPP
+    * pruning does NOT saturate at corpus scale. A static probe pins the
+    * pre-explode signature frame — three scalars per doc — so the
+    * token-pass simhash kernel over the batch text runs ONCE instead of
+    * twice per micro-batch (kernel cost scales with text BYTES while
+    * the pin costs 24 bytes/doc; round-19, BASELINE kernel-pin row).
+    */
+  private[llm] def simhashWideFamily(idCol: String, textCol: String,
+                                     maxHamming: Int): BandFamily =
+    wideFamily(Map("family" -> "simhash-wide"), 60, 60, maxHamming,
+      pinsQuery = true) { rows =>
+      simhashWideFrame(rows, idCol, textCol)
+        .select(col(idCol).as("id"), col("simhash_lo").as("sh_lo"),
+          col("simhash_hi").as("sh_hi"))
+    }
 
-  /** Materialize the write-time WIDE-simhash index — the
-    * [[writeSimhashIndex]] layout with 15-bit band keys (maxHamming=7),
-    * so `nBuckets` scales to 32768 directories per band instead of the
-    * 60-bit family's 128: the family whose DPP pruning does NOT
-    * saturate at corpus scale. Signature function + params are the only
-    * family-specific code; write/append/probe are [[BandedIndex]].
+  /** Materialize the write-time WIDE-simhash index
+    * ([[simhashWideFamily]]), the write-time twin of [[simhashWidePairs]].
     */
   def writeSimhashWideIndex(corpus: DataFrame, idCol: String,
                             textCol: String, maxHamming: Int,
                             nBuckets: Int, path: String): Unit =
-    writeSimhashWideLayout(corpus, idCol, textCol, maxHamming, nBuckets,
-      path, org.apache.spark.sql.SaveMode.Overwrite)
+    BandedIndex.write(simhashWideFamily(idCol, textCol, maxHamming), corpus,
+      path, Some(nBuckets))
 
   /** AUTO-SIZED [[writeSimhashWideIndex]]: `nBuckets` derived from the
     * corpus cardinality ([[BandedIndex.autoBuckets]] — one count job at
     * build time, on a build-once layout), so a 5,000-doc fixture gets a
     * narrow layout and a corpus-scale build a wide one from the same
-    * call. Returns the chosen `nBuckets` (also recorded in the sidecar;
-    * probes/appends resolve it from there).
+    * call. Returns the chosen `nBuckets` (also recorded in the sidecar,
+    * from which appends and probes read it).
     */
   def writeSimhashWideIndexAuto(corpus: DataFrame, idCol: String,
                                 textCol: String, maxHamming: Int,
@@ -1131,38 +926,13 @@ object Dedup {
     */
   def appendToSimhashWideIndex(delta: DataFrame, idCol: String,
                                textCol: String, maxHamming: Int,
-                               nBuckets: Int, path: String): Unit =
-    writeSimhashWideLayout(delta, idCol, textCol, maxHamming, nBuckets,
-      path, org.apache.spark.sql.SaveMode.Append)
-
-  /** [[appendToSimhashWideIndex]] with `nBuckets` resolved from the
-    * layout's params sidecar — the append path against an auto-sized
-    * index ([[writeSimhashWideIndexAuto]]).
-    */
-  def appendToSimhashWideIndex(delta: DataFrame, idCol: String,
-                               textCol: String, maxHamming: Int,
                                path: String): Unit =
-    appendToSimhashWideIndex(delta, idCol, textCol, maxHamming,
-      BandedIndex.bucketsOf(delta.sparkSession, path, "simhash-wide"), path)
-
-  private def writeSimhashWideLayout(rows: DataFrame, idCol: String,
-                                     textCol: String, maxHamming: Int,
-                                     nBuckets: Int, path: String,
-                                     mode: org.apache.spark.sql.SaveMode): Unit = {
-    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    val banded = hammingBandsWide(
-      simhashWideFrame(rows, idCol, textCol)
-        .select(col(idCol).as("id"), col("simhash_lo").as("sh_lo"),
-          col("simhash_hi").as("sh_hi")), maxHamming)
-      .select(col("id").as("cand_id"), col("key"), col("sh_lo"),
-        col("sh_hi"), col("band"),
-        pmod(col("key"), lit(nBuckets.toLong)).cast("int").as("bkt"))
-    BandedIndex.writeLayout(banded, path, mode,
-      simhashWideParams(maxHamming, nBuckets))
-  }
+    BandedIndex.append(simhashWideFamily(idCol, textCol, maxHamming), delta,
+      path)
 
   /** Probe a [[writeSimhashWideIndex]] layout with a delta batch — the
-    * [[probeSimhashIndex]] dataflow with the two-word verify.
+    * [[probeSimhashIndex]] dataflow with the two-word verify;
+    * `staticPrune` as in [[BandedIndex.probe]].
     *
     * @return (query_id, cand_id, hamming), cand ≠ query,
     *   hamming ≤ maxHamming.
@@ -1170,76 +940,10 @@ object Dedup {
   def probeSimhashWideIndex(spark: org.apache.spark.sql.SparkSession,
                             indexPath: String, delta: DataFrame,
                             idCol: String, textCol: String,
-                            maxHamming: Int, nBuckets: Int,
-                            staticPrune: Boolean = false): DataFrame = {
-    // Static pruning evaluates qb twice (key collect + join). Pin the
-    // PRE-EXPLODE signature frame — three scalars per doc; never the
-    // exploded band frame, whose payload a pruned re-run could
-    // re-project (the r18 regression) — so the token-pass simhash
-    // kernel over the batch text runs ONCE instead of twice per
-    // micro-batch. Measured NEUTRAL on the short-doc fixtures at sf10
-    // (the kernel is ~0.5 s / 200k docs there; the near stage's real
-    // cost is index-side verify mass) — kept because kernel cost
-    // scales with text BYTES while the pin costs 24 bytes/doc, so on
-    // real long-doc corpora the second kernel pass is the expensive
-    // one (round-19, BASELINE kernel-pin row).
-    val qb = hammingBandsWide(
-      graft.ops.Materialize.pinIf(staticPrune,
-        simhashWideFrame(delta, idCol, textCol)
-          .select(col(idCol).as("id"), col("simhash_lo").as("sh_lo"),
-            col("simhash_hi").as("sh_hi"))), maxHamming)
-      .select(col("id").as("query_id"), col("sh_lo").as("q_lo"),
-        col("sh_hi").as("q_hi"), col("band"), col("key"),
-        pmod(col("key"), lit(nBuckets.toLong)).cast("int").as("bkt"))
-    val params = simhashWideParams(maxHamming, nBuckets)
-    val joined =
-      if (staticPrune)
-        BandedIndex.probeJoinStatic(spark, indexPath, qb, Seq("key"), params)
-      else
-        // Guard bound: a column-pruned count of the raw delta (one
-        // signature per doc, maxHamming + 1 slices each) — the simhash
-        // token-pass kernel is never evaluated for it (round-20).
-        BandedIndex.probeJoin(spark, indexPath, qb, Seq("key"), params,
-          qbRows = delta.count() * (maxHamming + 1L))
-    joined
-      .withColumn("hamming",
-        bit_count(col("q_lo").bitwiseXOR(col("sh_lo"))) +
-          bit_count(col("q_hi").bitwiseXOR(col("sh_hi"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("query_id"), col("cand_id"), col("hamming")).distinct()
-  }
-
-  /** The `nBuckets` a wide-simhash layout was written with, from its
-    * params sidecar (public face of [[BandedIndex.bucketsOf]] for
-    * callers outside `graft.llm`, e.g. the streaming gates).
-    */
-  def simhashWideIndexBuckets(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String): Int =
-    BandedIndex.bucketsOf(spark, indexPath, "simhash-wide")
-
-  /** [[probeSimhashWideIndex]] with `nBuckets` resolved from the layout's
-    * params sidecar — the probe path against an auto-sized index
-    * ([[writeSimhashWideIndexAuto]]): callers need not thread the build
-    * width through.
-    */
-  def probeSimhashWideIndex(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String, delta: DataFrame,
-                            idCol: String, textCol: String,
-                            maxHamming: Int): DataFrame =
-    probeSimhashWideIndex(spark, indexPath, delta, idCol, textCol, maxHamming,
-      BandedIndex.bucketsOf(spark, indexPath, "simhash-wide"))
-
-  /** Sidecar-resolved [[probeSimhashWideIndex]] with the probe's
-    * partition-pruning strategy selectable — see
-    * [[BandedIndex.probeJoinStatic]] for when `staticPrune` matters
-    * (pinned delta frames defeat DPP's benefit heuristic).
-    */
-  def probeSimhashWideIndex(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String, delta: DataFrame,
-                            idCol: String, textCol: String,
-                            maxHamming: Int, staticPrune: Boolean): DataFrame =
-    probeSimhashWideIndex(spark, indexPath, delta, idCol, textCol, maxHamming,
-      BandedIndex.bucketsOf(spark, indexPath, "simhash-wide"), staticPrune)
+                            maxHamming: Int,
+                            staticPrune: Boolean = false): DataFrame =
+    BandedIndex.probe(spark, simhashWideFamily(idCol, textCol, maxHamming),
+      indexPath, delta, staticPrune)(wideVerify(maxHamming))
 
   /** Exact n-gram Jaccard similarity join: pairs with Jaccard ≥ `threshold`
     * over distinct word k-shingles — the count-based set-similarity join.

@@ -1467,8 +1467,8 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** REAL audio resample — the operation [[resizeStub]] fakes for
-    * video, done genuinely for audio: decode the PCM16 frames, linear-
+  /** REAL audio resample (the payload analogue of [[frameSample]]'s
+    * byte-range sub-sampling, done genuinely): decode the PCM16 frames, linear-
     * interpolate each channel onto the target rate's time grid, and
     * re-encode as WAV at `targetRate`. ALL arithmetic is exact integer
     * (output frame j samples source position j*src/target as a
@@ -1724,45 +1724,6 @@ object Multimodal {
   def asMediaDataset(df: DataFrame)(implicit spark: SparkSession): Dataset[MediaRecord] = {
     import spark.implicits._
     df.as[MediaRecord]
-  }
-
-  /** Resized media record: payload downsampled to a target byte budget. */
-  final case class ResizedMedia(media_id: Long, modality: String,
-                                orig_bytes: Long, target_bytes: Int,
-                                payload: Array[Byte])
-
-  /** ======== DETERMINISTIC STUB (resize) ========
-    * Stand-in for image/video resize (a real codec decodes, scales,
-    * re-encodes). The stub keeps every k-th byte (k = ceil(n / target)) —
-    * a pure, reproducible function of the payload. Swap this function
-    * only; the batched execution shape around it stays.
-    */
-  def resizeStub(r: MediaRecord, targetBytes: Int): ResizedMedia = {
-    val n = r.payload.length
-    val out =
-      if (n <= targetBytes) r.payload
-      else {
-        val k = (n + targetBytes - 1) / targetBytes
-        val b = new Array[Byte]((n + k - 1) / k)
-        var i = 0
-        while (i < b.length) { b(i) = r.payload(i * k); i += 1 }
-        b
-      }
-    ResizedMedia(r.media_id, r.modality, n.toLong, targetBytes, out)
-  }
-
-  /** Batched resize — same iterator-of-batches `mapPartitions` shape as
-    * [[extractFeatures]], so a native scaler amortizes setup per batch.
-    * Runs BEFORE shuffle-heavy stages at scale: shrinking payloads first
-    * is the difference between shuffling 100 TB and shuffling the target
-    * budget.
-    */
-  def resize(ds: Dataset[MediaRecord], targetBytes: Int,
-             batchSize: Int = 64): Dataset[ResizedMedia] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(batch => batch.map(resizeStub(_, targetBytes)))
-    }
   }
 
   /** Byte-range "frame" sampling: every `stride`-th slice of `frameLen`

@@ -771,8 +771,8 @@ object Similarity {
     */
   def writeLshIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     numPlanes: Int, numTables: Int, path: String): Unit =
-    writeLshLayout(corpus, idCol, vecCol, numPlanes, numTables, path,
-      SaveMode.Overwrite)
+    BandedIndex.write(lshFamily(idCol, vecCol, numPlanes, numTables), corpus,
+      path, None)
 
   /** Plane count targeting a fixed LSH bucket WIDTH: the smallest p
     * with 2^p ≥ n / targetWidth, clamped to [4, maxPlanes]. This is
@@ -855,8 +855,7 @@ object Similarity {
                         targetWidth: Long = 256): Int = {
     val planes = lshPlanesAuto(corpus.count(), targetWidth)
     val tables = if (numTables == 0) lshTablesAuto(planes) else numTables
-    writeLshLayout(corpus, idCol, vecCol, planes, tables, path,
-      SaveMode.Overwrite)
+    writeLshIndex(corpus, idCol, vecCol, planes, tables, path)
     planes
   }
 
@@ -884,30 +883,67 @@ object Similarity {
     */
   def appendToLshIndex(delta: DataFrame, idCol: String, vecCol: String,
                        numPlanes: Int, numTables: Int, path: String): Unit =
-    writeLshLayout(delta, idCol, vecCol, numPlanes, numTables, path,
-      SaveMode.Append)
+    BandedIndex.append(lshFamily(idCol, vecCol, numPlanes, numTables), delta,
+      path)
 
-  /** Sidecar params of an LSH layout ([[graft.llm.Dedup]]'s banded
-    * families carry theirs the same way; [[BandedIndex]] validates on
-    * probe and append). `maxBucketWidth` is probe-time, not layout.
+  /** The LSH [[BandFamily]]: one row per (member, table) — `band` = LSH
+    * table index, `bkt` = the table's (bounded, 2^planes) hyperplane
+    * bucket, the vector and its norm carried for the inline cosine. The
+    * members are `(cand_id, cv, cnorm)` on the index side and
+    * `(query_id, qv, qnorm)` on the probe side; a static probe pins that
+    * batch-sized frame (one row per query — NOT the exploded band frame)
+    * so the projection kernel runs once (round-19). `maxBucketWidth` is
+    * probe-time, not a layout parameter.
     */
-  private def lshParams(numPlanes: Int, numTables: Int): Map[String, String] =
-    Map("family" -> "lsh-hyperplane", "numPlanes" -> numPlanes.toString,
-      "numTables" -> numTables.toString)
-
-  private def writeLshLayout(rows: DataFrame, idCol: String, vecCol: String,
-                             numPlanes: Int, numTables: Int, path: String,
-                             mode: SaveMode): Unit = {
+  private[llm] def lshFamily(idCol: String, vecCol: String, numPlanes: Int,
+                             numTables: Int): BandFamily = {
     import graft.functions.VectorFunctions.dot
-    // band = LSH table index, bkt = the table's (bounded, 2^planes)
-    // hyperplane bucket — the shared BandedIndex partition grammar.
-    val banded = rows.select(col(idCol).as("cand_id"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cnorm", sqrt(dot(col("cv"), col("cv"))))
-      .select(col("cand_id"), col("cv"), col("cnorm"),
-        posexplode(array((0 until numTables).map(t =>
-          hyperplaneBucket(col("cv"), numPlanes, t)): _*)).as(Seq("band", "bkt")))
-      .withColumn("bkt", col("bkt").cast("int"))
-    BandedIndex.writeLayout(banded, path, mode, lshParams(numPlanes, numTables))
+    def names(query: Boolean) =
+      if (query) ("query_id", "qv", "qnorm") else ("cand_id", "cv", "cnorm")
+    BandFamily(Map("family" -> "lsh-hyperplane",
+        "numPlanes" -> numPlanes.toString, "numTables" -> numTables.toString),
+      members = (rows, query) => {
+        val (id, v, n) = names(query)
+        rows.select(col(idCol).as(id), asDouble(col(vecCol)).as(v))
+          .withColumn(n, sqrt(dot(col(v), col(v))))
+      },
+      banding = (m, query) => {
+        val (id, v, n) = names(query)
+        m.select(col(id), col(v), col(n),
+          posexplode(array((0 until numTables).map(t =>
+            hyperplaneBucket(col(v), numPlanes, t)): _*)).as(Seq("band", "bkt")))
+          .withColumn("bkt", col("bkt").cast("int"))
+      },
+      fanOut = numTables, bucket = None, residual = Nil)
+  }
+
+  /** [[lshFamily]] probed MULTI-PROBE: each query's (query_id, band,
+    * bkt) rows cover, in each of the first `probeTables` tables, its
+    * own bucket plus every Hamming-1 neighbor — (p+1) DISTINCT values by
+    * construction, so no dedup is needed before the partition-pruned
+    * join. Three scalars per row, so the broadcast cap is the NARROW one
+    * (round-19: the sf100 corpus-shaped fixture batch reached ~88M band
+    * rows here and killed the driver on an unconditional hint). The
+    * index side is the plain LSH layout.
+    */
+  private[llm] def lshMultiProbeFamily(idCol: String, vecCol: String,
+                                       numPlanes: Int, numTables: Int,
+                                       probeTables: Int): BandFamily = {
+    require(probeTables >= 1 && probeTables <= numTables,
+      s"probeTables must be in [1, $numTables], got $probeTables")
+    val lsh = lshFamily(idCol, vecCol, numPlanes, numTables)
+    lsh.copy(
+      banding = (q, query) =>
+        if (!query) lsh.banding(q, query)
+        else q.select(col("query_id"),
+            posexplode(array((0 until probeTables).map(t =>
+              hyperplaneBucket(col("qv"), numPlanes, t)): _*)).as(Seq("band", "bkt0")))
+          .select(col("query_id"), col("band"),
+            explode(array(Seq(col("bkt0")) ++ (0 until numPlanes).map(j =>
+              col("bkt0").bitwiseXOR(lit(1L << j))): _*)).as("bkt"))
+          .withColumn("bkt", col("bkt").cast("int")),
+      fanOut = probeTables * (numPlanes + 1L),
+      maxBroadcastRows = BandedIndex.MaxProbeBroadcastRowsNarrow)
   }
 
   /** Probe a [[writeLshIndex]] layout: query buckets join the index on its
@@ -935,45 +971,36 @@ object Similarity {
                        k: Int, numPlanes: Int, numTables: Int = 4,
                        maxBucketWidth: Long = DefaultMaxBucketWidth): DataFrame = {
     import graft.functions.VectorFunctions.dot
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qnorm", sqrt(dot(col("qv"), col("qv"))))
-    val qb = q.select(col("query_id"), col("qv"), col("qnorm"),
-      posexplode(array((0 until numTables).map(t =>
-        hyperplaneBucket(col("qv"), numPlanes, t)): _*)).as(Seq("band", "bkt")))
-      .withColumn("bkt", col("bkt").cast("int"))
-    // Guard bound: exactly numTables band rows per query — a
-    // column-pruned count of the raw queries frame, never the
-    // projection kernel or the explode (round-20).
-    val joined = BandedIndex.probeJoin(spark, indexPath, qb, Nil,
-      lshParams(numPlanes, numTables),
-      qbRows = queries.count() * numTables)
+    val fam = lshFamily(idCol, vecCol, numPlanes, numTables)
     // No pin here (unlike inline lshTopK): a localCheckpoint would hide
     // the parquet scan — and its dynamic partition pruning — behind an
     // RDD barrier. The width pass reads the PROBED partitions only
     // (semi-join on the partition columns), and its aggregate moves
     // (band, bkt) pairs, nothing wider.
-    val capped =
-      if (maxBucketWidth == Long.MaxValue) joined
-      else {
-        // Collected like the inline path (see lshTopK): the width pass
-        // still reads the PROBED partitions only; the driver-side list
-        // surfaces the cap when it fires and skips the anti-join when
-        // it doesn't.
-        val over = BandedIndex.readLayout(spark, indexPath)
-          .join(broadcast(qb.select(col("band"), col("bkt")).distinct()),
-            Seq("band", "bkt"), "left_semi")
-          .groupBy(col("band"), col("bkt"))
-          .agg(count(lit(1)).as("w"))
-          .filter(col("w") > maxBucketWidth)
-          .select(col("band"), col("bkt")).collect()
-        applyCap(joined, over, Seq("band", "bkt"), "lshTopKFromIndex",
-          maxBucketWidth)
-      }
-    val scored = capped
-      .withColumn("cos",
-        dot(col("qv"), col("cv")) / (col("qnorm") * col("cnorm")))
-      .select("query_id", "cand_id", "cos").distinct()
-    topKPerQuery(scored, k, queries.schema(idCol).dataType)
+    BandedIndex.probe(spark, fam, indexPath, queries, staticPrune = false) { (joined, q) =>
+      val capped =
+        if (maxBucketWidth == Long.MaxValue) joined
+        else {
+          // Collected like the inline path (see lshTopK): the width pass
+          // still reads the PROBED partitions only; the driver-side list
+          // surfaces the cap when it fires and skips the anti-join when
+          // it doesn't.
+          val over = BandedIndex.readLayout(spark, indexPath)
+            .join(broadcast(fam.banding(q, true).select(col("band"), col("bkt"))
+              .distinct()), Seq("band", "bkt"), "left_semi")
+            .groupBy(col("band"), col("bkt"))
+            .agg(count(lit(1)).as("w"))
+            .filter(col("w") > maxBucketWidth)
+            .select(col("band"), col("bkt")).collect()
+          applyCap(joined, over, Seq("band", "bkt"), "lshTopKFromIndex",
+            maxBucketWidth)
+        }
+      val scored = capped
+        .withColumn("cos",
+          dot(col("qv"), col("cv")) / (col("qnorm") * col("cnorm")))
+        .select("query_id", "cand_id", "cos").distinct()
+      topKPerQuery(scored, k, queries.schema(idCol).dataType)
+    }
   }
 
   /** SEMANTIC membership probe of a [[writeLshIndex]] layout: every
@@ -1000,29 +1027,15 @@ object Similarity {
                         indexPath: String, delta: DataFrame, idCol: String,
                         vecCol: String, threshold: Double, numPlanes: Int,
                         numTables: Int = 4,
-                        staticPrune: Boolean = false): DataFrame = {
+                        staticPrune: Boolean = false): DataFrame =
+    BandedIndex.probe(spark, lshFamily(idCol, vecCol, numPlanes, numTables),
+      indexPath, delta, staticPrune)((joined, _) => cosineAtLeast(joined, threshold))
+
+  /** The threshold verify of the LSH membership probes: exact cosine of
+    * each (query, candidate) collision, deduped on the identical value.
+    */
+  private def cosineAtLeast(joined: DataFrame, threshold: Double): DataFrame = {
     import graft.functions.VectorFunctions.dot
-    // Static pruning evaluates qb twice (key collect + join); pin the
-    // batch-sized base frame (one row per query — NOT the exploded band
-    // frame) so the projection kernel runs once (round-19).
-    val q = graft.ops.Materialize.pinIf(staticPrune,
-      delta.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-        .withColumn("qnorm", sqrt(dot(col("qv"), col("qv")))))
-    val qb = q.select(col("query_id"), col("qv"), col("qnorm"),
-      posexplode(array((0 until numTables).map(t =>
-        hyperplaneBucket(col("qv"), numPlanes, t)): _*)).as(Seq("band", "bkt")))
-      .withColumn("bkt", col("bkt").cast("int"))
-    val joined =
-      if (staticPrune)
-        BandedIndex.probeJoinStatic(spark, indexPath, qb, Nil,
-          lshParams(numPlanes, numTables))
-      else
-        // Guard bound: exactly numTables band rows per query — a
-        // column-pruned count of the raw delta, never the projection
-        // kernel or the explode (round-20).
-        BandedIndex.probeJoin(spark, indexPath, qb, Nil,
-          lshParams(numPlanes, numTables),
-          qbRows = delta.count() * numTables)
     joined
       .withColumn("cos",
         dot(col("qv"), col("cv")) / (col("qnorm") * col("cnorm")))
@@ -1070,59 +1083,19 @@ object Similarity {
                                   numTables: Int, probeTables: Int,
                                   staticPrune: Boolean = false)
       : DataFrame = {
-    import graft.functions.VectorFunctions.dot
-    require(probeTables >= 1 && probeTables <= numTables,
-      s"probeTables must be in [1, $numTables], got $probeTables")
-    // The base frame is consumed THREE times under static pruning (key
-    // collect, pruned join, the re-attach; the guards read one shared
-    // column-pruned delta count below); pin it post-kernel — one row
-    // per query, not the exploded band frame — so the projections run
-    // once (round-19).
-    val q = graft.ops.Materialize.pinIf(staticPrune,
-      delta.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-        .withColumn("qnorm", sqrt(dot(col("qv"), col("qv")))))
-    val base = q.select(col("query_id"),
-      posexplode(array((0 until probeTables).map(t =>
-        hyperplaneBucket(col("qv"), numPlanes, t)): _*)).as(Seq("band", "bkt0")))
-    // The probe set per (query, table): the exact bucket + one bucket
-    // per flipped plane bit — (p+1) DISTINCT values by construction,
-    // so no dedup is needed before the partition-pruned join.
-    val qb = base.select(col("query_id"), col("band"),
-      explode(array(Seq(col("bkt0")) ++ (0 until numPlanes).map(j =>
-        col("bkt0").bitwiseXOR(lit(1L << j))): _*)).as("bkt"))
-      .withColumn("bkt", col("bkt").cast("int"))
-    // The exploded frame is three scalars per row, so its broadcast cap
-    // is the NARROW one; the batch-sized re-attach frame `q` carries
-    // the 64-double vector per row and gets the payload cap (round-19:
-    // both guarded — the sf100 corpus-shaped fixture batch reached
-    // ~88M band rows here and killed the driver on the unconditional
-    // hint).
-    // ONE column-pruned count of the raw delta feeds both guards: the
-    // band-frame bound is exact ((p+1) × probeTables rows per query by
-    // construction — two constant-arity explodes), and the re-attach
-    // frame is one row per query. Replaces the round-19 q.count() +
-    // (non-static) qb.count() pair — the latter re-evaluated the
-    // double-exploded band frame per probe (round-20).
+    val fam = lshMultiProbeFamily(idCol, vecCol, numPlanes, numTables,
+      probeTables)
+    // ONE column-pruned count of the raw delta feeds both broadcast
+    // guards: the band-frame bound (via the core) and the batch-sized
+    // re-attach frame, one row per query.
     val deltaRows = delta.count()
-    val joined =
-      if (staticPrune)
-        BandedIndex.probeJoinStatic(spark, indexPath, qb, Nil,
-          lshParams(numPlanes, numTables),
-          maxBroadcastRows = BandedIndex.MaxProbeBroadcastRowsNarrow)
-      else
-        BandedIndex.probeJoin(spark, indexPath, qb, Nil,
-          lshParams(numPlanes, numTables),
-          maxBroadcastRows = BandedIndex.MaxProbeBroadcastRowsNarrow,
-          qbRows = deltaRows * probeTables * (numPlanes + 1L))
-    joined
-      // Distinct diagnostic key: the band-frame guard above records
-      // under indexPath; this one must not clobber it.
-      .join(BandedIndex.guardedQueryBroadcast(s"$indexPath#reattach", q,
-        deltaRows, BandedIndex.MaxProbeBroadcastRows), Seq("query_id"))
-      .withColumn("cos",
-        dot(col("qv"), col("cv")) / (col("qnorm") * col("cnorm")))
-      .filter(col("cos") >= threshold)
-      .select("query_id", "cand_id", "cos").distinct()
+    BandedIndex.probe(spark, fam, indexPath, delta, staticPrune, deltaRows) { (joined, q) =>
+      // Distinct diagnostic key: the band-frame guard records under
+      // indexPath; this one must not clobber it.
+      cosineAtLeast(joined.join(BandedIndex.guardedQueryBroadcast(
+        s"$indexPath#reattach", q, deltaRows,
+        BandedIndex.MaxProbeBroadcastRows), Seq("query_id")), threshold)
+    }
   }
 
   /** The multi-probe posture's table count: gate-written LSH layouts

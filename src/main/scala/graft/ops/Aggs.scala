@@ -51,16 +51,6 @@ object Aggs {
       count_distinct(col(counted)).as("exact_distinct"),
       approx_count_distinct(col(counted), rsd).as("approx_distinct"))
 
-  /** A2 - ROLLUP: hierarchical subtotals + grand total in one pass
-    * (Catalyst Expand + single hash aggregate, not N scans).
-    */
-  def rollupAgg(df: DataFrame, dims: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.rollup(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
-
-  /** A2 - CUBE: all dimension combinations in one pass. */
-  def cubeAgg(df: DataFrame, dims: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.cube(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
-
   /** A2 - arbitrary GROUPING SETS (the general form rollup/cube are sugar
     * for): each set is one grouping combination; Catalyst plans ONE scan +
     * Expand + a single hash aggregate, vs N scans for the union-of-groupbys

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
 
@@ -115,11 +114,4 @@ object Clean {
     */
   def allowlistFilter(df: DataFrame, column: String, allowed: Seq[String]): DataFrame =
     df.filter(col(column).isin(allowed: _*))
-
-  /** P9 over an embedded JSON string column (the `events.props` shape):
-    * schema'd `from_json` projection with typed-null semantics.
-    */
-  def jsonField(df: DataFrame, jsonCol: String, schema: StructType, field: String,
-                out: String): DataFrame =
-    df.withColumn(out, from_json(col(jsonCol), schema).getField(field))
 }

@@ -539,13 +539,13 @@ object LlmQueries {
       // exactly one signature row.
       Seq(1L, 3L, 5L).foreach { r =>
         Dedup.appendToExactDupIndex(docs.filter(col("doc_id") % 6 === r),
-          "doc_id", "text", nBuckets = 16, path = fix)
+          "doc_id", "text", path = fix)
       }
       // The parquet write is an eager action, so the pre-compaction pair
       // set is fully materialized before compactIndex renames the files
       // it reads.
       Dedup.probeExactDupIndex(s, fix, compactProbeDelta(docs),
-          "doc_id", "text", nBuckets = 16)
+          "doc_id", "text")
         .write.mode("overwrite").parquet(s"${fix}_life/before_probe")
       val nDocs = docs.count()
       val (filesBefore, filesAfter, rowsAfter) = Dedup.compactIndex(s, fix)
@@ -637,8 +637,8 @@ object LlmQueries {
     // per image), so the pixel decode still runs exactly once. A fixed
     // 64 saturates DPP/static pruning at corpus scale (measured on the
     // audio layout: 75% of files touched by a 50-item probe at sf10 vs
-    // 13.5% auto). Consumers resolve the width from the sidecar
-    // (Dedup.hammingWideIndexBuckets); the cache key carries the
+    // 13.5% auto). Probes and appends read the width from the
+    // sidecar; the cache key carries the
     // policy tag so a stale fixed-64 layout is never half-adopted.
     val fix = s"/tmp/graft_fixtures/imagehashw_index_auto_${fingerprintCached(s"$dir/documents.parquet")}"
     if (!new java.io.File(s"$fix/_SUCCESS").exists()) {
@@ -805,8 +805,8 @@ object LlmQueries {
     // AUTO bucket width (round-17): nBuckets from the corpus
     // cardinality (BandedIndex.autoBuckets via the wide-auto writer —
     // rowsHint is the cheap parquet count, so the WAV decode still
-    // runs exactly once), recorded in the sidecar; consumers resolve
-    // it back (Dedup.hammingWideIndexBuckets) instead of assuming 64.
+    // runs exactly once), recorded in the sidecar, from which probes
+    // and appends read it instead of assuming 64.
     // A fixed 64 saturates DPP pruning at corpus scale — the same
     // measured effect the text family's auto sizing fixed in round 12.
     // The cache key carries the policy tag so an old fixed-64 cached
@@ -1698,7 +1698,7 @@ object LlmQueries {
         Dedup.probeNearDupIndex(s, fix,
           Tables.documents(s, dir).filter(col("doc_id") < 50),
           "doc_id", "text", shingleK = 3, bands = 8, rowsPerBand = 2,
-          nBuckets = 64, threshold = 0.5)
+          threshold = 0.5)
       },
       Some {
         val P = TextOps.MinhashP
@@ -1741,7 +1741,7 @@ object LlmQueries {
           .select((col("doc_id") + 1000000L).as("doc_id"),
             upper(concat(lit("  "), regexp_replace(col("text"), " ", "  "),
               lit(" "))).as("text"))
-        Dedup.probeExactDupIndex(s, fix, delta, "doc_id", "text", nBuckets = 64)
+        Dedup.probeExactDupIndex(s, fix, delta, "doc_id", "text")
       },
       Some(s"""SELECT d.doc_id + 1000000 AS query_id, c.doc_id AS cand_id
            |FROM documents d JOIN documents c
@@ -1776,7 +1776,7 @@ object LlmQueries {
         val meta = s.read.parquet(s"${fix}_life/meta").head()
         val beforeProbe = s.read.parquet(s"${fix}_life/before_probe")
         val afterProbe = Dedup.probeExactDupIndex(s, fix,
-          compactProbeDelta(docs), "doc_id", "text", nBuckets = 16)
+          compactProbeDelta(docs), "doc_id", "text")
         // Row-level probe equality: a pair present on only one side
         // survives the full-outer join with a 0 flag (and, if the pair
         // sets diverge, a row-count mismatch on top).
@@ -1898,7 +1898,7 @@ object LlmQueries {
               concat(col("text"), lit(" novelsuffix"),
                 col("doc_id").cast("string")).as("text")))
         graft.streaming.Streams.dedupGateBatch(s, fix, arriving,
-          "doc_id", "text", nBuckets = 64)
+          "doc_id", "text")
       },
       Some(s"""WITH arriving AS (
            |  SELECT doc_id + 2000000 AS doc_id,
@@ -1981,8 +1981,7 @@ object LlmQueries {
               .select((col("doc_id") + 9000000L).as("doc_id")), "doc_id")
           .toDF()
         graft.streaming.Streams.imageGateBatch(s, fix,
-            reup.unionByName(novel), maxHamming = 7,
-            nBuckets = Dedup.hammingWideIndexBuckets(s, fix))
+            reup.unionByName(novel), maxHamming = 7)
           .select("media_id")
       },
       Some(s"""$phashCte,
@@ -2025,8 +2024,7 @@ object LlmQueries {
               .select((col("doc_id") + 9000000L).as("doc_id")), "doc_id")
           .toDF()
         graft.streaming.Streams.audioGateBatch(s, fix,
-            reup.unionByName(novel), maxHamming = 7,
-            nBuckets = Dedup.hammingWideIndexBuckets(s, fix))
+            reup.unionByName(novel), maxHamming = 7)
           .select("media_id")
       },
       Some(s"""$audioFpCte,
@@ -2077,8 +2075,7 @@ object LlmQueries {
               .select((col("doc_id") + 9000000L).as("doc_id")), "doc_id")
           .toDF()
         graft.streaming.Streams.videoGateBatch(s, fix,
-            reup.unionByName(novel), maxHamming = 7,
-            nBuckets = Dedup.hammingWideIndexBuckets(s, fix))
+            reup.unionByName(novel), maxHamming = 7)
           .select("media_id")
       },
       Some(s"""$videoStridedPhashCte,
@@ -2161,9 +2158,7 @@ object LlmQueries {
             col("text").as("caption")), Seq("media_id"))
         graft.streaming.Streams.pairGateBatch(s, fixI, fixC,
             contaminated.unionByName(consistent).unionByName(novel),
-            "caption", maxHamming = 7, capMaxHamming = 7,
-            nBuckets = Dedup.hammingWideIndexBuckets(s, fixI),
-            capBuckets = Dedup.simhashWideIndexBuckets(s, fixC))
+            "caption", maxHamming = 7, capMaxHamming = 7)
           .select("media_id")
       },
       Some(s"""WITH ${phashChainSql("gc",
@@ -2262,8 +2257,6 @@ object LlmQueries {
         graft.streaming.Streams.pairGateBatch(s, fixI, fixC,
             boiler.unionByName(consistent).unionByName(novel),
             "caption", maxHamming = 7, capMaxHamming = 7,
-            nBuckets = Dedup.hammingWideIndexBuckets(s, fixI),
-            capBuckets = Dedup.simhashWideIndexBuckets(s, fixC),
             rejectBoilerplate = true)
           .select("media_id")
       },
@@ -2636,7 +2629,7 @@ object LlmQueries {
         val fix = ensureSimhashIndex(s, dir)
         Dedup.probeSimhashIndex(s, fix,
           Tables.documents(s, dir).filter(col("doc_id") < 50),
-          "doc_id", "text", maxHamming = 8, nBuckets = 32)
+          "doc_id", "text", maxHamming = 8)
       },
       Some(s"""$simhashCte,
          |banded AS ($simhashBandsSql),
@@ -4162,8 +4155,7 @@ object LlmQueries {
             Tables.documents(s, dir).filter(col("doc_id") < 50),
             "doc_id")).toDF()
         Dedup.probeHammingWideIndex(s, fix, delta, "media_id", "dhash",
-          "vhash", nLoBits = 56, nHiBits = 54, maxHamming = 7,
-          nBuckets = Dedup.hammingWideIndexBuckets(s, fix))
+          "vhash", nLoBits = 56, nHiBits = 54, maxHamming = 7)
       },
       Some(s"""$phashCte,
          |$phashWideCte,
@@ -4331,8 +4323,7 @@ object LlmQueries {
             Tables.documents(s, dir).filter(col("doc_id") < 50),
             "doc_id")).toDF()
         Dedup.probeHammingWideIndex(s, fix, delta, "media_id", "ehash",
-          "rhash", nLoBits = 56, nHiBits = 54, maxHamming = 7,
-          nBuckets = Dedup.hammingWideIndexBuckets(s, fix))
+          "rhash", nLoBits = 56, nHiBits = 54, maxHamming = 7)
       },
       Some(s"""$audioFpCte,
          |wbanded AS (${wideBandSlicesSql("afp", "ehash", 56, "rhash", 54, 7)}),
@@ -4558,8 +4549,7 @@ object LlmQueries {
             Tables.documents(s, dir).filter(col("doc_id") < 50),
             "doc_id")).toDF()
         Dedup.probeHammingWideIndex(s, fix, delta, "media_id", "dhash",
-          "vhash", nLoBits = 56, nHiBits = 54, maxHamming = 7,
-          nBuckets = Dedup.hammingWideIndexBuckets(s, fix))
+          "vhash", nLoBits = 56, nHiBits = 54, maxHamming = 7)
       },
       Some(s"""$videoPhashCte,
          |$videoPhashWideCte,
@@ -4665,8 +4655,7 @@ object LlmQueries {
             Tables.documents(s, dir).filter(col("doc_id") < 50),
             "doc_id"), k = 3).toDF()
         Dedup.probeHammingWideIndexSet(s, fix, delta, "media_id", "dhash",
-          "vhash", nLoBits = 56, nHiBits = 54, maxHamming = 7,
-          nBuckets = Dedup.hammingWideIndexBuckets(s, fix))
+          "vhash", nLoBits = 56, nHiBits = 54, maxHamming = 7)
       },
       Some(s"""$videoStridedPhashCte,
          |$videoStridedPhashWideCte,

@@ -382,11 +382,10 @@ object Streams {
     */
   def dedupGateBatch(spark: org.apache.spark.sql.SparkSession,
                      indexPath: String, batch: DataFrame, idCol: String,
-                     textCol: String, nBuckets: Int,
+                     textCol: String,
                      staticPrune: Boolean = false): DataFrame = {
     val hits = graft.llm.Dedup
-      .probeExactDupIndex(spark, indexPath, batch, idCol, textCol, nBuckets,
-        staticPrune)
+      .probeExactDupIndex(spark, indexPath, batch, idCol, textCol, staticPrune)
       .select(col("query_id").as(idCol)).distinct()
     batch.join(hits, Seq(idCol), "left_anti")
   }
@@ -404,23 +403,13 @@ object Streams {
   def nearDupGateBatch(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String, batch: DataFrame, idCol: String,
                        textCol: String, maxHamming: Int,
-                       nBuckets: Int, staticPrune: Boolean = false): DataFrame = {
+                       staticPrune: Boolean = false): DataFrame = {
     val hits = graft.llm.Dedup
       .probeSimhashWideIndex(spark, indexPath, batch, idCol, textCol,
-        maxHamming, nBuckets, staticPrune)
+        maxHamming, staticPrune)
       .select(col("query_id").as(idCol)).distinct()
     batch.join(hits, Seq(idCol), "left_anti")
   }
-
-  /** [[nearDupGateBatch]] with `nBuckets` resolved from the index's
-    * params sidecar — the gate against an auto-sized layout
-    * ([[graft.llm.Dedup.writeSimhashWideIndexAuto]]).
-    */
-  def nearDupGateBatch(spark: org.apache.spark.sql.SparkSession,
-                       indexPath: String, batch: DataFrame, idCol: String,
-                       textCol: String, maxHamming: Int): DataFrame =
-    nearDupGateBatch(spark, indexPath, batch, idCol, textCol, maxHamming,
-      graft.llm.Dedup.simhashWideIndexBuckets(spark, indexPath))
 
   /** Streaming NEAR-dup ingest gate: [[startDedupGateSink]] with
     * [[nearDupGateBatch]] as the decision and the wide-simhash index as
@@ -447,8 +436,7 @@ object Streams {
     */
   def startNearDupGateSink(df: DataFrame, indexPath: String, outPath: String,
                            checkpoint: String, idCol: String, textCol: String,
-                           maxHamming: Int, nBuckets: Int,
-                           compactEvery: Int = 0) =
+                           maxHamming: Int, compactEvery: Int = 0) =
     df.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
@@ -459,7 +447,7 @@ object Streams {
         // pinned blocks it costs a re-scan, not a source replay.
         val b = Materialize.pin(batch.toDF())
         val corpusOk = nearDupGateBatch(spark, indexPath, b,
-          idCol, textCol, maxHamming, nBuckets, staticPrune = true)
+          idCol, textCol, maxHamming, staticPrune = true)
         // simhashWidePairs emits id_a < id_b, so id_b is always the
         // larger member: dropping every id_b keeps the lowest id of
         // each intra-batch near-dup group.
@@ -470,7 +458,7 @@ object Streams {
           .transform(Materialize.pin)
         accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
         graft.llm.Dedup.appendToSimhashWideIndex(accepted, idCol, textCol,
-          maxHamming, nBuckets, indexPath)
+          maxHamming, indexPath)
         maybeCompactIndexes(spark, Seq(indexPath), batchId, compactEvery)
       }
       .start()
@@ -497,18 +485,6 @@ object Streams {
     if (every > 0 && (batchId + 1) % every == 0)
       indexPaths.foreach(p => graft.llm.Dedup.compactIndex(spark, p))
 
-  /** [[startNearDupGateSink]] with `nBuckets` resolved once from the
-    * index's params sidecar at start — the gate against an auto-sized
-    * layout ([[graft.llm.Dedup.writeSimhashWideIndexAuto]]).
-    */
-  def startNearDupGateSink(df: DataFrame, indexPath: String, outPath: String,
-                           checkpoint: String, idCol: String,
-                           textCol: String, maxHamming: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startNearDupGateSink(df, indexPath, outPath, checkpoint, idCol, textCol,
-      maxHamming,
-      graft.llm.Dedup.simhashWideIndexBuckets(df.sparkSession, indexPath))
-
   /** One micro-batch of the streaming PERCEPTUAL IMAGE gate: keep only
     * the batch rows (`media_id`, `modality`, `payload` — the
     * [[graft.llm.Multimodal.MediaRecord]] shape) whose 110-bit wide
@@ -524,10 +500,9 @@ object Streams {
     * index build time.
     */
   def imageGateBatch(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, batch: DataFrame, maxHamming: Int,
-                     nBuckets: Int): DataFrame =
-    perceptualGateBatch(spark, indexPath, batch, imageHashKernel,
-      maxHamming, nBuckets)
+                     indexPath: String, batch: DataFrame,
+                     maxHamming: Int): DataFrame =
+    perceptualGateBatch(spark, indexPath, batch, imageHashKernel, maxHamming)
 
   /** [[imageGateBatch]]'s AUDIO twin: membership is wide-hamming
     * distance of the 110-bit audio fingerprint
@@ -538,10 +513,9 @@ object Streams {
     * way the image gate catches recompressed images.
     */
   def audioGateBatch(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, batch: DataFrame, maxHamming: Int,
-                     nBuckets: Int): DataFrame =
-    perceptualGateBatch(spark, indexPath, batch, audioHashKernel,
-      maxHamming, nBuckets)
+                     indexPath: String, batch: DataFrame,
+                     maxHamming: Int): DataFrame =
+    perceptualGateBatch(spark, indexPath, batch, audioHashKernel, maxHamming)
 
   /** [[imageGateBatch]]'s VIDEO twin — the strided-SET member of the
     * perceptual gate family: each arriving AVI decodes to its k=3
@@ -558,10 +532,9 @@ object Streams {
     * catches what first-frame hashing misses.
     */
   def videoGateBatch(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, batch: DataFrame, maxHamming: Int,
-                     nBuckets: Int): DataFrame =
-    perceptualGateBatch(spark, indexPath, batch, videoHashKernel,
-      maxHamming, nBuckets)
+                     indexPath: String, batch: DataFrame,
+                     maxHamming: Int): DataFrame =
+    perceptualGateBatch(spark, indexPath, batch, videoHashKernel, maxHamming)
 
   /** The wide image-hash kernel as a (batch → two-word signature frame)
     * function — `(media_id, lo, hi)` with the standard column names the
@@ -611,7 +584,7 @@ object Streams {
   private def perceptualGateBatch(spark: org.apache.spark.sql.SparkSession,
                                   indexPath: String, batch: DataFrame,
                                   kernel: DataFrame => DataFrame,
-                                  maxHamming: Int, nBuckets: Int): DataFrame = {
+                                  maxHamming: Int): DataFrame = {
     // Decode-once, the SINK posture (round-19): pin the payload batch
     // (its source may be an expensive generator or a non-replayable
     // frame), pin the signature kernel's narrow output, and probe with
@@ -624,7 +597,7 @@ object Streams {
     val hashes = Materialize.pin(kernel(b))
     val hits = graft.llm.Dedup.probeHammingWideIndex(spark, indexPath,
       hashes, "media_id", "sig_lo", "sig_hi", nLoBits = 56,
-      nHiBits = 54, maxHamming, nBuckets, staticPrune = true)
+      nHiBits = 54, maxHamming, staticPrune = true)
       .select(col("query_id").as("media_id")).distinct()
     b.join(hits, Seq("media_id"), "left_anti")
   }
@@ -645,11 +618,11 @@ object Streams {
     * crash-replayed appends.
     */
   def startImageGateSink(df: DataFrame, indexPath: String, outPath: String,
-                         checkpoint: String, maxHamming: Int, nBuckets: Int,
+                         checkpoint: String, maxHamming: Int,
                          compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     startPerceptualGateSink(df, indexPath, outPath, checkpoint,
-      imageHashKernel, maxHamming, nBuckets, compactEvery)
+      imageHashKernel, maxHamming, compactEvery)
 
   /** [[startImageGateSink]]'s AUDIO twin — the same decode-once /
     * corpus-probe / intra-batch keep-lowest-id / append lifecycle over
@@ -658,11 +631,11 @@ object Streams {
     * kernel differs.
     */
   def startAudioGateSink(df: DataFrame, indexPath: String, outPath: String,
-                         checkpoint: String, maxHamming: Int, nBuckets: Int,
+                         checkpoint: String, maxHamming: Int,
                          compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     startPerceptualGateSink(df, indexPath, outPath, checkpoint,
-      audioHashKernel, maxHamming, nBuckets, compactEvery)
+      audioHashKernel, maxHamming, compactEvery)
 
   /** [[startImageGateSink]]'s VIDEO twin — [[videoGateBatch]] as the
     * corpus decision over the wide STRIDED frame-set index, on the
@@ -677,17 +650,16 @@ object Streams {
     * clusters, probes, AND a streaming ingest gate.
     */
   def startVideoGateSink(df: DataFrame, indexPath: String, outPath: String,
-                         checkpoint: String, maxHamming: Int, nBuckets: Int,
+                         checkpoint: String, maxHamming: Int,
                          compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     startPerceptualGateSink(df, indexPath, outPath, checkpoint,
-      videoHashKernel, maxHamming, nBuckets, compactEvery)
+      videoHashKernel, maxHamming, compactEvery)
 
   private def startPerceptualGateSink(df: DataFrame, indexPath: String,
                                       outPath: String, checkpoint: String,
                                       kernel: DataFrame => DataFrame,
-                                      maxHamming: Int, nBuckets: Int,
-                                      compactEvery: Int)
+                                      maxHamming: Int, compactEvery: Int)
       : org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
       .outputMode(OutputMode.Append())
@@ -702,7 +674,7 @@ object Streams {
         // re-scan of the batch ~free.
         val corpusHits = graft.llm.Dedup.probeHammingWideIndex(spark,
           indexPath, hashes, "media_id", "sig_lo", "sig_hi", nLoBits = 56,
-          nHiBits = 54, maxHamming, nBuckets, staticPrune = true)
+          nHiBits = 54, maxHamming, staticPrune = true)
           .select(col("query_id").as("media_id")).distinct()
         val corpusOk = hashes.join(corpusHits, Seq("media_id"), "left_anti")
         // Wide pairs emit id_a < id_b: dropping every id_b keeps the
@@ -722,7 +694,7 @@ object Streams {
           .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
         graft.llm.Dedup.appendToHammingWideIndex(acceptedHashes, "media_id",
           "sig_lo", "sig_hi", nLoBits = 56, nHiBits = 54, maxHamming,
-          nBuckets, indexPath)
+          indexPath)
         maybeCompactIndexes(spark, Seq(indexPath), batchId, compactEvery)
       }
       .start()
@@ -772,8 +744,7 @@ object Streams {
   def pairGateBatch(spark: org.apache.spark.sql.SparkSession,
                     imageIndexPath: String, captionIndexPath: String,
                     batch: DataFrame, captionCol: String, maxHamming: Int,
-                    capMaxHamming: Int, nBuckets: Int, capBuckets: Int,
-                    staticPrune: Boolean = true,
+                    capMaxHamming: Int, staticPrune: Boolean = true,
                     rejectBoilerplate: Boolean = false): DataFrame = {
     // Decode-once, the SINK posture (round-19): the body consumes the
     // batch once per decision input (image kernel, caption probe —
@@ -787,7 +758,7 @@ object Streams {
     val b = Materialize.pin(batch)
     pairGateFromHashes(spark, imageIndexPath, captionIndexPath, b,
       Materialize.pin(imageHashKernel(b)), captionCol, maxHamming,
-      capMaxHamming, nBuckets, capBuckets, staticPrune, rejectBoilerplate)
+      capMaxHamming, staticPrune, rejectBoilerplate)
   }
 
   /** [[pairGateBatch]] with the image signatures supplied (the sink's
@@ -812,18 +783,17 @@ object Streams {
                                  captionIndexPath: String, batch: DataFrame,
                                  hashes: DataFrame, captionCol: String,
                                  maxHamming: Int, capMaxHamming: Int,
-                                 nBuckets: Int, capBuckets: Int,
                                  staticPrune: Boolean,
                                  rejectBoilerplate: Boolean = false): DataFrame = {
     val batchIds = batch.select(col("media_id").as("cand_id")).distinct()
     val imgHits = graft.llm.Dedup.probeHammingWideIndex(spark,
       imageIndexPath, hashes, "media_id", "sig_lo", "sig_hi", nLoBits = 56,
-      nHiBits = 54, maxHamming, nBuckets, staticPrune = staticPrune)
+      nHiBits = 54, maxHamming, staticPrune = staticPrune)
       .select(col("query_id"), col("cand_id"))
       .join(broadcast(batchIds), Seq("cand_id"), "left_anti")
     val capHits = graft.llm.Dedup.probeSimhashWideIndex(spark,
       captionIndexPath, batch, "media_id", captionCol, capMaxHamming,
-      capBuckets, staticPrune = staticPrune)
+      staticPrune = staticPrune)
       .select(col("query_id"), col("cand_id"))
       .join(broadcast(batchIds), Seq("cand_id"), "left_anti")
     val contaminated = imgHits.join(capHits, Seq("query_id", "cand_id"),
@@ -861,8 +831,7 @@ object Streams {
     * order is kept as defense in depth (caption-only partials cannot
     * create an image hit even without the exclusion). Both probes run
     * `staticPrune = true` (pinned batch frames defeat DPP — see
-    * [[graft.llm.BandedIndex.probeJoinStatic]]); both bucket widths
-    * resolve ONCE per stream from the index sidecars. The two indexes
+    * [[graft.llm.BandedIndex.probeJoinStatic]]). The two indexes
     * must share one pair-id domain — [[pairGateBatch]]'s contract.
     *
     * `rejectBoilerplate` arms the inverse defect direction
@@ -877,12 +846,7 @@ object Streams {
                         maxHamming: Int, capMaxHamming: Int,
                         compactEvery: Int = 0,
                         rejectBoilerplate: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark0 = df.sparkSession
-    val nBuckets = graft.llm.Dedup.hammingWideIndexBuckets(spark0,
-      imageIndexPath)
-    val capBuckets = graft.llm.Dedup.simhashWideIndexBuckets(spark0,
-      captionIndexPath)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
@@ -892,7 +856,7 @@ object Streams {
         val hashes = Materialize.pin(imageHashKernel(b))
         val corpusOk = pairGateFromHashes(spark, imageIndexPath,
           captionIndexPath, b, hashes, captionCol, maxHamming,
-          capMaxHamming, nBuckets, capBuckets, staticPrune = true,
+          capMaxHamming, staticPrune = true,
           rejectBoilerplate = rejectBoilerplate)
         // Intra-batch contamination: image near-dup pairs WITHIN the
         // survivors whose captions disagree — image pairs from the
@@ -922,16 +886,15 @@ object Streams {
         // Captions BEFORE images — see the replay argument above.
         graft.llm.Dedup.appendToSimhashWideIndex(
           accepted.select(col("media_id"), col(captionCol)), "media_id",
-          captionCol, capMaxHamming, capBuckets, captionIndexPath)
+          captionCol, capMaxHamming, captionIndexPath)
         graft.llm.Dedup.appendToHammingWideIndex(
           hashes.join(accepted.select("media_id"), Seq("media_id")),
           "media_id", "sig_lo", "sig_hi", nLoBits = 56, nHiBits = 54,
-          maxHamming, nBuckets, imageIndexPath)
+          maxHamming, imageIndexPath)
         maybeCompactIndexes(spark, Seq(imageIndexPath, captionIndexPath),
           batchId, compactEvery)
       }
       .start()
-  }
 
   /** One micro-batch of the streaming SEMANTIC ingest gate: keep only
     * the batch rows whose embedding has NO corpus bucket-mate with
@@ -986,7 +949,7 @@ object Streams {
     * deterministic and replay-stable (a pure function of the batch).
     * Batch-sized work: candidates form only inside shared buckets,
     * never all-pairs. Shared by [[startSemanticGateSink]] and the
-    * composed [[ingestPipelineBatch]].
+    * composed [[startIngestPipelineSink]].
     *
     * `probeTables` > 0 mirrors the corpus probe's MULTI-PROBE posture
     * on the intra check: one side's buckets expand to their Hamming-1
@@ -1143,7 +1106,7 @@ object Streams {
     */
   def startDedupGateSink(df: DataFrame, indexPath: String, outPath: String,
                          checkpoint: String, idCol: String, textCol: String,
-                         nBuckets: Int, compactEvery: Int = 0) =
+                         compactEvery: Int = 0) =
     df.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
@@ -1157,11 +1120,11 @@ object Streams {
         // so the probe's key-collect pass reads pinned blocks.
         val accepted = dedupGateBatch(spark, indexPath,
           Materialize.pin(batch.toDF()),
-          idCol, textCol, nBuckets, staticPrune = true)
+          idCol, textCol, staticPrune = true)
           .transform(Materialize.pin)
         accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
         graft.llm.Dedup.appendToExactDupIndex(accepted, idCol, textCol,
-          nBuckets, indexPath)
+          indexPath)
         maybeCompactIndexes(spark, Seq(indexPath), batchId, compactEvery)
       }
       .start()
@@ -1285,63 +1248,6 @@ object Streams {
       // over all numTables tables (the compensated-layout posture).
       semProbeTables: Int = graft.llm.Similarity.MultiProbeTables)
 
-  /** One micro-batch of the FULL ingest pipeline — the six decision
-    * stages composed in their contract order over one arriving frame of
-    * `(idCol, textCol, vecCol)` rows:
-    *
-    *   1. PII redaction FIRST ([[graft.llm.TextAnalysis.redactPii]]) —
-    *      every later stage judges the redacted text a leaked row would
-    *      actually train on, and raw PII never reaches any sink or
-    *      index (the [[startPiiRedactSink]] contract).
-    *   2. exact-dup gate ([[dedupGateBatch]]) — verbatim (normalized)
-    *      corpus membership.
-    *   3. near-dup gate ([[nearDupGateBatch]]) — wide-simhash hamming
-    *      membership (lightly-edited copies).
-    *   4. semantic gate ([[semanticGateBatch]]) — embedding-cosine
-    *      membership (paraphrases).
-    *   5. quality gate ([[graft.llm.TextAnalysis.knGateBatch]]) — the
-    *      frozen KN-LM fluency filter.
-    *   6. classifier gate ([[graft.llm.Curation.clfGateBatch]]) — the
-    *      frozen trained-quality filter.
-    *
-    * The order is load-bearing twice: redaction before everything (the
-    * contract above), and the membership gates cheapest-first (an exact
-    * hash probe rejects for free what the LSH probe would pay buckets
-    * for). After each MEMBERSHIP gate, the matching INTRA-batch
-    * self-check of the component sink runs — keep-lowest-id exact
-    * normalized-hash self-dedup, [[graft.llm.Dedup.simhashWidePairs]],
-    * and [[semanticIntraBatchDups]] — so mutually-duplicate rows
-    * arriving in ONE micro-batch (which no corpus probe can see) are
-    * gated exactly as the component sinks gate them: the composition
-    * is decision-equivalent to chaining the six sinks, not weaker.
-    * Every stage stays batch-sized at any corpus scale (corpus probes
-    * are DPP-pruned index reads keyed by the batch's own hashes;
-    * intra-batch candidates form only inside shared buckets/bands).
-    *
-    * Returns the accepted rows as (idCol, textCol = REDACTED text,
-    * vecCol). The drift MONITOR (stage seven) never drops rows and so
-    * is not part of this decision body — [[startIngestPipelineSink]]
-    * runs it alongside, over the redacted arriving batch.
-    */
-  def ingestPipelineBatch(spark: org.apache.spark.sql.SparkSession,
-                          cfg: IngestPipelineConfig, batch: DataFrame,
-                          idCol: String, textCol: String,
-                          vecCol: String): DataFrame =
-    ingestStages(spark, cfg, idCol, textCol, vecCol,
-      resolveNearBuckets(spark, cfg))
-      .foldLeft(redactKeepVec(batch, idCol, textCol, vecCol)) {
-        case (df, (_, stage)) => stage(df)
-      }
-
-  /** The near-dup stage's bucket width, resolved ONCE from the index's
-    * params sidecar — callers thread the value into [[ingestStages]]
-    * so the per-stage lambdas never re-read the sidecar file (the
-    * streaming sink resolves it once per STREAM, not per micro-batch).
-    */
-  private def resolveNearBuckets(spark: org.apache.spark.sql.SparkSession,
-                                 cfg: IngestPipelineConfig): Int =
-    graft.llm.Dedup.simhashWideIndexBuckets(spark, cfg.nearDupIndexPath)
-
   /** Redact `textCol` in place, carrying `vecCol` through — the frame
     * every decision stage of the composed pipeline operates on.
     */
@@ -1354,21 +1260,43 @@ object Streams {
   /** The named decision stages of the composed ingest pipeline, each a
     * survivors->survivors function over the redacted
     * (idCol, textCol, vecCol) frame — one definition shared by
-    * [[ingestPipelineBatch]] (fold to the accepted set) and
-    * [[ingestPipelineTrace]] (per-stage rejection audit). Membership
-    * gates alternate with their intra-batch self-checks; `kn`/`clf`
-    * are stateless per-row and need none.
+    * [[startIngestPipelineSink]] (fold to the accepted set) and
+    * [[ingestPipelineTrace]] (per-stage rejection audit). After PII
+    * redaction ([[graft.llm.TextAnalysis.redactPii]] — every stage judges
+    * the redacted text a leaked row would actually train on), in
+    * contract order:
+    *
+    *   1. exact-dup gate ([[dedupGateBatch]]) — verbatim (normalized)
+    *      corpus membership.
+    *   2. near-dup gate ([[nearDupGateBatch]]) — wide-simhash hamming
+    *      membership (lightly-edited copies).
+    *   3. semantic gate ([[semanticGateBatch]]) — embedding-cosine
+    *      membership (paraphrases).
+    *   4. quality gate ([[graft.llm.TextAnalysis.knGateBatch]]) — the
+    *      frozen KN-LM fluency filter.
+    *   5. classifier gate ([[graft.llm.Curation.clfGateBatch]]) — the
+    *      frozen trained-quality filter.
+    *
+    * The membership gates run cheapest-first (an exact hash probe
+    * rejects for free what the LSH probe would pay buckets for), each
+    * followed by the matching INTRA-batch self-check of its component
+    * sink — keep-lowest-id exact normalized-hash self-dedup,
+    * [[graft.llm.Dedup.simhashWidePairs]], and [[semanticIntraBatchDups]]
+    * — so mutually-duplicate rows arriving in ONE micro-batch (which no
+    * corpus probe can see) are gated exactly as the component sinks gate
+    * them: the composition is decision-equivalent to chaining the
+    * sinks, not weaker. `kn`/`clf` are stateless per-row and need no
+    * intra check. Every stage stays batch-sized at any corpus scale.
     */
   private def ingestStages(spark: org.apache.spark.sql.SparkSession,
                            cfg: IngestPipelineConfig, idCol: String,
-                           textCol: String, vecCol: String,
-                           nearBuckets: Int)
+                           textCol: String, vecCol: String)
       : Seq[(String, DataFrame => DataFrame)] = Seq(
     // staticPrune on every membership stage: stage inputs are PINNED
     // survivor frames (unknown size stats), which silently disables
     // DPP on the index probes — see BandedIndex.probeJoinStatic.
     "exact" -> ((df: DataFrame) => dedupGateBatch(spark, cfg.exactIndexPath,
-      df, idCol, textCol, cfg.nBucketsExact, staticPrune = true)),
+      df, idCol, textCol, staticPrune = true)),
     // Keep-lowest-id per normalized text hash WITHIN the batch — the
     // upstream-dedup job startDedupGateSink documents, done here so the
     // composition is self-contained.
@@ -1380,7 +1308,7 @@ object Streams {
       Seq(idCol), "left_semi")),
     "near" -> ((df: DataFrame) => nearDupGateBatch(spark,
       cfg.nearDupIndexPath, df, idCol, textCol, cfg.maxHamming,
-      nBuckets = nearBuckets, staticPrune = true)),
+      staticPrune = true)),
     // simhashWidePairs emits id_a < id_b; dropping every id_b keeps the
     // lowest id of each intra-batch near-dup group.
     "near_intra" -> ((df: DataFrame) => df.join(
@@ -1408,7 +1336,7 @@ object Streams {
     * or `accepted`, plus the row's total PII redaction count — the
     * "which gate is eating my data" observability view a production
     * ingest needs, and the full-replay surface the e2e oracle checks.
-    * Decision-identical to [[ingestPipelineBatch]] by construction
+    * Decision-identical to [[startIngestPipelineSink]] by construction
     * (same [[ingestStages]] fold); each stage's survivor frame is
     * pinned so the audit's anti-joins don't replan the whole chain
     * per stage.
@@ -1425,8 +1353,7 @@ object Streams {
     var cur = red.select(col(idCol), col("redacted").as(textCol))
       .join(batch.select(col(idCol), col(vecCol)), Seq(idCol))
       .transform(Materialize.pin)
-    val rejected = ingestStages(spark, cfg, idCol, textCol, vecCol,
-        resolveNearBuckets(spark, cfg))
+    val rejected = ingestStages(spark, cfg, idCol, textCol, vecCol)
       .map { case (name, stage) =>
         val next = stage(cur).transform(Materialize.pin)
         val rej = cur.select(col(idCol))
@@ -1476,16 +1403,22 @@ object Streams {
     * id-distinct hits (and the compaction cadence drops them —
     * [[maybeCompactIndexes]]), and the quality/classifier/drift stages
     * are pure functions of (frozen artifact, batch).
+    *
+    * Every index probe and append reads its bucket width from the
+    * index's params sidecar; `cfg.nBucketsExact` is checked against the
+    * exact index's sidecar once, here, so a config naming another width
+    * fails at start instead of being silently ignored.
     */
   def startIngestPipelineSink(df: DataFrame, cfg: IngestPipelineConfig,
                               outPath: String, monitorPath: String,
                               checkpoint: String, idCol: String,
                               textCol: String, vecCol: String,
                               compactEvery: Int = 0) = {
-    // Resolved ONCE per stream, not per micro-batch: the near stage's
-    // bucket width is a build-time layout constant — re-reading the
-    // params sidecar from the filesystem every batch bought nothing.
-    val nearBuckets = resolveNearBuckets(df.sparkSession, cfg)
+    val built = graft.llm.BandedIndex.paramOf(df.sparkSession,
+      cfg.exactIndexPath, "exactdup-text", "nBuckets")
+    require(built == cfg.nBucketsExact.toString,
+      s"exact index at ${cfg.exactIndexPath} was built with nBuckets=$built, " +
+        s"the pipeline config says ${cfg.nBucketsExact}")
     df.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
@@ -1506,7 +1439,7 @@ object Streams {
         // count and wall are observable.
         var cur = redacted
         var nCur = nArrived
-        ingestStages(spark, cfg, idCol, textCol, vecCol, nearBuckets)
+        ingestStages(spark, cfg, idCol, textCol, vecCol)
           .zipWithIndex
           .foreach { case ((name, stage), i) =>
             val t = System.nanoTime()
@@ -1520,7 +1453,7 @@ object Streams {
         val accepted = cur
         accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
         graft.llm.Dedup.appendToExactDupIndex(accepted, idCol, textCol,
-          cfg.nBucketsExact, cfg.exactIndexPath)
+          cfg.exactIndexPath)
         graft.llm.Dedup.appendToSimhashWideIndex(accepted, idCol, textCol,
           cfg.maxHamming, cfg.nearDupIndexPath)
         graft.llm.Similarity.appendToLshIndex(accepted, idCol, vecCol,

@@ -66,15 +66,14 @@ class DedupSpec extends SparkSpec {
       s"only $survived of $farOrig post-insertion chunks kept their hash")
   }
 
-  test("near-dup index: probe equals inline pairs; grown index equals rebuild") {
+  test("near-dup index: probe equals inline pairs") {
     val docs = spark.read.parquet(sf("documents")).select($"doc_id", $"text")
     val delta = docs.filter($"doc_id" < 50)
     val dir = java.nio.file.Files.createTempDirectory("neardup_idx").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("neardup_grown").toString
     try {
       Dedup.writeNearDupIndex(docs, "doc_id", "text", 3, 8, 2, 64, dir)
       val probed = Dedup.probeNearDupIndex(spark, dir, delta,
-        "doc_id", "text", 3, 8, 2, 64, 0.5)
+        "doc_id", "text", 3, 8, 2, 0.5)
       // Inline ground truth: the symmetric pair set restricted to
       // queries, re-oriented to (query, cand).
       val inline = Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 8, 2, 0.5)
@@ -89,19 +88,7 @@ class DedupSpec extends SparkSpec {
       val plan = probed.queryExecution.executedPlan.toString()
       assert(plan.toLowerCase.contains("dynamicpruning"),
         s"no partition pruning on the near-dup index scan:\n$plan")
-      // Grown index (half + appended half) probes identically.
-      Dedup.writeNearDupIndex(docs.filter($"doc_id" % 2 === 0),
-        "doc_id", "text", 3, 8, 2, 64, dir2)
-      Dedup.appendToNearDupIndex(docs.filter($"doc_id" % 2 === 1),
-        "doc_id", "text", 3, 8, 2, 64, dir2)
-      val grown = Dedup.probeNearDupIndex(spark, dir2, delta,
-        "doc_id", "text", 3, 8, 2, 64, 0.5).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(grown === got)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir2))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("exact-dup index: perturbed probe finds originals; grown equals rebuild") {
@@ -116,7 +103,7 @@ class DedupSpec extends SparkSpec {
     try {
       Dedup.writeExactDupIndex(docs, "doc_id", "text", 64, dir)
       val probed = Dedup.probeExactDupIndex(spark, dir, delta,
-        "doc_id", "text", 64)
+        "doc_id", "text")
       val got = probed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       // Every delta doc matches at least its own original.
       val deltaIds = docs.filter($"doc_id" % 7 === 0)
@@ -128,9 +115,9 @@ class DedupSpec extends SparkSpec {
       Dedup.writeExactDupIndex(docs.filter($"doc_id" % 2 === 0),
         "doc_id", "text", 64, dir2)
       Dedup.appendToExactDupIndex(docs.filter($"doc_id" % 2 === 1),
-        "doc_id", "text", 64, dir2)
+        "doc_id", "text", dir2)
       val grown = Dedup.probeExactDupIndex(spark, dir2, delta,
-        "doc_id", "text", 64).collect()
+        "doc_id", "text").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(grown === got)
     } finally {
@@ -150,11 +137,11 @@ class DedupSpec extends SparkSpec {
       Dedup.writeExactDupIndex(docs.filter($"doc_id" % 2 === 0),
         "doc_id", "text", 16, dir)
       Dedup.appendToExactDupIndex(docs.filter($"doc_id" % 2 === 1),
-        "doc_id", "text", 16, dir)
+        "doc_id", "text", dir)
       val marker = new java.io.File(dir, "_GRAFT_GROWN")
       marker.createNewFile()
       val before = Dedup.probeExactDupIndex(spark, dir, delta,
-        "doc_id", "text", 16).collect()
+        "doc_id", "text").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(before.nonEmpty)
       val (fb, fa, rows) = Dedup.compactIndex(spark, dir)
@@ -172,7 +159,7 @@ class DedupSpec extends SparkSpec {
       assert(marker.exists(), "root marker file lost across compaction")
       // Probe still validates the sidecar and returns the identical pairs.
       val after = Dedup.probeExactDupIndex(spark, dir, delta,
-        "doc_id", "text", 16).collect()
+        "doc_id", "text").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(after === before)
       // A parquet dir that is not a graft index refuses compaction.
@@ -203,14 +190,14 @@ class DedupSpec extends SparkSpec {
       // The crash-replay scenario: the odds batch's append committed,
       // the checkpoint didn't, and the restarted stream re-appends it.
       Dedup.writeExactDupIndex(evens, "doc_id", "text", 16, dir)
-      Dedup.appendToExactDupIndex(odds, "doc_id", "text", 16, dir)
-      Dedup.appendToExactDupIndex(odds, "doc_id", "text", 16, dir)
+      Dedup.appendToExactDupIndex(odds, "doc_id", "text", dir)
+      Dedup.appendToExactDupIndex(odds, "doc_id", "text", dir)
       Dedup.writeExactDupIndex(docs, "doc_id", "text", 16, ref)
       val refRows = spark.read.parquet(ref).count()
       assert(spark.read.parquet(dir).count() > refRows,
         "replayed append should have grown the layout")
       val before = Dedup.probeExactDupIndex(spark, dir, delta,
-        "doc_id", "text", 16).collect()
+        "doc_id", "text").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val (_, _, rows) = Dedup.compactIndex(spark, dir)
       // The compacted row SET is exactly what a never-crashed build has.
@@ -218,7 +205,7 @@ class DedupSpec extends SparkSpec {
         s"compaction left $rows rows, single-append layout has $refRows")
       assert(spark.read.parquet(dir).count() === refRows)
       val after = Dedup.probeExactDupIndex(spark, dir, delta,
-        "doc_id", "text", 16).collect()
+        "doc_id", "text").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(after === before)
     } finally {
@@ -327,13 +314,13 @@ class DedupSpec extends SparkSpec {
       // silently without the sidecar check.
       val e1 = intercept[IllegalArgumentException] {
         Dedup.probeNearDupIndex(spark, dir, docs, "doc_id", "text",
-          5, 8, 2, 64, 0.5)
+          5, 8, 2, 0.5)
       }
       assert(e1.getMessage.contains("different parameters"))
-      // Append with different nBuckets: rows would land in directories a
-      // rebuild would never use.
+      // Append through another family: its rows would land in a layout
+      // whose probes can never match them.
       val e2 = intercept[IllegalArgumentException] {
-        Dedup.appendToNearDupIndex(docs, "doc_id", "text", 3, 8, 2, 128, dir)
+        Dedup.appendToSimhashWideIndex(docs, "doc_id", "text", 7, dir)
       }
       assert(e2.getMessage.contains("different parameters"))
       // A parquet dir that is not a graft index at all (no sidecar).
@@ -341,7 +328,7 @@ class DedupSpec extends SparkSpec {
       try {
         docs.write.mode("overwrite").parquet(bare)
         val e3 = intercept[IllegalArgumentException] {
-          Dedup.probeSimhashIndex(spark, bare, docs, "doc_id", "text", 8, 32)
+          Dedup.probeSimhashIndex(spark, bare, docs, "doc_id", "text", 8)
         }
         assert(e3.getMessage.contains("sidecar"))
       } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(bare))
@@ -368,15 +355,14 @@ class DedupSpec extends SparkSpec {
     assert(out(2).getAs[Long]("n_dup_chunks") === 0L)
   }
 
-  test("simhash index: probe equals inline pairs; grown index equals rebuild") {
+  test("simhash index: probe equals inline pairs") {
     val docs = spark.read.parquet(sf("documents")).select($"doc_id", $"text")
     val delta = docs.filter($"doc_id" < 50)
     val dir = java.nio.file.Files.createTempDirectory("simhash_idx").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("simhash_grown").toString
     try {
       Dedup.writeSimhashIndex(docs, "doc_id", "text", 8, 32, dir)
       val probed = Dedup.probeSimhashIndex(spark, dir, delta,
-        "doc_id", "text", 8, 32)
+        "doc_id", "text", 8)
       val inline = Dedup.simhashPairs(docs, "doc_id", "text", 8)
         .collect().flatMap { r =>
           val (a, b, h) = (r.getLong(0), r.getLong(1), r.getInt(2))
@@ -388,18 +374,7 @@ class DedupSpec extends SparkSpec {
       val plan = probed.queryExecution.executedPlan.toString()
       assert(plan.toLowerCase.contains("dynamicpruning"),
         s"no partition pruning on the simhash index scan:\n$plan")
-      Dedup.writeSimhashIndex(docs.filter($"doc_id" % 2 === 0),
-        "doc_id", "text", 8, 32, dir2)
-      Dedup.appendToSimhashIndex(docs.filter($"doc_id" % 2 === 1),
-        "doc_id", "text", 8, 32, dir2)
-      val grown = Dedup.probeSimhashIndex(spark, dir2, delta,
-        "doc_id", "text", 8, 32).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(grown === got)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir2))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("wide simhash: identical docs at distance 0; pairs equal the " +
@@ -436,18 +411,23 @@ class DedupSpec extends SparkSpec {
     val docs = spark.read.parquet(sf("documents"))
       .select($"doc_id", $"text").filter($"doc_id" < 200)
     val dir = java.nio.file.Files.createTempDirectory("wsauto").toString
+    val dir2 = java.nio.file.Files.createTempDirectory("wsexplicit").toString
     try {
       val chosen = Dedup.writeSimhashWideIndexAuto(docs, "doc_id", "text",
         maxHamming = 7, path = dir)
       assert(chosen === BandedIndex.autoBuckets(docs.count()))
-      assert(Dedup.simhashWideIndexBuckets(spark, dir) === chosen)
+      assert(BandedIndex.paramOf(spark, dir, "simhash-wide", "nBuckets") ===
+        chosen.toString)
+      // The same width written explicitly: probes read the width from
+      // each sidecar, so both layouts answer identically.
+      Dedup.writeSimhashWideIndex(docs, "doc_id", "text", 7, chosen, dir2)
       val delta = spark.read.parquet(sf("documents"))
         .select($"doc_id", $"text").filter($"doc_id" >= 200 && $"doc_id" < 230)
       val auto = Dedup.probeSimhashWideIndex(spark, dir, delta,
         "doc_id", "text", maxHamming = 7)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val explicit = Dedup.probeSimhashWideIndex(spark, dir, delta,
-        "doc_id", "text", maxHamming = 7, nBuckets = chosen)
+      val explicit = Dedup.probeSimhashWideIndex(spark, dir2, delta,
+        "doc_id", "text", maxHamming = 7)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(auto === explicit)
       Dedup.appendToSimhashWideIndex(delta, "doc_id", "text",
@@ -455,8 +435,10 @@ class DedupSpec extends SparkSpec {
       val after = Dedup.probeSimhashWideIndex(spark, dir,
         delta.limit(5), "doc_id", "text", maxHamming = 7)
       assert(after.columns.toSeq === Seq("query_id", "cand_id", "hamming"))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(dir))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir2))
+    }
   }
 
   test("wide simhash: balanced bands accept the whole documented " +
@@ -492,7 +474,7 @@ class DedupSpec extends SparkSpec {
     try {
       Dedup.writeSimhashWideIndex(docs, "doc_id", "text", 7, 256, dir)
       val probed = Dedup.probeSimhashWideIndex(spark, dir, delta,
-        "doc_id", "text", 7, 256)
+        "doc_id", "text", 7)
       val inline = Dedup.simhashWidePairs(docs, "doc_id", "text", 7)
         .collect().flatMap { r =>
           val (a, b, h) = (r.getLong(0), r.getLong(1), r.getInt(2))
@@ -507,9 +489,9 @@ class DedupSpec extends SparkSpec {
       Dedup.writeSimhashWideIndex(docs.filter($"doc_id" % 2 === 0),
         "doc_id", "text", 7, 256, dir2)
       Dedup.appendToSimhashWideIndex(docs.filter($"doc_id" % 2 === 1),
-        "doc_id", "text", 7, 256, dir2)
+        "doc_id", "text", 7, dir2)
       val grown = Dedup.probeSimhashWideIndex(spark, dir2, delta,
-        "doc_id", "text", 7, 256).collect()
+        "doc_id", "text", 7).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(grown === got)
       // A 60-bit simhash layout probed as wide must fail on the sidecar,
@@ -519,111 +501,11 @@ class DedupSpec extends SparkSpec {
         Dedup.writeSimhashIndex(docs, "doc_id", "text", 8, 32, dir3)
         val e = intercept[IllegalArgumentException] {
           Dedup.probeSimhashWideIndex(spark, dir3, delta,
-            "doc_id", "text", 7, 256).collect()
+            "doc_id", "text", 7).collect()
         }
         assert(e.getMessage.contains("different parameters"))
       } finally org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(dir3))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir2))
-    }
-  }
-
-  test("generic hamming index over image dHashes: probe equals inline " +
-    "pairs; grown equals rebuild; mismatched params fail loud") {
-    implicit val s = spark
-    val ids = (0L until 64L).toDF("doc_id")
-    val hashes = Multimodal.extractImageHashes(
-      Multimodal.syntheticImageGroups(ids, "doc_id")).toDF()
-      .localCheckpoint(true)
-    val delta = hashes.filter($"media_id" < 16)
-    val dir = java.nio.file.Files.createTempDirectory("ham_idx").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("ham_grown").toString
-    try {
-      Dedup.writeHammingIndex(hashes, "media_id", "dhash", 56, 7, 16, dir)
-      val probed = Dedup.probeHammingIndex(spark, dir, delta,
-        "media_id", "dhash", 56, 7, 16)
-      val inline = Dedup.hammingNearDupPairs(hashes, "media_id", "dhash",
-        56, 7).collect().flatMap { r =>
-          val (a, b, h) = (r.getLong(0), r.getLong(1), r.getInt(2))
-          Seq((a, b, h), (b, a, h)).filter(_._1 < 16)
-        }.toSet
-      assert(inline.nonEmpty) // fixture groups of 4 inside the delta
-      val got = probed.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(got === inline)
-      val plan = probed.queryExecution.executedPlan.toString()
-      assert(plan.toLowerCase.contains("dynamicpruning"),
-        s"no partition pruning on the hamming index scan:\n$plan")
-      Dedup.writeHammingIndex(hashes.filter($"media_id" % 2 === 0),
-        "media_id", "dhash", 56, 7, 16, dir2)
-      Dedup.appendToHammingIndex(hashes.filter($"media_id" % 2 === 1),
-        "media_id", "dhash", 56, 7, 16, dir2)
-      val grown = Dedup.probeHammingIndex(spark, dir2, delta,
-        "media_id", "dhash", 56, 7, 16).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(grown === got)
-      // A different maxHamming re-bands the layout: sidecar rejects.
-      val e = intercept[IllegalArgumentException] {
-        Dedup.probeHammingIndex(spark, dir, delta, "media_id", "dhash",
-          56, 6, 16)
-      }
-      assert(e.getMessage.contains("different parameters"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir2))
-    }
-  }
-
-  test("strided video-hash SET index: set probe equals the inline set " +
-    "pairs, recovers scrambled-first-frame groups the first-frame index " +
-    "misses, and grown equals rebuild") {
-    implicit val s = spark
-    val ids = (0L until 64L).toDF("doc_id")
-    // Scrambled-frame-0 fixture: first-frame hashing finds NO
-    // intra-group pairs; the strided frame SET recovers every group.
-    val strided = Multimodal.extractVideoFrameHashesStrided(
-      Multimodal.syntheticVideoGroupsStrided(ids, "doc_id"), k = 3).toDF()
-      .localCheckpoint(true)
-    val first = Multimodal.extractVideoFrameHashes(
-      Multimodal.syntheticVideoGroupsStrided(ids, "doc_id")).toDF()
-      .localCheckpoint(true)
-    val delta = strided.filter($"media_id" < 16)
-    val dir = java.nio.file.Files.createTempDirectory("vset_idx").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("vset_grown").toString
-    try {
-      Dedup.writeHammingIndex(strided, "media_id", "dhash", 56, 7, 16, dir)
-      val got = Dedup.probeHammingIndexSet(spark, dir, delta,
-        "media_id", "dhash", 56, 7, 16).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      // Set probe == inline set pairs, symmetrized and delta-filtered.
-      val inline = Dedup.hammingNearDupPairsSet(strided, "media_id",
-        "dhash", 56, 7).collect().flatMap { r =>
-          val (a, b, h) = (r.getLong(0), r.getLong(1), r.getInt(2))
-          Seq((a, b, h), (b, a, h)).filter(_._1 < 16)
-        }.toSet
-      assert(inline.nonEmpty)
-      assert(got === inline)
-      // The evasion the set layout closes: first-frame hashes of the
-      // SAME fixture find none of the planted intra-group pairs (frame
-      // 0 is scrambled per member; any residual hit is a chance
-      // cross-group collision), while the set probe finds them.
-      val ff = Dedup.hammingNearDupPairs(first, "media_id", "dhash", 56, 7)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(!ff.exists { case (a, b) => a / 4 == b / 4 },
-        s"first-frame hashing should miss scrambled groups, found: ${ff.toSeq}")
-      assert(got.exists { case (a, b, _) => a / 4 == b / 4 },
-        "set probe must recover intra-group pairs")
-      // Grown (evens then odds appended) probes identically to rebuild.
-      Dedup.writeHammingIndex(strided.filter($"media_id" % 2 === 0),
-        "media_id", "dhash", 56, 7, 16, dir2)
-      Dedup.appendToHammingIndex(strided.filter($"media_id" % 2 === 1),
-        "media_id", "dhash", 56, 7, 16, dir2)
-      val grown = Dedup.probeHammingIndexSet(spark, dir2, delta,
-        "media_id", "dhash", 56, 7, 16).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(grown === got)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir2))
@@ -644,7 +526,7 @@ class DedupSpec extends SparkSpec {
       Dedup.writeHammingWideIndex(hashes, "media_id", "dhash", "vhash",
         56, 54, 7, 16, dir)
       val probed = Dedup.probeHammingWideIndex(spark, dir, delta,
-        "media_id", "dhash", "vhash", 56, 54, 7, 16)
+        "media_id", "dhash", "vhash", 56, 54, 7)
       val inline = Dedup.hammingNearDupPairsWide(hashes, "media_id",
         "dhash", "vhash", 56, 54, 7).collect().flatMap { r =>
           val (a, b, h) = (r.getLong(0), r.getLong(1), r.getInt(2))
@@ -660,19 +542,20 @@ class DedupSpec extends SparkSpec {
       Dedup.writeHammingWideIndex(hashes.filter($"media_id" % 2 === 0),
         "media_id", "dhash", "vhash", 56, 54, 7, 16, dir2)
       Dedup.appendToHammingWideIndex(hashes.filter($"media_id" % 2 === 1),
-        "media_id", "dhash", "vhash", 56, 54, 7, 16, dir2)
+        "media_id", "dhash", "vhash", 56, 54, 7, dir2)
       val grown = Dedup.probeHammingWideIndex(spark, dir2, delta,
-        "media_id", "dhash", "vhash", 56, 54, 7, 16).collect()
+        "media_id", "dhash", "vhash", 56, 54, 7).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(grown === got)
-      // A narrow 56-bit layout probed as wide must fail on the sidecar,
-      // not silently return wrong pairs.
+      // A narrow 60-bit simhash layout probed as wide must fail on the
+      // sidecar, not silently return wrong pairs.
       val dir3 = java.nio.file.Files.createTempDirectory("hamw_bad").toString
       try {
-        Dedup.writeHammingIndex(hashes, "media_id", "dhash", 56, 7, 16, dir3)
+        Dedup.writeSimhashIndex(Seq((1L, "a narrow layout")).toDF("doc_id", "text"),
+          "doc_id", "text", 7, 16, dir3)
         val e = intercept[IllegalArgumentException] {
           Dedup.probeHammingWideIndex(spark, dir3, delta,
-            "media_id", "dhash", "vhash", 56, 54, 7, 16).collect()
+            "media_id", "dhash", "vhash", 56, 54, 7).collect()
         }
         assert(e.getMessage.contains("different parameters"))
       } finally org.apache.commons.io.FileUtils
@@ -697,7 +580,7 @@ class DedupSpec extends SparkSpec {
       Dedup.writeHammingWideIndex(strided, "media_id", "dhash", "vhash",
         56, 54, 7, 16, dir)
       val got = Dedup.probeHammingWideIndexSet(spark, dir, delta,
-        "media_id", "dhash", "vhash", 56, 54, 7, 16).collect()
+        "media_id", "dhash", "vhash", 56, 54, 7).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       val inline = Dedup.hammingNearDupPairsSetWide(strided, "media_id",
         "dhash", "vhash", 56, 54, 7).collect().flatMap { r =>
@@ -713,9 +596,9 @@ class DedupSpec extends SparkSpec {
       Dedup.writeHammingWideIndex(strided.filter($"media_id" % 2 === 0),
         "media_id", "dhash", "vhash", 56, 54, 7, 16, dir2)
       Dedup.appendToHammingWideIndex(strided.filter($"media_id" % 2 === 1),
-        "media_id", "dhash", "vhash", 56, 54, 7, 16, dir2)
+        "media_id", "dhash", "vhash", 56, 54, 7, dir2)
       val grown = Dedup.probeHammingWideIndexSet(spark, dir2, delta,
-        "media_id", "dhash", "vhash", 56, 54, 7, 16).collect()
+        "media_id", "dhash", "vhash", 56, 54, 7).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       assert(grown === got)
     } finally {
@@ -1018,15 +901,14 @@ class DedupSpec extends SparkSpec {
       def delta = sigs.filter($"id" < 3)
         .select(($"id" + 1000L).as("id"), $"lo", $"hi")
       val viaDpp = Dedup.probeHammingWideIndex(spark, dir, delta,
-        "id", "lo", "hi", 56, 54, maxHamming = 7, nBuckets = 16)
+        "id", "lo", "hi", 56, 54, maxHamming = 7)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       // The STREAMING-SINK shape: the delta is pinned (localCheckpoint),
       // which hides its size stats and silently disables DPP — the
       // static path must return the identical rows from a pruned read.
       val pinned = graft.ops.Materialize.pin(delta)
       val viaStatic = Dedup.probeHammingWideIndex(spark, dir, pinned,
-        "id", "lo", "hi", 56, 54, maxHamming = 7, nBuckets = 16,
-        staticPrune = true)
+        "id", "lo", "hi", 56, 54, maxHamming = 7, staticPrune = true)
       val (rows, scanned) = {
         val plan = viaStatic.queryExecution.executedPlan
         val n = plan.execute().count()
@@ -1056,8 +938,7 @@ class DedupSpec extends SparkSpec {
       .toDF("cand_id", "band", "bkt", "sig")
     val dir = java.nio.file.Files.createTempDirectory("spcap").toString + "/ix"
     try {
-      BandedIndex.writeLayout(layout, dir,
-        org.apache.spark.sql.SaveMode.Overwrite, params)
+      BandedIndex.writeLayout(layout, dir, Some(params))
       // 12 probed (band, bkt) keys; payload joins as a residual-free
       // broadcast.
       val qb = (0L until 12L)
@@ -1066,15 +947,14 @@ class DedupSpec extends SparkSpec {
       def rows(df: org.apache.spark.sql.DataFrame) = df
         .select("query_id", "cand_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val pruned = rows(BandedIndex.probeJoinStatic(spark, dir, qb, Nil,
-        params))
+      val pruned = rows(BandedIndex.probeJoinStatic(spark, dir, qb, Nil))
       assert(BandedIndex.staticPruneFallback(dir) === 0L)
       assert(BandedIndex.probeBroadcastFallback(dir) === 0L)
       // Cap BELOW the probed key count: the predicate is dropped, the
       // read is the full layout, the JOIN result is identical — and the
       // fallback is loud (diagnostic counter carries the key count).
       val capped = rows(BandedIndex.probeJoinStatic(spark, dir, qb, Nil,
-        params, maxKeys = 5))
+        maxKeys = 5))
       assert(capped === pruned)
       assert(BandedIndex.staticPruneFallback(dir) > 5L)
       // The key-cap fallback is corpus-shaped by definition: the
@@ -1084,17 +964,86 @@ class DedupSpec extends SparkSpec {
       // Broadcast-row cap alone (keys under their cap): rows identical,
       // prune diagnostic clean, broadcast fallback carries the count.
       val rowCapped = rows(BandedIndex.probeJoinStatic(spark, dir, qb, Nil,
-        params, maxBroadcastRows = 5L))
+        maxBroadcastRows = 5L))
       assert(rowCapped === pruned)
       assert(BandedIndex.staticPruneFallback(dir) === 0L)
       assert(BandedIndex.probeBroadcastFallback(dir) === 12L)
       // And the DPP path's guard: same rows with the hint dropped.
       val dppCapped = rows(BandedIndex.probeJoin(spark, dir, qb, Nil,
-        params, maxBroadcastRows = 5L))
+        maxBroadcastRows = 5L, qbRows = 12L))
       assert(dppCapped === pruned)
       assert(BandedIndex.probeBroadcastFallback(dir) === 12L)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(dir).getParentFile)
+  }
+
+  test("every BandFamily through the one core: grown equals rebuilt, a " +
+    "foreign layout fails loud, DPP on the plain probe, no static-prune " +
+    "fallback") {
+    val root = java.nio.file.Files.createTempDirectory("band_contract").toString
+    try {
+      val docs = spark.read.parquet(sf("documents")).select($"doc_id", $"text")
+        .filter($"doc_id" < 300)
+      val emb = spark.read.parquet(sf("embeddings")).filter($"vec_id" < 300)
+      // Two-word signatures from a parquet scan (a local relation would
+      // fold the delta's filter away, and with it DPP's selective side).
+      (0L until 300L).map { i =>
+        (i, (i * 2654435761L) & ((1L << 56) - 1),
+          (i * 1099511628211L) & ((1L << 54) - 1))
+      }.toDF("id", "lo", "hi").write.parquet(s"$root/sigs")
+      val sigs = spark.read.parquet(s"$root/sigs")
+      // (name, family, corpus, id column, nBuckets)
+      val cases = Seq(
+        ("exactdup", Dedup.exactDupFamily("doc_id", "text"), docs, "doc_id",
+          Some(16)),
+        ("neardup", Dedup.nearDupFamily("doc_id", "text", 3, 8, 2,
+          graft.ops.Materialize.Local), docs, "doc_id", Some(16)),
+        ("simhash", Dedup.simhashFamily("doc_id", "text", 8), docs, "doc_id",
+          Some(16)),
+        ("simhash-wide", Dedup.simhashWideFamily("doc_id", "text", 7), docs,
+          "doc_id", Some(16)),
+        ("hamming-wide", Dedup.hammingWideFamily("id", "lo", "hi", 56, 54, 7),
+          sigs, "id", Some(16)),
+        ("lsh", Similarity.lshFamily("vec_id", "embedding", 4, 4), emb,
+          "vec_id", None),
+        ("lsh-multiprobe", Similarity.lshMultiProbeFamily("vec_id",
+          "embedding", 4, 4, 2), emb, "vec_id", None))
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      cases.foreach { case (name, fam, corpus, id, nBuckets) =>
+        val (grown, full) = (s"$root/$name/grown", s"$root/$name/full")
+        BandedIndex.write(fam, corpus.filter(col(id) % 2 === 0), grown, nBuckets)
+        BandedIndex.append(fam, corpus.filter(col(id) % 2 === 1), grown)
+        BandedIndex.write(fam, corpus, full, nBuckets)
+        // Re-uploads of corpus members under fresh ids: each collides
+        // with its original in every band.
+        val delta = corpus.filter(col(id) < 20).withColumn(id, col(id) + 1000000L)
+        def probe(path: String, static: Boolean) =
+          BandedIndex.probe(spark, fam, path, delta, static) { (joined, _) =>
+            joined.select("query_id", "cand_id").distinct()
+          }
+        val plain = probe(full, static = false)
+        val want = pairs(plain)
+        assert(want.size >= 10, s"$name: re-uploads not found: $want")
+        assert(pairs(probe(grown, static = false)) === want,
+          s"$name: grown layout probes differently from the rebuilt one")
+        assert(plain.queryExecution.executedPlan.toString.toLowerCase
+          .contains("dynamicpruning"), s"$name: no partition pruning")
+        assert(pairs(probe(full, static = true)) === want, s"$name: static")
+        assert(BandedIndex.staticPruneFallback(full) === 0L, name)
+        val foreign = cases.map(_._2).find(_.params != fam.params).get
+        val e1 = intercept[IllegalArgumentException] {
+          BandedIndex.probe(spark, foreign, full, delta, staticPrune = false)(
+            (joined, _) => joined)
+        }
+        assert(e1.getMessage.contains("different parameters"), name)
+        val e2 = intercept[IllegalArgumentException] {
+          BandedIndex.append(foreign, delta, full)
+        }
+        assert(e2.getMessage.contains("different parameters"), name)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(root))
   }
 }
 
@@ -1482,7 +1431,7 @@ class SimilaritySpec extends SparkSpec {
         .filter($"rows_match" === 0).count() === 0L)
       // No rebuild debris left beside the live layout.
       assert(!new java.io.File(s"$dir/grown_REBUILDING").exists())
-      assert(!new java.io.File(s"$dir/grown_PREREBUILD").exists())
+      assert(!new java.io.File(s"$dir/grown${BandedIndex.AsideSuffix}").exists())
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
@@ -1564,10 +1513,10 @@ class SimilaritySpec extends SparkSpec {
       val nb = Dedup.writeHammingWideIndexAuto(corpus, "media_id", "lo", "hi",
         nLoBits = 56, nHiBits = 54, maxHamming = 7, path = dir)
       assert(nb === BandedIndex.autoBuckets(600L))
-      assert(Dedup.hammingWideIndexBuckets(spark, dir) === nb)
+      assert(BandedIndex.paramOf(spark, dir, "hamming-sig-wide", "nBuckets") ===
+        nb.toString)
       val hits = Dedup.probeHammingWideIndex(spark, dir, delta,
-        "media_id", "lo", "hi", nLoBits = 56, nHiBits = 54, maxHamming = 7,
-        nBuckets = nb)
+        "media_id", "lo", "hi", nLoBits = 56, nHiBits = 54, maxHamming = 7)
       assert(hits.filter(col("hamming") === 0).count() === 10L)
       // rowsHint: same layout decision without evaluating the frame.
       val dir2 = java.nio.file.Files.createTempDirectory("hwauto2").toString
@@ -2700,20 +2649,6 @@ class MultimodalSpec extends SparkSpec {
     assert(feats(1).fps_rate === 23 && feats(1).fps_scale === 2
       && feats(1).n_frames === 38L)
     assert(feats(1).duration_ms === 38L * 1000L * 2L / 23L)
-  }
-
-  test("resize downsamples payloads to the byte budget, deterministically") {
-    implicit val s = spark
-    val df = Seq((1L, "image", "0123456789"), (2L, "image", "abc"))
-      .toDF("doc_id", "modality", "text")
-    val media = Multimodal.payloadFromText(df, "doc_id", "text", "modality")
-    val out = Multimodal.resize(Multimodal.asMediaDataset(media), targetBytes = 5)
-      .collect().sortBy(_.media_id)
-    // 10 bytes at budget 5 -> stride 2 -> every 2nd byte
-    assert(new String(out(0).payload) === "02468")
-    assert(out(0).orig_bytes === 10 && out(0).target_bytes === 5)
-    // already under budget -> unchanged
-    assert(new String(out(1).payload) === "abc")
   }
 
   test("frameSample slices fixed-stride byte ranges without decoding") {

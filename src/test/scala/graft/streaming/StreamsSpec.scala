@@ -309,7 +309,7 @@ class StreamsSpec extends SparkSpec {
       graft.llm.Dedup.writeExactDupIndex(corpus, "doc_id", "text", 8, idx)
       val mem = MemoryStream[Doc]
       val q = Streams.startDedupGateSink(mem.toDF(), idx, out, ckpt,
-        "doc_id", "text", nBuckets = 8)
+        "doc_id", "text")
       try {
         // Batch 0: a corpus dup (case/space noise) and a novel doc.
         mem.addData(
@@ -328,7 +328,7 @@ class StreamsSpec extends SparkSpec {
       // final index: everything already admitted is now a member.
       val replay = Streams.dedupGateBatch(spark, idx,
         Seq(Doc(20L, "eta THETA iota"), Doc(21L, "kappa lambda mu"),
-          Doc(22L, "nu xi omicron")).toDF(), "doc_id", "text", 8)
+          Doc(22L, "nu xi omicron")).toDF(), "doc_id", "text")
         .select("doc_id").as[Long].collect().sorted
       assert(replay === Array(22L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
@@ -512,7 +512,7 @@ class StreamsSpec extends SparkSpec {
         maxHamming = 7, nBuckets = 8, path = idx)
       val mem = MemoryStream[Doc]
       val q = Streams.startNearDupGateSink(mem.toDF(), idx, out, ckpt,
-        "doc_id", "text", maxHamming = 7, nBuckets = 8)
+        "doc_id", "text", maxHamming = 7)
       try {
         // Batch 0: a REORDERED copy of corpus doc 1 (same token bag,
         // different string — verbatim membership misses it, the
@@ -537,7 +537,7 @@ class StreamsSpec extends SparkSpec {
       val replay = Streams.nearDupGateBatch(spark, idx,
         Seq(Doc(20L, "grey black white violet indigo blue green yellow orange red"),
           Doc(21L, "totally fresh words appear nowhere else in any corpus document here")).toDF(),
-        "doc_id", "text", maxHamming = 7, nBuckets = 8)
+        "doc_id", "text", maxHamming = 7)
         .select("doc_id").as[Long].collect().sorted
       assert(replay === Array(21L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
@@ -556,7 +556,7 @@ class StreamsSpec extends SparkSpec {
         maxHamming = 7, nBuckets = 8, path = idx)
       val mem = MemoryStream[Doc]
       val q = Streams.startNearDupGateSink(mem.toDF(), idx, out, ckpt,
-        "doc_id", "text", maxHamming = 7, nBuckets = 8)
+        "doc_id", "text", maxHamming = 7)
       try {
         // ONE batch: ids 10/11 are mutual near-dups (identical token
         // bag, reordered — hamming 0) both NOVEL vs the corpus; id 12
@@ -576,7 +576,7 @@ class StreamsSpec extends SparkSpec {
       val replay = Streams.nearDupGateBatch(spark, idx,
         Seq(Doc(20L, "quark lepton boson hadron meson photon gluon tachyon axion neutrino"),
           Doc(21L, "totally fresh words appear nowhere else in any corpus document here")).toDF(),
-        "doc_id", "text", maxHamming = 7, nBuckets = 8)
+        "doc_id", "text", maxHamming = 7)
         .select("doc_id").as[Long].collect().sorted
       assert(replay === Array(21L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
@@ -603,7 +603,7 @@ class StreamsSpec extends SparkSpec {
         maxHamming = 7, nBuckets = 8, path = idx)
       val mem = MemoryStream[graft.llm.Multimodal.MediaRecord]
       val q = Streams.startImageGateSink(mem.toDF(), idx, out, ckpt,
-        maxHamming = 7, nBuckets = 8)
+        maxHamming = 7)
       try {
         // Batch 0: a RE-UPLOAD of corpus image 1 under a fresh id
         // (byte-identical payload — hamming 0, reject); two members of
@@ -626,7 +626,7 @@ class StreamsSpec extends SparkSpec {
       val probeBatch = graft.llm.Multimodal.syntheticImageGroups(
         Seq(49L, 80L).toDF("doc_id"), "doc_id").toDF()
       val replay = Streams.imageGateBatch(spark, idx, probeBatch,
-        maxHamming = 7, nBuckets = 8)
+        maxHamming = 7)
         .select("media_id").as[Long].collect().sorted
       assert(replay === Array(80L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
@@ -655,7 +655,7 @@ class StreamsSpec extends SparkSpec {
         maxHamming = 7, nBuckets = 8, path = idx)
       val mem = MemoryStream[graft.llm.Multimodal.MediaRecord]
       val q = Streams.startAudioGateSink(mem.toDF(), idx, out, ckpt,
-        maxHamming = 7, nBuckets = 8)
+        maxHamming = 7)
       try {
         // Batch 0: a re-upload of corpus clip 1 under a fresh id
         // (hamming 0 — reject); members 40/41 of novel group 10 in ONE
@@ -678,7 +678,7 @@ class StreamsSpec extends SparkSpec {
       val probeBatch = graft.llm.Multimodal.syntheticAudioGroups(
         Seq(49L, 80L).toDF("doc_id"), "doc_id").toDF()
       val replay = Streams.audioGateBatch(spark, idx, probeBatch,
-        maxHamming = 7, nBuckets = 8)
+        maxHamming = 7)
         .select("media_id").as[Long].collect().sorted
       assert(replay === Array(80L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
@@ -709,7 +709,7 @@ class StreamsSpec extends SparkSpec {
         maxHamming = 7, nBuckets = 8, path = idx)
       val mem = MemoryStream[graft.llm.Multimodal.MediaRecord]
       val q = Streams.startVideoGateSink(mem.toDF(), idx, out, ckpt,
-        maxHamming = 7, nBuckets = 8)
+        maxHamming = 7)
       try {
         // Batch 0: a RE-UPLOAD of corpus video 1 under a fresh id
         // (byte-identical — every strided frame at hamming 0, reject);
@@ -735,7 +735,7 @@ class StreamsSpec extends SparkSpec {
       val probeBatch = graft.llm.Multimodal.syntheticVideoGroupsStrided(
         Seq(49L, 80L).toDF("doc_id"), "doc_id").toDF()
       val replay = Streams.videoGateBatch(spark, idx, probeBatch,
-        maxHamming = 7, nBuckets = 8)
+        maxHamming = 7)
         .select("media_id").as[Long].collect().sorted
       assert(replay === Array(80L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
@@ -815,9 +815,7 @@ class StreamsSpec extends SparkSpec {
       val probe = Seq(pr(200L, 40L, capOther), pr(201L, 60L, capOther))
         .toDF()
       val replay = Streams.pairGateBatch(spark, idx, cidx, probe,
-        "caption", maxHamming = 7, capMaxHamming = 7,
-        nBuckets = Dedup.hammingWideIndexBuckets(spark, idx),
-        capBuckets = Dedup.simhashWideIndexBuckets(spark, cidx))
+        "caption", maxHamming = 7, capMaxHamming = 7)
         .select("media_id").as[Long].collect().sorted
       assert(replay === Array(201L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
@@ -895,8 +893,6 @@ class StreamsSpec extends SparkSpec {
       val probe = Seq(pr(200L, 40L, cap(8L)), pr(201L, 8L, cap(8L))).toDF()
       val replay = Streams.pairGateBatch(spark, idx, cidx, probe,
         "caption", maxHamming = 7, capMaxHamming = 7,
-        nBuckets = Dedup.hammingWideIndexBuckets(spark, idx),
-        capBuckets = Dedup.simhashWideIndexBuckets(spark, cidx),
         rejectBoilerplate = true)
         .select("media_id").as[Long].collect().sorted
       assert(replay === Array(201L))
@@ -934,8 +930,6 @@ class StreamsSpec extends SparkSpec {
         .toDF()
       def decide() = Streams.pairGateBatch(spark, idx, cidx, batch,
         "caption", maxHamming = 7, capMaxHamming = 7,
-        nBuckets = Dedup.hammingWideIndexBuckets(spark, idx),
-        capBuckets = Dedup.simhashWideIndexBuckets(spark, cidx),
         rejectBoilerplate = true)
         .select("media_id").as[Long].collect().sorted
       assert(decide() === Array(300L, 301L))
@@ -947,7 +941,7 @@ class StreamsSpec extends SparkSpec {
       Dedup.appendToSimhashWideIndex(
         Seq((300L, capNovel), (301L, capNovel)).toDF("media_id", "caption"),
         "media_id", "caption", maxHamming = 7,
-        nBuckets = Dedup.simhashWideIndexBuckets(spark, cidx), path = cidx)
+        path = cidx)
       assert(decide() === Array(300L, 301L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
@@ -1161,7 +1155,7 @@ class StreamsSpec extends SparkSpec {
       val mem = MemoryStream[Doc]
       // Compact every 2 micro-batches.
       val q = Streams.startDedupGateSink(mem.toDF(), idx, out, ckpt,
-        "doc_id", "text", nBuckets = 2, compactEvery = 2)
+        "doc_id", "text", compactEvery = 2)
       try {
         for (b <- 0 until 4) {
           mem.addData(Doc(10L + b, s"novel doc number $b"),
@@ -1181,7 +1175,7 @@ class StreamsSpec extends SparkSpec {
       assert(spark.read.parquet(out).count() === 8L)
       assert(Streams.dedupGateBatch(spark, idx,
         Seq(Doc(90L, "novel doc number 2"), Doc(91L, "brand new")).toDF(),
-        "doc_id", "text", 2)
+        "doc_id", "text")
         .select("doc_id").as[Long].collect().toSeq === Seq(91L))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
@@ -1325,7 +1319,7 @@ class StreamsSpec extends SparkSpec {
       // accepted row through the state grown across both processes.
       assert(Streams.dedupGateBatch(spark, cfg.exactIndexPath,
         Seq(DocVec(200L, "tern dove finch jay crow", e(60))).toDF(),
-        "doc_id", "text", 8).count() === 0L)
+        "doc_id", "text").count() === 0L)
       assert(Streams.nearDupGateBatch(spark, cfg.nearDupIndexPath,
         Seq(DocVec(201L, "crow jay finch dove tern", e(60))).toDF(),
         "doc_id", "text", 7).count() === 0L)

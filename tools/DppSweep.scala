@@ -90,8 +90,7 @@ object DppSweep {
       println(f"PROBE neardup nb=$nb build=$bs%.1f totalFiles=${totalFiles(path)}")
       probe(s"neardup nb=$nb", reps = 4)(
         Dedup.probeNearDupIndex(spark, path, deltaDocs, "doc_id", "text",
-          shingleK = 3, bands = 8, rowsPerBand = 2, nBuckets = nb,
-          threshold = 0.5))
+          shingleK = 3, bands = 8, rowsPerBand = 2, threshold = 0.5))
     }
 
     for (nb <- Seq(16, 64, 128)) {
@@ -102,7 +101,7 @@ object DppSweep {
       println(f"PROBE simhash nb=$nb build=$bs%.1f totalFiles=${totalFiles(path)}")
       probe(s"simhash nb=$nb", reps = 4)(
         Dedup.probeSimhashIndex(spark, path, deltaDocs, "doc_id", "text",
-          maxHamming = 8, nBuckets = nb))
+          maxHamming = 8))
     }
 
     // Wide (120-bit) simhash: 15-bit band keys — the family added to
@@ -116,7 +115,7 @@ object DppSweep {
       println(f"PROBE simw nb=$nb build=$bs%.1f totalFiles=${totalFiles(path)}")
       probe(s"simw nb=$nb", reps = 4)(
         Dedup.probeSimhashWideIndex(spark, path, deltaDocs, "doc_id", "text",
-          maxHamming = 7, nBuckets = nb))
+          maxHamming = 7))
     }
 
     for (planes <- Seq(6, 9, 12)) {
