@@ -1879,8 +1879,8 @@ object LlmQueries {
     // Streaming INGEST DEDUP GATE, batch parity: an arriving batch mixes
     // perturbed copies of corpus docs (whitespace/case noise — must be
     // REJECTED by normalized-text membership) with genuinely novel docs
-    // (suffixed text — must pass). The gate is the per-micro-batch body
-    // of [[graft.streaming.Streams.startDedupGateSink]]: a DPP-pruned
+    // (suffixed text — must pass). The gate is the corpus stage of
+    // [[graft.streaming.Streams.exactGate]]: a DPP-pruned
     // probe of the write-time exact-dup index + left-anti on the id.
     // StreamsSpec replays the same dataflow through MemoryStream,
     // including the cross-batch append that rejects a later duplicate of
@@ -1961,8 +1961,9 @@ object LlmQueries {
     // and must reject them; the exact case a 100 TB image ingest hits
     // first) with NOVEL images (shifted-id groups whose md5 salts are
     // unseen — accepted). The gate is the per-micro-batch corpus
-    // decision of [[graft.streaming.Streams.startImageGateSink]]: one
-    // delta decode, a DPP-pruned index probe, left-anti on the id.
+    // decision of [[graft.streaming.Streams.perceptualGate]] after
+    // `imageDecode`: one delta decode, a DPP-pruned index probe,
+    // left-anti on the id.
     // The oracle replays the full pixel→hash chain for BOTH id
     // domains (one parameterized chain definition), the shared wide
     // band slicing, and the NOT-EXISTS membership decision
@@ -2855,10 +2856,10 @@ object LlmQueries {
     // oracle is a FULL replay (train + threshold + score are all
     // integer-exact), not contract flags.
     // The drift MONITOR stage (batch semantics of the seventh ingest
-    // stage, startDriftMonitorSink): second-half events scored as
-    // per-bin PSI against the FROZEN first-half reference artifact —
-    // edges from the reference only, out-of-range arrivals clamped into
-    // edge bins (vs dq_psi_drift's pooled global edges).
+    // stage, the monitor of startIngestPipelineSink): second-half events
+    // scored as per-bin PSI against the FROZEN first-half reference
+    // artifact — edges from the reference only, out-of-range arrivals
+    // clamped into edge bins (vs dq_psi_drift's pooled global edges).
     "llm_stream_drift_monitor" -> Q(
       (s, dir) => {
         val fix = ensureDriftRef(s, dir)
@@ -3838,7 +3839,8 @@ object LlmQueries {
       }),
 
     // Streaming PII-REDACTION transform, batch parity: the per-micro-
-    // batch body of [[graft.streaming.Streams.startPiiRedactSink]] (the
+    // batch prepare step of
+    // [[graft.streaming.Streams.startIngestPipelineSink]] (the
     // sixth ingest stage — a stateless per-row transform, no index or
     // artifact) applied to an arriving batch that mixes PII-laden rows
     // (injected email/IP/phone, the llm_pii_redact fixture shifted out

@@ -849,7 +849,7 @@ object SourceQueries {
              |upper(split_part(s_name, '#', 1)) AS name_prefix FROM supplier""".stripMargin)),
 
     // Events: hourly rollup - the batch-parity twin of the streaming
-    // tumbling-window aggregation (graft.streaming.Streams.tumblingCounts).
+    // tumbling-window aggregation (graft.streaming.Streams.tumblingAgg).
     "events_hourly_agg" -> Q(
       (s, dir) => Tables.events(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 import graft.ops.Materialize
 
 /** Structured Streaming operators over the events stream.
@@ -250,29 +251,6 @@ object Streams {
       col("r_ts") <= col("l_ts") + expr(s"INTERVAL $horizon"))
   }
 
-  /** Streaming output mode for the window aggregations: Append emits each
-    * window once, when the watermark passes it — the mode a downstream
-    * exactly-once sink (parquet/Delta) wants.
-    */
-  val windowSinkMode: OutputMode = OutputMode.Append()
-
-  /** Exactly-once-ish parquet sink via foreachBatch: each micro-batch
-    * writes to a batchId-named subdirectory with overwrite, so a replayed
-    * batch (restart after failure between write and commit) lands in the
-    * same place instead of duplicating — idempotent writes + the
-    * checkpoint's offset tracking give end-to-end exactly-once for this
-    * layout. Readers scan `path` with a recursive glob.
-    */
-  def startParquetSink(df: DataFrame, path: String, checkpoint: String,
-                       mode: OutputMode = OutputMode.Append()) =
-    df.writeStream
-      .outputMode(mode)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-      }
-      .start()
-
   /** Streaming MERGE sink: each micro-batch upserts
     * ([[graft.ops.Scd.upsert]] semantics — replace on key, append new
     * keys) into a versioned parquet warehouse table.
@@ -305,7 +283,7 @@ object Streams {
     df.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
         val updates = seqCol match {
           case Some(sc) =>
@@ -341,8 +319,7 @@ object Streams {
   /** The current state of a [[startUpsertSink]] table: its max committed
     * version.
     */
-  def readUpserted(spark: org.apache.spark.sql.SparkSession,
-                   targetDir: String): DataFrame =
+  def readUpserted(spark: SparkSession, targetDir: String): DataFrame =
     latestVersion(spark, targetDir, below = None) match {
       case Some(v) => spark.read.parquet(s"$targetDir/v=$v")
       case None => throw new IllegalStateException(
@@ -352,8 +329,8 @@ object Streams {
   /** Max committed (`_SUCCESS`-marked) version id under `dir`, optionally
     * strictly below a bound (the replay case).
     */
-  private def latestVersion(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, below: Option[Long]): Option[Long] = {
+  private def latestVersion(spark: SparkSession, dir: String,
+                            below: Option[Long]): Option[Long] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) None
@@ -380,9 +357,8 @@ object Streams {
     * text is never re-read or re-hashed; at 100 TB the gate's cost is
     * the BATCH size, not the corpus size.
     */
-  def dedupGateBatch(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, batch: DataFrame, idCol: String,
-                     textCol: String,
+  def dedupGateBatch(spark: SparkSession, indexPath: String, batch: DataFrame,
+                     idCol: String, textCol: String,
                      staticPrune: Boolean = false): DataFrame = {
     val hits = graft.llm.Dedup
       .probeExactDupIndex(spark, indexPath, batch, idCol, textCol, staticPrune)
@@ -400,68 +376,15 @@ object Streams {
     * — the boilerplate/near-clone flood a real training-corpus ingest
     * actually sees. Same 100 TB property: cost is the BATCH size.
     */
-  def nearDupGateBatch(spark: org.apache.spark.sql.SparkSession,
-                       indexPath: String, batch: DataFrame, idCol: String,
-                       textCol: String, maxHamming: Int,
-                       staticPrune: Boolean = false): DataFrame = {
+  def nearDupGateBatch(spark: SparkSession, indexPath: String,
+                       batch: DataFrame, idCol: String, textCol: String,
+                       maxHamming: Int, staticPrune: Boolean = false): DataFrame = {
     val hits = graft.llm.Dedup
       .probeSimhashWideIndex(spark, indexPath, batch, idCol, textCol,
         maxHamming, staticPrune)
       .select(col("query_id").as(idCol)).distinct()
     batch.join(hits, Seq(idCol), "left_anti")
   }
-
-  /** Streaming NEAR-dup ingest gate: [[startDedupGateSink]] with
-    * [[nearDupGateBatch]] as the decision and the wide-simhash index as
-    * the growing membership state — accepted rows append their band
-    * rows, so a document accepted in batch N rejects its near-copies in
-    * batch N+1. The replay/exactly-once argument of the exact gate
-    * transfers verbatim: a replayed batch's self-matches are
-    * `cand_id == query_id` (excluded by the probe), duplicate index
-    * rows from a double-append only ever re-confirm the same id-distinct
-    * hits, and the output directory is batchId-idempotent.
-    *
-    * Intra-batch clones (a bursty ingest delivering mutually-near-dup
-    * rows in ONE micro-batch, which the corpus probe cannot see) are
-    * also gated: after the corpus decision, a banded
-    * [[graft.llm.Dedup.simhashWidePairs]] self-check over the
-    * corpus-accepted rows rejects every row that near-matches a
-    * SMALLER id in the same batch — deterministic keep-lowest-id,
-    * batch-sized work, replay-stable (the rule is a pure function of
-    * the batch). Chain caveat: in a path a~b~c with a !~ c, both b and
-    * c are rejected (c matched b even though b itself was dropped) —
-    * strictly more conservative than a sequential arrival, never less.
-    *
-    * `compactEvery` is the [[maybeCompactIndexes]] cadence.
-    */
-  def startNearDupGateSink(df: DataFrame, indexPath: String, outPath: String,
-                           checkpoint: String, idCol: String, textCol: String,
-                           maxHamming: Int, compactEvery: Int = 0) =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // Pin the batch FIRST: the static-prune probe's key collect is
-        // a second (column-pruned) pass over the batch plan — against
-        // pinned blocks it costs a re-scan, not a source replay.
-        val b = Materialize.pin(batch.toDF())
-        val corpusOk = nearDupGateBatch(spark, indexPath, b,
-          idCol, textCol, maxHamming, staticPrune = true)
-        // simhashWidePairs emits id_a < id_b, so id_b is always the
-        // larger member: dropping every id_b keeps the lowest id of
-        // each intra-batch near-dup group.
-        val intraDups = graft.llm.Dedup
-          .simhashWidePairs(corpusOk, idCol, textCol, maxHamming)
-          .select(col("id_b").as(idCol)).distinct()
-        val accepted = corpusOk.join(intraDups, Seq(idCol), "left_anti")
-          .transform(Materialize.pin)
-        accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        graft.llm.Dedup.appendToSimhashWideIndex(accepted, idCol, textCol,
-          maxHamming, indexPath)
-        maybeCompactIndexes(spark, Seq(indexPath), batchId, compactEvery)
-      }
-      .start()
 
   /** Bounded-small-files maintenance for the growing gate indexes:
     * every `every` micro-batches (after the batch's appends commit),
@@ -479,9 +402,8 @@ object Streams {
     * gate decisions never see them (probes are multiplicity-invariant),
     * and the cadence bounds the silent index growth they cause.
     */
-  private def maybeCompactIndexes(spark: org.apache.spark.sql.SparkSession,
-                                  indexPaths: Seq[String], batchId: Long,
-                                  every: Int): Unit =
+  private def maybeCompactIndexes(spark: SparkSession, indexPaths: Seq[String],
+                                  batchId: Long, every: Int): Unit =
     if (every > 0 && (batchId + 1) % every == 0)
       indexPaths.foreach(p => graft.llm.Dedup.compactIndex(spark, p))
 
@@ -499,8 +421,7 @@ object Streams {
     * once), never the corpus — corpus pixels were decoded once at
     * index build time.
     */
-  def imageGateBatch(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, batch: DataFrame,
+  def imageGateBatch(spark: SparkSession, indexPath: String, batch: DataFrame,
                      maxHamming: Int): DataFrame =
     perceptualGateBatch(spark, indexPath, batch, imageHashKernel, maxHamming)
 
@@ -512,8 +433,7 @@ object Streams {
     * clips. Catches re-uploaded and lightly-perturbed audio the same
     * way the image gate catches recompressed images.
     */
-  def audioGateBatch(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, batch: DataFrame,
+  def audioGateBatch(spark: SparkSession, indexPath: String, batch: DataFrame,
                      maxHamming: Int): DataFrame =
     perceptualGateBatch(spark, indexPath, batch, audioHashKernel, maxHamming)
 
@@ -531,17 +451,16 @@ object Streams {
     * later strided frames with the corpus copy, so the set probe
     * catches what first-frame hashing misses.
     */
-  def videoGateBatch(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, batch: DataFrame,
+  def videoGateBatch(spark: SparkSession, indexPath: String, batch: DataFrame,
                      maxHamming: Int): DataFrame =
     perceptualGateBatch(spark, indexPath, batch, videoHashKernel, maxHamming)
 
   /** The wide image-hash kernel as a (batch → two-word signature frame)
     * function — `(media_id, lo, hi)` with the standard column names the
-    * shared gate body expects.
+    * perceptual gates read.
     */
   private def imageHashKernel(batch: DataFrame): DataFrame = {
-    implicit val sp: org.apache.spark.sql.SparkSession = batch.sparkSession
+    implicit val sp: SparkSession = batch.sparkSession
     graft.llm.Multimodal.extractImageHashesWide(
       graft.llm.Multimodal.asMediaDataset(batch)).toDF()
       .select(col("media_id"), col("dhash").as("sig_lo"),
@@ -550,7 +469,7 @@ object Streams {
 
   /** The wide audio-fingerprint kernel in the same shape. */
   private def audioHashKernel(batch: DataFrame): DataFrame = {
-    implicit val sp: org.apache.spark.sql.SparkSession = batch.sparkSession
+    implicit val sp: SparkSession = batch.sparkSession
     graft.llm.Multimodal.extractAudioHashesWide(
       graft.llm.Multimodal.asMediaDataset(batch)).toDF()
       .select(col("media_id"), col("ehash").as("sig_lo"),
@@ -559,7 +478,7 @@ object Streams {
 
   /** The wide STRIDED video kernel: k=3 evenly-strided frame
     * signatures — deliberately MULTIPLE rows per media_id (the frame
-    * SET). The shared gate body is already set-shaped end to end: the
+    * SET). [[perceptualGate]] is set-shaped end to end: the
     * probe rejects on any in-budget row, the intra-batch pair scan
     * pairs any two frames of distinct videos, and the append persists
     * every accepted frame row (exactly the
@@ -568,7 +487,7 @@ object Streams {
     * builds).
     */
   private def videoHashKernel(batch: DataFrame): DataFrame = {
-    implicit val sp: org.apache.spark.sql.SparkSession = batch.sparkSession
+    implicit val sp: SparkSession = batch.sparkSession
     graft.llm.Multimodal.extractVideoFrameHashesStridedWide(
       graft.llm.Multimodal.asMediaDataset(batch), k = 3).toDF()
       .select(col("media_id"), col("dhash").as("sig_lo"),
@@ -581,9 +500,8 @@ object Streams {
     * share the (56, 54) two-word geometry, so one body serves every
     * modality.
     */
-  private def perceptualGateBatch(spark: org.apache.spark.sql.SparkSession,
-                                  indexPath: String, batch: DataFrame,
-                                  kernel: DataFrame => DataFrame,
+  private def perceptualGateBatch(spark: SparkSession, indexPath: String,
+                                  batch: DataFrame, kernel: DataFrame => DataFrame,
                                   maxHamming: Int): DataFrame = {
     // Decode-once, the SINK posture (round-19): pin the payload batch
     // (its source may be an expensive generator or a non-replayable
@@ -594,110 +512,24 @@ object Streams {
     // body evaluated the batch payload chain once per consumer (kernel,
     // probe double-pass, final anti-join).
     val b = Materialize.pin(batch)
-    val hashes = Materialize.pin(kernel(b))
-    val hits = graft.llm.Dedup.probeHammingWideIndex(spark, indexPath,
+    b.join(perceptualHits(spark, indexPath, Materialize.pin(kernel(b)),
+      maxHamming), Seq("media_id"), "left_anti")
+  }
+
+  /** The arriving media ids with a corpus member within `maxHamming` in
+    * a wide (56, 54) hamming index, probed with the static key prune.
+    */
+  private def perceptualHits(spark: SparkSession, indexPath: String,
+                             hashes: DataFrame, maxHamming: Int): DataFrame =
+    graft.llm.Dedup.probeHammingWideIndex(spark, indexPath,
       hashes, "media_id", "sig_lo", "sig_hi", nLoBits = 56,
       nHiBits = 54, maxHamming, staticPrune = true)
       .select(col("query_id").as("media_id")).distinct()
-    b.join(hits, Seq("media_id"), "left_anti")
-  }
 
-  /** Streaming PERCEPTUAL IMAGE ingest gate: [[startNearDupGateSink]]'s
-    * multimodal twin over the wide image-hash index. Each micro-batch
-    * decodes its payloads ONCE (the pinned wide-hash frame feeds the
-    * corpus probe, the intra-batch self-check, AND the index append —
-    * no re-decode anywhere), rejects rows whose hash is within
-    * `maxHamming` of the corpus, then rejects rows near-matching a
-    * SMALLER id in the same batch (deterministic keep-lowest-id — the
-    * same chain-conservative rule as the text gate), writes survivors
-    * batchId-idempotently, and appends their hashes so an image
-    * accepted in batch N rejects its near-copies in batch N+1. Replay
-    * safety transfers from the text gate verbatim: self-matches are
-    * excluded by id, duplicate index rows only re-confirm the same
-    * hits, and [[maybeCompactIndexes]] (`compactEvery`) repairs
-    * crash-replayed appends.
-    */
-  def startImageGateSink(df: DataFrame, indexPath: String, outPath: String,
-                         checkpoint: String, maxHamming: Int,
-                         compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startPerceptualGateSink(df, indexPath, outPath, checkpoint,
-      imageHashKernel, maxHamming, compactEvery)
-
-  /** [[startImageGateSink]]'s AUDIO twin — the same decode-once /
-    * corpus-probe / intra-batch keep-lowest-id / append lifecycle over
-    * the wide audio-fingerprint index. One shared body serves both
-    * modalities ([[startPerceptualGateSink]]); only the signature
-    * kernel differs.
-    */
-  def startAudioGateSink(df: DataFrame, indexPath: String, outPath: String,
-                         checkpoint: String, maxHamming: Int,
-                         compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startPerceptualGateSink(df, indexPath, outPath, checkpoint,
-      audioHashKernel, maxHamming, compactEvery)
-
-  /** [[startImageGateSink]]'s VIDEO twin — [[videoGateBatch]] as the
-    * corpus decision over the wide STRIDED frame-set index, on the
-    * shared perceptual sink body: decode once per micro-batch, probe
-    * (any in-budget frame pair rejects), intra-batch keep-lowest-id
-    * over the frame sets (two videos sharing ANY near-identical frame
-    * are batch-mates), batchId-idempotent write, then append the
-    * ACCEPTED videos' full frame sets so a video accepted in batch N
-    * rejects its re-uploads — including scrambled-first-frame
-    * re-encodes — in batch N+1. Closes the modality matrix: text,
-    * image, audio, and video each have hashes, a write-time index,
-    * clusters, probes, AND a streaming ingest gate.
-    */
-  def startVideoGateSink(df: DataFrame, indexPath: String, outPath: String,
-                         checkpoint: String, maxHamming: Int,
-                         compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startPerceptualGateSink(df, indexPath, outPath, checkpoint,
-      videoHashKernel, maxHamming, compactEvery)
-
-  private def startPerceptualGateSink(df: DataFrame, indexPath: String,
-                                      outPath: String, checkpoint: String,
-                                      kernel: DataFrame => DataFrame,
-                                      maxHamming: Int, compactEvery: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val hashes = Materialize.pin(kernel(batch.toDF()))
-        // staticPrune: the pinned hash frame defeats DPP's benefit
-        // heuristic (unknown size stats), so without it this probe
-        // reads the WHOLE index every micro-batch — see
-        // BandedIndex.probeJoinStatic. The pin makes the key-collect's
-        // re-scan of the batch ~free.
-        val corpusHits = graft.llm.Dedup.probeHammingWideIndex(spark,
-          indexPath, hashes, "media_id", "sig_lo", "sig_hi", nLoBits = 56,
-          nHiBits = 54, maxHamming, staticPrune = true)
-          .select(col("query_id").as("media_id")).distinct()
-        val corpusOk = hashes.join(corpusHits, Seq("media_id"), "left_anti")
-        // Wide pairs emit id_a < id_b: dropping every id_b keeps the
-        // lowest id of each intra-batch near-dup group.
-        val intraDups = graft.llm.Dedup.hammingNearDupPairsWide(corpusOk,
-          "media_id", "sig_lo", "sig_hi", nLoBits = 56, nHiBits = 54,
-          maxHamming)
-          .select(col("id_b").as("media_id")).distinct()
-        val acceptedHashes = corpusOk
-          .join(intraDups, Seq("media_id"), "left_anti")
-          .transform(Materialize.pin)
-        // distinct: a signature-SET kernel (strided video) carries one
-        // hash row per FRAME, and joining the raw id column would write
-        // each accepted video once per frame.
-        batch.toDF()
-          .join(acceptedHashes.select("media_id").distinct(), Seq("media_id"))
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        graft.llm.Dedup.appendToHammingWideIndex(acceptedHashes, "media_id",
-          "sig_lo", "sig_hi", nLoBits = 56, nHiBits = 54, maxHamming,
-          indexPath)
-        maybeCompactIndexes(spark, Seq(indexPath), batchId, compactEvery)
-      }
-      .start()
+  /** Near-dup pairs (`id_a < id_b`) of a wide (56, 54) signature frame. */
+  private def perceptualPairs(hashes: DataFrame, maxHamming: Int): DataFrame =
+    graft.llm.Dedup.hammingNearDupPairsWide(hashes, "media_id", "sig_lo",
+      "sig_hi", nLoBits = 56, nHiBits = 54, maxHamming)
 
   /** One micro-batch of the streaming CROSS-MODAL PAIR gate — the
     * ingest-time form of [[graft.llm.CrossModal.pairContamination]]:
@@ -741,27 +573,26 @@ object Streams {
     * reuse the SAME two probe hit sets; the flag only adds the second
     * anti-join, no new index reads.
     */
-  def pairGateBatch(spark: org.apache.spark.sql.SparkSession,
+  def pairGateBatch(spark: SparkSession,
                     imageIndexPath: String, captionIndexPath: String,
                     batch: DataFrame, captionCol: String, maxHamming: Int,
-                    capMaxHamming: Int, staticPrune: Boolean = true,
+                    capMaxHamming: Int,
                     rejectBoilerplate: Boolean = false): DataFrame = {
     // Decode-once, the SINK posture (round-19): the body consumes the
     // batch once per decision input (image kernel, caption probe —
     // itself a two-pass plan, batch-id domain, final anti-join), so an
     // un-pinned payload batch re-ran its source ~5x and the image
-    // decode once per probe pass. `staticPrune` now DEFAULTS true to
-    // match: the pinned frames defeat DPP's benefit heuristic, and
-    // without the static key prune both index probes read their whole
-    // layouts (see BandedIndex.probeJoinStatic). Decisions are
-    // plan-independent — same rows either way.
+    // decode once per probe pass. Both probes therefore run with the
+    // static key prune: the pinned frames defeat DPP's benefit
+    // heuristic, and without it both index probes read their whole
+    // layouts (see BandedIndex.probeJoinStatic).
     val b = Materialize.pin(batch)
     pairGateFromHashes(spark, imageIndexPath, captionIndexPath, b,
       Materialize.pin(imageHashKernel(b)), captionCol, maxHamming,
-      capMaxHamming, staticPrune, rejectBoilerplate)
+      capMaxHamming, rejectBoilerplate)
   }
 
-  /** [[pairGateBatch]] with the image signatures supplied (the sink's
+  /** [[pairGateBatch]] with the image signatures supplied ([[pairGate]]'s
     * decode-once path): image mates without a caption mate on the SAME
     * corpus pair flag the arrival (plus the inverse direction under
     * `rejectBoilerplate`).
@@ -776,125 +607,41 @@ object Streams {
     * batch) — exactly-once under replay for BOTH defect directions and
     * ANY append order, instead of relying on caption-before-image
     * ordering to keep one direction safe. Intra-batch pair defects are
-    * the sink's separate intra check, not the corpus decision's job.
+    * [[pairGate]]'s separate intra stage, not the corpus decision's job.
     */
-  private def pairGateFromHashes(spark: org.apache.spark.sql.SparkSession,
-                                 imageIndexPath: String,
+  private def pairGateFromHashes(spark: SparkSession, imageIndexPath: String,
                                  captionIndexPath: String, batch: DataFrame,
                                  hashes: DataFrame, captionCol: String,
                                  maxHamming: Int, capMaxHamming: Int,
-                                 staticPrune: Boolean,
-                                 rejectBoilerplate: Boolean = false): DataFrame = {
+                                 rejectBoilerplate: Boolean): DataFrame = {
     val batchIds = batch.select(col("media_id").as("cand_id")).distinct()
     val imgHits = graft.llm.Dedup.probeHammingWideIndex(spark,
       imageIndexPath, hashes, "media_id", "sig_lo", "sig_hi", nLoBits = 56,
-      nHiBits = 54, maxHamming, staticPrune = staticPrune)
+      nHiBits = 54, maxHamming, staticPrune = true)
       .select(col("query_id"), col("cand_id"))
       .join(broadcast(batchIds), Seq("cand_id"), "left_anti")
     val capHits = graft.llm.Dedup.probeSimhashWideIndex(spark,
       captionIndexPath, batch, "media_id", captionCol, capMaxHamming,
-      staticPrune = staticPrune)
+      staticPrune = true)
       .select(col("query_id"), col("cand_id"))
       .join(broadcast(batchIds), Seq("cand_id"), "left_anti")
-    val contaminated = imgHits.join(capHits, Seq("query_id", "cand_id"),
-      "left_anti")
-    val flagged =
-      (if (rejectBoilerplate)
-         contaminated.unionByName(
-           capHits.join(imgHits, Seq("query_id", "cand_id"), "left_anti"))
-       else contaminated)
-        .select(col("query_id").as("media_id")).distinct()
+    val flagged = pairDefects(imgHits, capHits, Seq("query_id", "cand_id"),
+      rejectBoilerplate).select(col("query_id").as("media_id")).distinct()
     batch.join(flagged, Seq("media_id"), "left_anti")
   }
 
-  /** Streaming CROSS-MODAL PAIR ingest gate: [[pairGateBatch]] as the
-    * corpus decision, both membership indexes growing with the
-    * accepted pairs — a pair accepted in batch N flags a contaminated
-    * re-upload of its image (same pixels, different caption) in batch
-    * N+1, including through the image's near-dup neighborhood.
-    *
-    * Per micro-batch: decode the images ONCE (pinned wide-hash frame
-    * feeds the corpus probe, the intra-batch check, AND the index
-    * append), reject rows whose image matches a corpus pair under a
-    * disagreeing caption, then reject rows whose image near-matches a
-    * SMALLER id in the same batch under a disagreeing caption
-    * (keep-lowest-id — the intra-batch form of the same defect, which
-    * no corpus probe can see), write survivors batchId-idempotently,
-    * and append their caption band rows THEN their image hashes.
-    *
-    * Replay safety rests on the BATCH-DOMAIN EXCLUSION in the corpus
-    * decision (see [[pairGateFromHashes]]): hits whose candidate is a
-    * row of the arriving batch itself — only possible through a
-    * crash-replayed half-append — are dropped, so a replayed batch
-    * computes exactly the original decisions in both defect
-    * directions, under either append order. The caption-before-image
-    * order is kept as defense in depth (caption-only partials cannot
-    * create an image hit even without the exclusion). Both probes run
-    * `staticPrune = true` (pinned batch frames defeat DPP — see
-    * [[graft.llm.BandedIndex.probeJoinStatic]]). The two indexes
-    * must share one pair-id domain — [[pairGateBatch]]'s contract.
-    *
-    * `rejectBoilerplate` arms the inverse defect direction
-    * ([[pairGateBatch]]'s flag) on the corpus decision AND its
-    * intra-batch twin: caption near-dup mates WITHIN the survivors
-    * whose images are NOT near-dups reject the larger id — the same
-    * keep-lowest-id rule, anti-join reversed.
+  /** The pair defects between an image-match set and a caption-match set
+    * keyed on `keys`: image agrees while the caption does not
+    * (contamination), plus under `rejectBoilerplate` caption agrees while
+    * the image does not.
     */
-  def startPairGateSink(df: DataFrame, imageIndexPath: String,
-                        captionIndexPath: String, outPath: String,
-                        checkpoint: String, captionCol: String,
-                        maxHamming: Int, capMaxHamming: Int,
-                        compactEvery: Int = 0,
-                        rejectBoilerplate: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = Materialize.pin(batch.toDF())
-        val hashes = Materialize.pin(imageHashKernel(b))
-        val corpusOk = pairGateFromHashes(spark, imageIndexPath,
-          captionIndexPath, b, hashes, captionCol, maxHamming,
-          capMaxHamming, staticPrune = true,
-          rejectBoilerplate = rejectBoilerplate)
-        // Intra-batch contamination: image near-dup pairs WITHIN the
-        // survivors whose captions disagree — image pairs from the
-        // pinned hashes, caption pairs from the batch text, the same
-        // (id_a, id_b) anti-join as the corpus decision. Keep-lowest-id
-        // (wide pairs emit id_a < id_b).
-        val okIds = corpusOk.select("media_id")
-        val imgPairs = graft.llm.Dedup.hammingNearDupPairsWide(
-          hashes.join(okIds, Seq("media_id")), "media_id", "sig_lo",
-          "sig_hi", nLoBits = 56, nHiBits = 54, maxHamming)
-          .select("id_a", "id_b")
-        val capPairs = graft.llm.Dedup.simhashWidePairs(
-          corpusOk.select(col("media_id"), col(captionCol)), "media_id",
-          captionCol, capMaxHamming)
-          .select("id_a", "id_b")
-        val contaminatedIntra = imgPairs.join(capPairs, Seq("id_a", "id_b"),
-          "left_anti")
-        val intraDups =
-          (if (rejectBoilerplate)
-             contaminatedIntra.unionByName(
-               capPairs.join(imgPairs, Seq("id_a", "id_b"), "left_anti"))
-           else contaminatedIntra)
-            .select(col("id_b").as("media_id")).distinct()
-        val accepted = corpusOk.join(intraDups, Seq("media_id"), "left_anti")
-          .transform(Materialize.pin)
-        accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        // Captions BEFORE images — see the replay argument above.
-        graft.llm.Dedup.appendToSimhashWideIndex(
-          accepted.select(col("media_id"), col(captionCol)), "media_id",
-          captionCol, capMaxHamming, captionIndexPath)
-        graft.llm.Dedup.appendToHammingWideIndex(
-          hashes.join(accepted.select("media_id"), Seq("media_id")),
-          "media_id", "sig_lo", "sig_hi", nLoBits = 56, nHiBits = 54,
-          maxHamming, imageIndexPath)
-        maybeCompactIndexes(spark, Seq(imageIndexPath, captionIndexPath),
-          batchId, compactEvery)
-      }
-      .start()
+  private def pairDefects(img: DataFrame, cap: DataFrame, keys: Seq[String],
+                          rejectBoilerplate: Boolean): DataFrame = {
+    val contaminated = img.join(cap, keys, "left_anti")
+    if (rejectBoilerplate)
+      contaminated.unionByName(cap.join(img, keys, "left_anti"))
+    else contaminated
+  }
 
   /** One micro-batch of the streaming SEMANTIC ingest gate: keep only
     * the batch rows whose embedding has NO corpus bucket-mate with
@@ -910,7 +657,7 @@ object Streams {
     * size times probed-bucket width, never the corpus.
     *
     * `probeTables` > 0 selects the MULTI-PROBE posture (round-18, the
-    * gate default at the sink level): membership is judged through
+    * [[semanticGate]] default): membership is judged through
     * [[graft.llm.Similarity.probeLshThresholdMultiProbe]] — each
     * arriving vector probes its exact bucket plus every Hamming-1
     * neighbor in the first `min(probeTables, numTables)` tables. The
@@ -923,7 +670,7 @@ object Streams {
     * layout posture — right when the layout already paid t(p) tables
     * and probe latency dominates).
     */
-  def semanticGateBatch(spark: org.apache.spark.sql.SparkSession,
+  def semanticGateBatch(spark: SparkSession,
                         indexPath: String, batch: DataFrame, idCol: String,
                         vecCol: String, threshold: Double, numPlanes: Int,
                         numTables: Int, staticPrune: Boolean = false,
@@ -948,8 +695,7 @@ object Streams {
     * keeps the lowest id of each intra-batch semantic-dup group,
     * deterministic and replay-stable (a pure function of the batch).
     * Batch-sized work: candidates form only inside shared buckets,
-    * never all-pairs. Shared by [[startSemanticGateSink]] and the
-    * composed [[startIngestPipelineSink]].
+    * never all-pairs. The intra stage of [[semanticGate]].
     *
     * `probeTables` > 0 mirrors the corpus probe's MULTI-PROBE posture
     * on the intra check: one side's buckets expand to their Hamming-1
@@ -960,7 +706,7 @@ object Streams {
     * [[graft.llm.Similarity.MultiProbeTables]]-table layout. 0 = the
     * exact-bucket check over all tables.
     */
-  def semanticIntraBatchDups(df: DataFrame, idCol: String, vecCol: String,
+  private def semanticIntraBatchDups(df: DataFrame, idCol: String, vecCol: String,
                              threshold: Double, numPlanes: Int,
                              numTables: Int,
                              probeTables: Int = 0): DataFrame = {
@@ -991,250 +737,246 @@ object Streams {
       .select(col("id_b").as(idCol)).distinct()
   }
 
-  /** Streaming SEMANTIC ingest gate: [[startDedupGateSink]] with
-    * [[semanticGateBatch]] as the decision and the LSH hyperplane index
-    * as the growing membership state — accepted rows append their
-    * bucket rows ([[graft.llm.Similarity.appendToLshIndex]]), so a
-    * vector accepted in batch N rejects its paraphrase-copies in batch
-    * N+1. Replay/exactly-once transfers from the exact gate verbatim
-    * (self-matches excluded by id, double-appends only re-confirm the
-    * same id-distinct hits, batchId-idempotent output directory).
+  /** A named batch step: a survivors->survivors stage of a [[Gate]], or
+    * the prepare step of [[startGateSink]].
+    */
+  type Stage = (String, DataFrame => DataFrame)
+
+  /** One gate of [[startGateSink]], three parts: its stages (the corpus
+    * decision, then for membership gates the keep-lowest-id INTRA-batch
+    * check of the same relation, which no corpus probe can see because
+    * neither row is a member until the batch commits), the append that
+    * grows its indexes with the batch's accepted rows, and the index
+    * paths the `compactEvery` cadence rewrites. The frozen-artifact
+    * gates append nothing. Every stage takes its session from the frame
+    * it gates, the stream's own.
     *
-    * Intra-batch semantic clones are gated like the near-dup sink's:
-    * after the corpus decision, bucket-mate pairs WITHIN the accepted
-    * set (any shared table bucket, exact cosine >= threshold) reject
-    * every row matching a smaller id — deterministic keep-lowest-id,
-    * batch-sized, replay-stable. Same chain caveat as there.
+    * Exactly-once on replay, for every membership gate: if the process
+    * crashes AFTER the append but before the checkpoint commit, the
+    * replayed batch re-probes an index that already holds its own rows —
+    * a row's match with its own appended copy has `cand_id == query_id`,
+    * which every probe excludes, so the replay makes the same decisions.
+    * The double-append leaves duplicate index rows; probes stay correct
+    * because hits are id-distinct, and compaction drops them
+    * ([[maybeCompactIndexes]]). The intra checks are pure functions of
+    * the batch. Chain caveat of keep-lowest-id: in a path a~b~c with
+    * a !~ c, both b and c are rejected — strictly more conservative than
+    * a sequential arrival, never less.
+    */
+  final case class Gate(stages: Seq[Stage], append: DataFrame => Unit = _ => (),
+                        indexPaths: Seq[String] = Nil)
+
+  /** The EXACT-dup gate: [[dedupGateBatch]] membership in the write-time
+    * exact index ([[graft.llm.Dedup.writeExactDupIndex]]), then
+    * keep-lowest-id per normalized text hash within the batch. Accepted
+    * rows append to the index, so a document accepted in batch N rejects
+    * its copies in batch N+1 even under different ids.
+    */
+  def exactGate(indexPath: String, idCol: String, textCol: String): Gate =
+    Gate(Seq(
+      // staticPrune on every membership stage: stage inputs are PINNED
+      // survivor frames (unknown size stats), which silently disables
+      // DPP on the index probes — see BandedIndex.probeJoinStatic.
+      ("exact", df => dedupGateBatch(df.sparkSession, indexPath, df, idCol,
+        textCol, staticPrune = true)),
+      ("exact_intra", df => df.join(
+        df.select(col(idCol),
+            md5(graft.llm.TextOps.normalize(col(textCol))).as("__h"))
+          .groupBy(col("__h")).agg(min(col(idCol)).as(idCol))
+          .select(col(idCol)),
+        Seq(idCol), "left_semi"))),
+      graft.llm.Dedup.appendToExactDupIndex(_, idCol, textCol, indexPath),
+      Seq(indexPath))
+
+  /** The NEAR-dup gate: [[nearDupGateBatch]] membership in the
+    * wide-simhash index (lightly-edited copies), then a banded
+    * [[graft.llm.Dedup.simhashWidePairs]] self-check rejecting every row
+    * that near-matches a smaller id of the same batch. Accepted rows
+    * append their band rows.
+    */
+  def nearDupGate(indexPath: String, idCol: String, textCol: String,
+                  maxHamming: Int): Gate =
+    Gate(Seq(
+      ("near", df => nearDupGateBatch(df.sparkSession, indexPath, df, idCol,
+        textCol, maxHamming, staticPrune = true)),
+      // simhashWidePairs emits id_a < id_b; dropping every id_b keeps the
+      // lowest id of each intra-batch near-dup group.
+      ("near_intra", df => df.join(
+        graft.llm.Dedup.simhashWidePairs(df, idCol, textCol, maxHamming)
+          .select(col("id_b").as(idCol)).distinct(),
+        Seq(idCol), "left_anti"))),
+      graft.llm.Dedup.appendToSimhashWideIndex(_, idCol, textCol, maxHamming,
+        indexPath),
+      Seq(indexPath))
+
+  /** The SEMANTIC gate: [[semanticGateBatch]] membership in the LSH
+    * hyperplane index (paraphrases), then [[semanticIntraBatchDups]]
+    * within the batch. Accepted rows append their bucket rows
+    * ([[graft.llm.Similarity.appendToLshIndex]]).
     *
     * POSTURE (round-18): the gate defaults to MULTI-PROBE membership
-    * (`probeTables` = [[graft.llm.Similarity.MultiProbeTables]],
-    * clamped to the layout's table count) — the ingest path should
-    * write its LSH layout at [[graft.llm.Similarity.MultiProbeTables]]
-    * tables (`writeLshIndexAuto(..., numTables =
-    * Similarity.MultiProbeTables)`) and hold the recall contract by
-    * Hamming-1 probe expansion instead of t(p) table storage: the
-    * membership index GROWS with the corpus (every accepted row
-    * appends `numTables` rows), so at 100 TB its storage — not the
-    * batch-sized probe width — is the binding cost, and ×1 storage at
-    * probe width ×(p+1) beats ×t(p) storage at exact-bucket width
-    * (measured: `llm_lsh_multiprobe_recall` 1.0/1.0/0.9955 across
-    * three decades, FASTER than the exact-bucket probe at sf1/sf10).
-    * Pass `probeTables = 0` for the exact-bucket posture over a
-    * compensated t(p)-table layout.
+    * (`probeTables` = [[graft.llm.Similarity.MultiProbeTables]], clamped
+    * to the layout's table count) over a layout written at that many
+    * tables: the membership index GROWS with the corpus, so its storage,
+    * not the batch-sized probe width, is the binding cost (measured:
+    * `llm_lsh_multiprobe_recall` 1.0/1.0/0.9955 across three decades).
+    * `probeTables = 0` is the exact-bucket posture over a compensated
+    * t(p)-table layout.
+    *
+    * POSTURE GUARD (round-19): membership semantics are a (layout, probe)
+    * PAIR, so building the gate resolves the layout's table count from
+    * its sidecar through `spark` (a driver-side read, no Spark job) and
+    * logs the posture in effect. A multi-probe posture over a layout
+    * with more tables than the multi-probe write posture uses is loud:
+    * that width is the compensated layout's, and prefix-probing it
+    * changes accept/reject decisions mid-stream.
     */
-  def startSemanticGateSink(df: DataFrame, indexPath: String, outPath: String,
-                            checkpoint: String, idCol: String, vecCol: String,
-                            threshold: Double, numPlanes: Int,
-                            numTables: Int, compactEvery: Int = 0,
-                            probeTables: Int =
-                              graft.llm.Similarity.MultiProbeTables) = {
-    // POSTURE GUARD (round-19, advisor): membership semantics are a
-    // (layout, probe) PAIR. A stream restarting from its checkpoint
-    // after a default change must not silently switch decision
-    // semantics, so the posture actually in effect is resolved against
-    // the layout's sidecar ONCE at sink start and logged; a multi-probe
-    // posture over a layout with MORE tables than the multi-probe
-    // write posture uses is loud — that layout shape is the
-    // compensated-t(p) one, written to be probed exact-bucket over ALL
-    // its tables, and prefix-probing it changes accept/reject
-    // decisions mid-stream.
-    val layoutTables = graft.llm.Similarity.lshIndexTables(df.sparkSession,
-      indexPath)
+  def semanticGate(spark: SparkSession, indexPath: String, idCol: String,
+                   vecCol: String, threshold: Double, numPlanes: Int,
+                   numTables: Int,
+                   probeTables: Int = graft.llm.Similarity.MultiProbeTables)
+      : Gate = {
+    val layoutTables = graft.llm.Similarity.lshIndexTables(spark, indexPath)
     if (probeTables > 0) {
       streamLog.info(s"semantic gate posture at $indexPath: MULTI-PROBE " +
         s"over ${math.min(probeTables, numTables)} of $layoutTables " +
         "layout tables (Hamming-1 bucket expansion)")
       if (layoutTables > graft.llm.Similarity.MultiProbeTables)
         streamLog.warn(s"semantic gate at $indexPath: multi-probe posture " +
-          s"(probeTables=$probeTables) over a $layoutTables-table layout - " +
-          "that width is the COMPENSATED layout's, built for the " +
-          "exact-bucket posture (probeTables = 0); a prefix probe of it " +
-          "holds recall but changes membership decisions vs the posture " +
-          "the layout was written for. Pass probeTables = 0 to keep the " +
-          "layout's own posture, or rebuild the layout at " +
-          s"${graft.llm.Similarity.MultiProbeTables} tables.")
+          s"(probeTables=$probeTables) over a $layoutTables-table layout, the " +
+          "COMPENSATED width built for probeTables = 0: a prefix probe changes " +
+          "its membership decisions. Pass probeTables = 0, or rebuild the " +
+          s"layout at ${graft.llm.Similarity.MultiProbeTables} tables.")
     } else
       streamLog.info(s"semantic gate posture at $indexPath: EXACT-BUCKET " +
         s"over all $layoutTables layout tables")
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // Batch pinned first — see startNearDupGateSink's note.
-        val corpusOk = semanticGateBatch(spark, indexPath,
-          Materialize.pin(batch.toDF()),
-          idCol, vecCol, threshold, numPlanes, numTables, staticPrune = true,
-          probeTables = probeTables)
-          .transform(Materialize.pin)
-        val accepted = corpusOk
-          .join(semanticIntraBatchDups(corpusOk, idCol, vecCol, threshold,
-            numPlanes, numTables, probeTables = probeTables),
-            Seq(idCol), "left_anti")
-          .transform(Materialize.pin)
-        accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        graft.llm.Similarity.appendToLshIndex(accepted, idCol, vecCol,
-          numPlanes, numTables, indexPath)
-        maybeCompactIndexes(spark, Seq(indexPath), batchId, compactEvery)
-      }
-      .start()
+    Gate(Seq(
+      ("semantic", df => semanticGateBatch(df.sparkSession, indexPath, df,
+        idCol, vecCol, threshold, numPlanes, numTables, staticPrune = true,
+        probeTables = probeTables)),
+      ("semantic_intra", df => df.join(
+        semanticIntraBatchDups(df, idCol, vecCol, threshold, numPlanes,
+          numTables, probeTables = probeTables),
+        Seq(idCol), "left_anti"))),
+      graft.llm.Similarity.appendToLshIndex(_, idCol, vecCol, numPlanes,
+        numTables, indexPath),
+      Seq(indexPath))
   }
 
-  /** Streaming ingest dedup gate: each micro-batch is gated through
-    * [[dedupGateBatch]], accepted rows land in a batchId-named parquet
-    * subdirectory (the [[startParquetSink]] idempotent layout) AND are
-    * appended to the index — so a document accepted in batch N rejects
-    * its duplicates in batch N+1 even under different ids. This is the
-    * write-path of a training-corpus ingest: the dedup index grows with
-    * the corpus and every arriving batch pays only its own hash + a
-    * pruned probe.
-    *
-    * Exactly-once on replay: if the process crashes AFTER the append
-    * but before the checkpoint commit, the replayed batch re-probes an
-    * index that already contains its own rows — but a row's match with
-    * its own appended copy has `cand_id == query_id`, which the probe
-    * excludes, so the replay accepts the same rows and overwrites the
-    * same directory. The double-append leaves duplicate index rows
-    * (same id, same hash); probes stay correct because hits are
-    * id-distinct, and a compaction rewrite can drop them any time.
-    *
-    * Intra-BATCH duplicates (two novel near-identical rows arriving in
-    * one micro-batch) are upstream's job — compose with watermark dedup
-    * or [[graft.llm.Dedup.exactDedup]] inside the source select; the
-    * gate defines membership against the CORPUS, which cannot see
-    * either row until the batch commits.
+  /** The QUALITY gate, the CCNet perplexity filter: only documents with
+    * no LM-unseen bigram scoring at or below the stored mean-surprisal
+    * threshold of the FROZEN Kneser–Ney artifact
+    * ([[graft.llm.TextAnalysis.knGateBatch]]) pass. Stateless per batch:
+    * accepted rows must NOT shift the bar mid-stream, so the decision is
+    * a pure function of (artifact, batch).
     */
-  def startDedupGateSink(df: DataFrame, indexPath: String, outPath: String,
-                         checkpoint: String, idCol: String, textCol: String,
-                         compactEvery: Int = 0) =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // Pin the gate decision BEFORE the append mutates the index a
-        // lazy plan would re-read. staticPrune: a streaming batch frame
-        // reports unknown size stats, so DPP's benefit heuristic would
-        // reject and the probe would read the whole index (see
-        // BandedIndex.probeJoinStatic). The batch itself is pinned too,
-        // so the probe's key-collect pass reads pinned blocks.
-        val accepted = dedupGateBatch(spark, indexPath,
-          Materialize.pin(batch.toDF()),
-          idCol, textCol, staticPrune = true)
-          .transform(Materialize.pin)
-        accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        graft.llm.Dedup.appendToExactDupIndex(accepted, idCol, textCol,
-          indexPath)
-        maybeCompactIndexes(spark, Seq(indexPath), batchId, compactEvery)
-      }
-      .start()
+  def qualityGate(lmPath: String, idCol: String, textCol: String): Gate =
+    Gate(Seq(("kn", df => graft.llm.TextAnalysis.knGateBatch(df.sparkSession,
+      lmPath, df, idCol, textCol))))
 
-  /** Streaming QUALITY ingest gate — the CCNet perplexity filter as the
-    * fourth gate: every micro-batch is scored against the FROZEN
-    * Kneser–Ney LM artifact ([[graft.llm.TextAnalysis.writeKnLm]]) and
-    * only documents that (a) contain no LM-unseen bigram and (b) score
-    * at or below the artifact's stored mean-surprisal threshold land in
-    * the batchId-named output directory. Unlike the three membership
-    * gates, the state here is deliberately STATELESS-per-batch: the
-    * reference LM is a versioned artifact and accepted rows must NOT
-    * shift the acceptance bar mid-stream (quality drift would otherwise
-    * feed back into the filter — the CCNet posture). Replay is
-    * therefore trivially exactly-once: the decision is a pure function
-    * of (artifact, batch), and the overwrite of the same batch_id
-    * directory is idempotent.
+  /** The TRAINED-CLASSIFIER gate: only documents with a positive logit
+    * under the FROZEN [[graft.llm.Curation.writeQualityClassifier]]
+    * artifact pass ([[graft.llm.Curation.clfGateBatch]]); stateless per
+    * batch like [[qualityGate]]. The LM scores fluency against a
+    * reference corpus; the classifier scores membership of a LABELED
+    * reference class.
     */
-  def startQualityGateSink(df: DataFrame, lmPath: String, outPath: String,
-                           checkpoint: String, idCol: String,
-                           textCol: String) =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.llm.TextAnalysis.knGateBatch(spark, lmPath, batch.toDF(),
-          idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-      }
-      .start()
+  def classifierGate(modelPath: String, idCol: String, textCol: String): Gate =
+    Gate(Seq(("clf", df => df.join(
+      graft.llm.Curation.clfGateBatch(df.sparkSession, modelPath, df, idCol,
+        textCol).select(col(idCol)),
+      Seq(idCol), "left_semi"))))
 
-  /** Streaming TRAINED-CLASSIFIER ingest gate — the fifth gate: every
-    * micro-batch is scored against a FROZEN
-    * [[graft.llm.Curation.writeQualityClassifier]] artifact and only
-    * documents with a positive logit land in the batchId-named output
-    * directory. Same posture as the KN quality gate: the model is a
-    * versioned artifact, the decision is stateless per batch (a pure
-    * integer-exact function of artifact + batch), and replay is
-    * trivially exactly-once via the idempotent per-batch overwrite.
-    * The two quality gates are complementary filters: the LM scores
-    * fluency against a reference corpus; the classifier scores
-    * membership of a LABELED reference class.
+  /** The signature-decode prepare steps of the media gates: each payload
+    * (the [[graft.llm.Multimodal.MediaRecord]] columns) decodes ONCE into
+    * a `sigs` array of its wide (sig_lo, sig_hi) signatures — one per
+    * image or audio clip, the k=3 strided frame SET per video — carried
+    * on its record row. The pinned prepared frame feeds every probe,
+    * intra check and append with no re-decode, and survivors land one
+    * row per media_id. Pair each with a gate whose index the same kernel
+    * built.
     */
-  def startClassifierGateSink(df: DataFrame, modelPath: String,
-                              outPath: String, checkpoint: String,
-                              idCol: String, textCol: String) =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.llm.Curation.clfGateBatch(spark, modelPath, batch.toDF(),
-          idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-      }
-      .start()
+  val imageDecode: Stage = ("decode", withSignatures(imageHashKernel))
+  val audioDecode: Stage = ("decode", withSignatures(audioHashKernel))
+  val videoDecode: Stage = ("decode", withSignatures(videoHashKernel))
 
-  /** Streaming PII-REDACTION transform — the scrub an ingest pipeline
-    * runs BEFORE persisting anything: every micro-batch passes through
-    * [[graft.llm.TextAnalysis.redactPii]] (typed placeholder tokens +
-    * per-type counts) and the redacted rows land in the batchId-named
-    * output directory; raw PII never reaches the sink. Unlike the
-    * membership gates this is a pure per-row TRANSFORM: no index, no
-    * artifact, no state — the narrowest of the six ingest stages — so
-    * replay is trivially exactly-once (the decision is a pure function
-    * of the batch, and the per-batch overwrite is idempotent). Composes
-    * BEFORE the gates: dedup/quality membership should be judged on the
-    * redacted text a leaked row would actually train on.
-    */
-  def startPiiRedactSink(df: DataFrame, outPath: String, checkpoint: String,
-                         idCol: String, textCol: String) =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.llm.TextAnalysis.redactPii(batch.toDF(), idCol, textCol)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-      }
-      .start()
+  private def withSignatures(kernel: DataFrame => DataFrame)
+      : DataFrame => DataFrame = batch =>
+    batch.join(kernel(batch).groupBy("media_id")
+      .agg(collect_list(struct(col("sig_lo"), col("sig_hi"))).as("sigs")),
+      Seq("media_id"))
 
-  /** Streaming DRIFT MONITOR — the observability stage of the ingest
-    * pipeline (seventh stage; the six others decide what lands, this
-    * one watches WHAT is arriving): every micro-batch's value
-    * distribution is scored as per-bin PSI contributions against the
-    * FROZEN [[graft.ops.Checks.writeDriftReference]] artifact, and the
-    * nBins-row report lands in the batchId-named directory for the
-    * alerting consumer (Σ psi_micro ≥ 250000 is the conventional
-    * "major shift" alarm). Same posture as the quality gates: the
-    * reference is a versioned artifact so drift can never move its own
-    * yardstick; the report is a pure function of (artifact, batch), so
-    * replay is trivially exactly-once via the idempotent per-batch
-    * overwrite. A monitor, not a gate — it never drops rows, so it
-    * rides alongside the filtering stages, not in front of them.
+  /** The (media_id, sig_lo, sig_hi) rows of a decoded frame's `sigs`. */
+  private def signatureRows(df: DataFrame): DataFrame =
+    df.select(col("media_id"), explode(col("sigs")).as("s"))
+      .select(col("media_id"), col("s.sig_lo").as("sig_lo"),
+        col("s.sig_hi").as("sig_hi"))
+
+  /** The PERCEPTUAL gate of every media modality (after [[imageDecode]],
+    * [[audioDecode]] or [[videoDecode]]): a record is rejected when any
+    * of its signatures is within `maxHamming` of a corpus row of the wide
+    * hamming index, then when any is within `maxHamming` of a smaller id
+    * of the same batch (two videos sharing ANY near-identical frame are
+    * batch-mates). Accepted records append every signature row, so a
+    * video accepted in batch N rejects its re-uploads in batch N+1 —
+    * scrambled-first-frame re-encodes included, through the later
+    * strided frames.
     */
-  def startDriftMonitorSink(df: DataFrame, refPath: String, outPath: String,
-                            checkpoint: String, valueCol: String) =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Checks.psiAgainstReference(batch.sparkSession, refPath,
-            batch.toDF(), valueCol)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-      }
-      .start()
+  def perceptualGate(indexPath: String, maxHamming: Int): Gate =
+    Gate(Seq(
+      ("perceptual", df => df.join(perceptualHits(df.sparkSession, indexPath,
+        signatureRows(df), maxHamming), Seq("media_id"), "left_anti")),
+      // Wide pairs emit id_a < id_b: dropping every id_b keeps the lowest
+      // id of each intra-batch near-dup group.
+      ("perceptual_intra", df => df.join(
+        perceptualPairs(signatureRows(df), maxHamming)
+          .select(col("id_b").as("media_id")).distinct(),
+        Seq("media_id"), "left_anti"))),
+      acc => graft.llm.Dedup.appendToHammingWideIndex(signatureRows(acc),
+        "media_id", "sig_lo", "sig_hi", nLoBits = 56, nHiBits = 54,
+        maxHamming, indexPath),
+      Seq(indexPath))
+
+  /** The CROSS-MODAL PAIR gate (after [[imageDecode]]; records also
+    * carry `captionCol`): [[pairGateBatch]]'s corpus decision, then its
+    * intra-batch twin — image near-dup pairs WITHIN the survivors whose
+    * captions disagree (and, under `rejectBoilerplate`, caption mates
+    * whose images do not) reject the larger id. Accepted pairs append
+    * their caption band rows THEN their image signatures: the
+    * batch-domain exclusion of [[pairGateFromHashes]] already makes a
+    * replay's decisions independent of a half-append, and the order is
+    * kept as defense in depth. Both indexes share one pair-id domain —
+    * [[pairGateBatch]]'s contract.
+    */
+  def pairGate(imageIndexPath: String, captionIndexPath: String,
+               captionCol: String, maxHamming: Int, capMaxHamming: Int,
+               rejectBoilerplate: Boolean = false): Gate =
+    Gate(Seq(
+      ("pair", df => pairGateFromHashes(df.sparkSession, imageIndexPath,
+        captionIndexPath, df, signatureRows(df), captionCol, maxHamming,
+        capMaxHamming, rejectBoilerplate)),
+      ("pair_intra", df => df.join(
+        pairDefects(
+          perceptualPairs(signatureRows(df), maxHamming).select("id_a", "id_b"),
+          graft.llm.Dedup.simhashWidePairs(
+            df.select(col("media_id"), col(captionCol)), "media_id",
+            captionCol, capMaxHamming).select("id_a", "id_b"),
+          Seq("id_a", "id_b"), rejectBoilerplate)
+          .select(col("id_b").as("media_id")).distinct(),
+        Seq("media_id"), "left_anti"))),
+      acc => {
+        graft.llm.Dedup.appendToSimhashWideIndex(
+          acc.select(col("media_id"), col(captionCol)), "media_id",
+          captionCol, capMaxHamming, captionIndexPath)
+        graft.llm.Dedup.appendToHammingWideIndex(signatureRows(acc),
+          "media_id", "sig_lo", "sig_hi", nLoBits = 56, nHiBits = 54,
+          maxHamming, imageIndexPath)
+      },
+      Seq(imageIndexPath, captionIndexPath))
 
   /** The artifact/index paths of the COMPOSED ingest pipeline — one
-    * value so the batch body, the sink, and the tests name the seven
-    * stages' state identically.
+    * value so the sink, the audit, and the tests name the seven stages'
+    * state identically.
     */
   final case class IngestPipelineConfig(
       exactIndexPath: String, nearDupIndexPath: String, semIndexPath: String,
@@ -1244,8 +986,8 @@ object Streams {
       // Semantic-stage posture (round-18): > 0 = MULTI-PROBE membership
       // over the first min(semProbeTables, numTables) tables — the
       // default, paired with a Similarity.MultiProbeTables-table layout
-      // (see startSemanticGateSink's posture note); 0 = exact-bucket
-      // over all numTables tables (the compensated-layout posture).
+      // (see semanticGate's posture note); 0 = exact-bucket over all
+      // numTables tables (the compensated-layout posture).
       semProbeTables: Int = graft.llm.Similarity.MultiProbeTables)
 
   /** Redact `textCol` in place, carrying `vecCol` through — the frame
@@ -1257,78 +999,43 @@ object Streams {
       .select(col(idCol), col("redacted").as(textCol))
       .join(batch.select(col(idCol), col(vecCol)), Seq(idCol))
 
-  /** The named decision stages of the composed ingest pipeline, each a
-    * survivors->survivors function over the redacted
-    * (idCol, textCol, vecCol) frame — one definition shared by
+  /** The gates of the composed ingest pipeline, over the redacted
+    * (idCol, textCol, vecCol) frame — one list shared by
     * [[startIngestPipelineSink]] (fold to the accepted set) and
     * [[ingestPipelineTrace]] (per-stage rejection audit). After PII
     * redaction ([[graft.llm.TextAnalysis.redactPii]] — every stage judges
     * the redacted text a leaked row would actually train on), in
-    * contract order:
-    *
-    *   1. exact-dup gate ([[dedupGateBatch]]) — verbatim (normalized)
-    *      corpus membership.
-    *   2. near-dup gate ([[nearDupGateBatch]]) — wide-simhash hamming
-    *      membership (lightly-edited copies).
-    *   3. semantic gate ([[semanticGateBatch]]) — embedding-cosine
-    *      membership (paraphrases).
-    *   4. quality gate ([[graft.llm.TextAnalysis.knGateBatch]]) — the
-    *      frozen KN-LM fluency filter.
-    *   5. classifier gate ([[graft.llm.Curation.clfGateBatch]]) — the
-    *      frozen trained-quality filter.
+    * contract order: [[exactGate]] (verbatim normalized copies),
+    * [[nearDupGate]] (lightly-edited copies), [[semanticGate]]
+    * (paraphrases), [[qualityGate]] (the frozen KN-LM fluency filter)
+    * and [[classifierGate]] (the frozen trained-quality filter).
     *
     * The membership gates run cheapest-first (an exact hash probe
     * rejects for free what the LSH probe would pay buckets for), each
-    * followed by the matching INTRA-batch self-check of its component
-    * sink — keep-lowest-id exact normalized-hash self-dedup,
-    * [[graft.llm.Dedup.simhashWidePairs]], and [[semanticIntraBatchDups]]
-    * — so mutually-duplicate rows arriving in ONE micro-batch (which no
-    * corpus probe can see) are gated exactly as the component sinks gate
-    * them: the composition is decision-equivalent to chaining the
-    * sinks, not weaker. `kn`/`clf` are stateless per-row and need no
-    * intra check. Every stage stays batch-sized at any corpus scale.
+    * with its intra-batch check, so the composition gates mutually
+    * duplicate rows of ONE micro-batch exactly as each gate alone does.
+    * Every stage stays batch-sized at any corpus scale.
+    *
+    * The start-time sidecar checks run here: `cfg.nBucketsExact` against
+    * the exact index's sidecar (a config naming another width fails
+    * instead of being silently ignored — every probe and append reads
+    * the sidecar's width) and the semantic posture guard.
     */
-  private def ingestStages(spark: org.apache.spark.sql.SparkSession,
-                           cfg: IngestPipelineConfig, idCol: String,
-                           textCol: String, vecCol: String)
-      : Seq[(String, DataFrame => DataFrame)] = Seq(
-    // staticPrune on every membership stage: stage inputs are PINNED
-    // survivor frames (unknown size stats), which silently disables
-    // DPP on the index probes — see BandedIndex.probeJoinStatic.
-    "exact" -> ((df: DataFrame) => dedupGateBatch(spark, cfg.exactIndexPath,
-      df, idCol, textCol, staticPrune = true)),
-    // Keep-lowest-id per normalized text hash WITHIN the batch — the
-    // upstream-dedup job startDedupGateSink documents, done here so the
-    // composition is self-contained.
-    "exact_intra" -> ((df: DataFrame) => df.join(
-      df.select(col(idCol),
-          md5(graft.llm.TextOps.normalize(col(textCol))).as("__h"))
-        .groupBy(col("__h")).agg(min(col(idCol)).as(idCol))
-        .select(col(idCol)),
-      Seq(idCol), "left_semi")),
-    "near" -> ((df: DataFrame) => nearDupGateBatch(spark,
-      cfg.nearDupIndexPath, df, idCol, textCol, cfg.maxHamming,
-      staticPrune = true)),
-    // simhashWidePairs emits id_a < id_b; dropping every id_b keeps the
-    // lowest id of each intra-batch near-dup group.
-    "near_intra" -> ((df: DataFrame) => df.join(
-      graft.llm.Dedup.simhashWidePairs(df, idCol, textCol, cfg.maxHamming)
-        .select(col("id_b").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")),
-    "semantic" -> ((df: DataFrame) => semanticGateBatch(spark,
-      cfg.semIndexPath, df, idCol, vecCol, cfg.semThreshold, cfg.numPlanes,
-      cfg.numTables, staticPrune = true,
-      probeTables = cfg.semProbeTables)),
-    "semantic_intra" -> ((df: DataFrame) => df.join(
-      semanticIntraBatchDups(df, idCol, vecCol, cfg.semThreshold,
-        cfg.numPlanes, cfg.numTables, probeTables = cfg.semProbeTables),
-      Seq(idCol), "left_anti")),
-    "kn" -> ((df: DataFrame) => graft.llm.TextAnalysis.knGateBatch(spark,
-      cfg.lmPath, df, idCol, textCol)),
-    "clf" -> ((df: DataFrame) => df.join(
-      graft.llm.Curation.clfGateBatch(spark, cfg.clfModelPath, df,
-        idCol, textCol).select(col(idCol)),
-      Seq(idCol), "left_semi")))
+  private def ingestGates(spark: SparkSession, cfg: IngestPipelineConfig,
+                          idCol: String, textCol: String,
+                          vecCol: String): Seq[Gate] = {
+    val built = graft.llm.BandedIndex.paramOf(spark, cfg.exactIndexPath,
+      "exactdup-text", "nBuckets")
+    require(built == cfg.nBucketsExact.toString,
+      s"exact index at ${cfg.exactIndexPath} was built with nBuckets=$built, " +
+        s"the pipeline config says ${cfg.nBucketsExact}")
+    Seq(exactGate(cfg.exactIndexPath, idCol, textCol),
+      nearDupGate(cfg.nearDupIndexPath, idCol, textCol, cfg.maxHamming),
+      semanticGate(spark, cfg.semIndexPath, idCol, vecCol, cfg.semThreshold,
+        cfg.numPlanes, cfg.numTables, cfg.semProbeTables),
+      qualityGate(cfg.lmPath, idCol, textCol),
+      classifierGate(cfg.clfModelPath, idCol, textCol))
+  }
 
   /** Per-row audit of the composed pipeline: every arriving row labeled
     * with the FIRST stage that rejected it (`exact`, `exact_intra`,
@@ -1337,23 +1044,21 @@ object Streams {
     * "which gate is eating my data" observability view a production
     * ingest needs, and the full-replay surface the e2e oracle checks.
     * Decision-identical to [[startIngestPipelineSink]] by construction
-    * (same [[ingestStages]] fold); each stage's survivor frame is
-    * pinned so the audit's anti-joins don't replan the whole chain
+    * (same [[ingestGates]] and redaction); each stage's survivor frame
+    * is pinned so the audit's anti-joins don't replan the whole chain
     * per stage.
     */
-  def ingestPipelineTrace(spark: org.apache.spark.sql.SparkSession,
-                          cfg: IngestPipelineConfig, batch: DataFrame,
-                          idCol: String, textCol: String,
+  def ingestPipelineTrace(spark: SparkSession, cfg: IngestPipelineConfig,
+                          batch: DataFrame, idCol: String, textCol: String,
                           vecCol: String): DataFrame = {
-    val red = graft.llm.TextAnalysis.redactPii(batch, idCol, textCol)
-    val nPii = red.select(col(idCol),
-      graft.llm.TextAnalysis.piiPatterns
+    val nPii = graft.llm.TextAnalysis.redactPii(batch, idCol, textCol)
+      .select(col(idCol), graft.llm.TextAnalysis.piiPatterns
         .map { case (n, _, _) => col(s"n_$n") }
         .reduce(_ + _).as("n_pii"))
-    var cur = red.select(col(idCol), col("redacted").as(textCol))
-      .join(batch.select(col(idCol), col(vecCol)), Seq(idCol))
+    var cur = redactKeepVec(batch, idCol, textCol, vecCol)
       .transform(Materialize.pin)
-    val rejected = ingestStages(spark, cfg, idCol, textCol, vecCol)
+    val rejected = ingestGates(spark, cfg, idCol, textCol, vecCol)
+      .flatMap(_.stages)
       .map { case (name, stage) =>
         val next = stage(cur).transform(Materialize.pin)
         val rej = cur.select(col(idCol))
@@ -1378,100 +1083,89 @@ object Streams {
                                      rows_in: Long, rows_out: Long,
                                      wall_ms: Long)
 
-  /** The FLAGSHIP streaming ingest sink: one `foreachBatch` DAG running
-    * the [[ingestStages]] chain per micro-batch, landing accepted rows
-    * in the batchId-named directory, growing all three membership
-    * indexes with the accepted rows (a document accepted in batch N
-    * rejects its verbatim/edited/paraphrased copies in batch N+1 — the
-    * [[startDedupGateSink]] growth contract, now for the whole family),
-    * and writing the drift monitor's nBins-row PSI report of the
-    * arriving batch's REDACTED text lengths against the frozen
-    * [[graft.ops.Checks.writeDriftReference]] artifact.
+  /** THE streaming gate sink: one `foreachBatch` DAG per micro-batch.
     *
-    * OBSERVABILITY: every stage's survivors are pinned and counted, and
-    * a per-batch [[IngestStageMetric]] report (stage, rows in/out, wall)
-    * lands beside the PSI monitor at `<monitorPath>_stages/batch_id=N`.
-    * Decision-identical to the plain fold by construction (pins are
-    * semantics-preserving); the counts read the pinned blocks the next
+    *   1. `prepare` (stage 0 — redaction for text, signature decode for
+    *      media; pass-through by default) runs once and is pinned: every
+    *      stage and the monitor consume it.
+    *   2. The gates' stages fold in order, each survivor frame pinned
+    *      BEFORE the appends mutate the indexes a lazy plan would
+    *      re-read, and counted.
+    *   3. Survivors land in `outPath/batch_id=N`, overwritten, so a
+    *      replayed batch (restart after failure between write and commit)
+    *      lands in the same place instead of duplicating: idempotent
+    *      writes plus the checkpoint's offset tracking give end-to-end
+    *      exactly-once. Readers scan `outPath` as one partitioned table.
+    *   4. Each gate appends the survivors to its indexes, in gate order,
+    *      then [[maybeCompactIndexes]] runs on the `compactEvery` cadence.
+    *   5. A per-batch [[IngestStageMetric]] report (stage, rows in/out,
+    *      wall) lands at `<monitorPath>_stages/batch_id=N`.
+    *   6. `monitor`, if set, maps the prepared frame — what ARRIVES, not
+    *      what survives — to a report at `monitorPath/batch_id=N` (e.g.
+    *      [[graft.ops.Checks.psiAgainstReference]], the drift PSI).
+    *
+    * With no gates the sink is the idempotent batchId parquet sink; with
+    * `prepare = ("redact", TextAnalysis.redactPii(_, id, text))` it is
+    * the PII scrub that runs before anything persists. Pins are
+    * semantics-preserving and the counts read the pinned blocks the next
     * stage consumes anyway, so the report costs one cheap job per stage
     * on batch-sized frames.
-    *
-    * Exactly-once on replay: the per-stage arguments transfer verbatim
-    * — the batch output directory overwrite is idempotent, a replayed
-    * batch's index self-matches are `cand_id == query_id` (excluded by
-    * every probe), double-appended index rows only re-confirm the same
-    * id-distinct hits (and the compaction cadence drops them —
-    * [[maybeCompactIndexes]]), and the quality/classifier/drift stages
-    * are pure functions of (frozen artifact, batch).
-    *
-    * Every index probe and append reads its bucket width from the
-    * index's params sidecar; `cfg.nBucketsExact` is checked against the
-    * exact index's sidecar once, here, so a config naming another width
-    * fails at start instead of being silently ignored.
+    */
+  def startGateSink(df: DataFrame, gates: Seq[Gate], outPath: String,
+                    monitorPath: String, checkpoint: String,
+                    prepare: Stage = ("arrive", identity),
+                    monitor: Option[DataFrame => DataFrame] = None,
+                    compactEvery: Int = 0): StreamingQuery =
+    df.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val spark = batch.sparkSession
+        def since(t: Long) = (System.nanoTime() - t) / 1000000L
+        val t0 = System.nanoTime()
+        val prepared = prepare._2(batch.toDF()).transform(Materialize.pin)
+        val nArrived = prepared.count()
+        val metrics = scala.collection.mutable.ArrayBuffer(
+          IngestStageMetric(prepare._1, 0, nArrived, nArrived, since(t0)))
+        val accepted = gates.flatMap(_.stages).zipWithIndex
+          .foldLeft(prepared) { case (cur, ((name, stage), i)) =>
+            val t = System.nanoTime()
+            val next = stage(cur).transform(Materialize.pin)
+            metrics += IngestStageMetric(name, i + 1, metrics.last.rows_out,
+              next.count(), since(t))
+            next
+          }
+        accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+        gates.foreach(_.append(accepted))
+        maybeCompactIndexes(spark, gates.flatMap(_.indexPaths), batchId,
+          compactEvery)
+        import spark.implicits._
+        metrics.toSeq.toDF().write.mode("overwrite")
+          .parquet(s"${monitorPath}_stages/batch_id=$batchId")
+        monitor.foreach(_(prepared).write.mode("overwrite")
+          .parquet(s"$monitorPath/batch_id=$batchId"))
+      }
+      .start()
+
+  /** The FLAGSHIP streaming ingest sink: [[startGateSink]] over
+    * [[ingestGates]] with redaction as the prepare step, so a document
+    * accepted in batch N rejects its verbatim/edited/paraphrased copies
+    * in batch N+1, and the drift monitor's nBins-row PSI report of the
+    * arriving batch's REDACTED text lengths against the frozen
+    * [[graft.ops.Checks.writeDriftReference]] artifact as the monitor.
+    * The quality, classifier and drift stages are pure functions of
+    * (frozen artifact, batch), so replay stays exactly-once end to end.
     */
   def startIngestPipelineSink(df: DataFrame, cfg: IngestPipelineConfig,
                               outPath: String, monitorPath: String,
                               checkpoint: String, idCol: String,
                               textCol: String, vecCol: String,
-                              compactEvery: Int = 0) = {
-    val built = graft.llm.BandedIndex.paramOf(df.sparkSession,
-      cfg.exactIndexPath, "exactdup-text", "nBuckets")
-    require(built == cfg.nBucketsExact.toString,
-      s"exact index at ${cfg.exactIndexPath} was built with nBuckets=$built, " +
-        s"the pipeline config says ${cfg.nBucketsExact}")
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // Redact ONCE and pin: the gate chain and the drift monitor
-        // both consume this frame — redaction is the most expensive
-        // per-row text transform in the pipeline.
-        val t0 = System.nanoTime()
-        val redacted = redactKeepVec(batch.toDF(), idCol, textCol, vecCol)
-          .transform(Materialize.pin)
-        val nArrived = redacted.count()
-        val metrics = scala.collection.mutable.ArrayBuffer(
-          IngestStageMetric("redact", 0, nArrived, nArrived,
-            (System.nanoTime() - t0) / 1000000L))
-        // Pin the decisions BEFORE the appends mutate the indexes a
-        // lazy plan would re-read — per stage, so each gate's survivor
-        // count and wall are observable.
-        var cur = redacted
-        var nCur = nArrived
-        ingestStages(spark, cfg, idCol, textCol, vecCol)
-          .zipWithIndex
-          .foreach { case ((name, stage), i) =>
-            val t = System.nanoTime()
-            val next = stage(cur).transform(Materialize.pin)
-            val nNext = next.count()
-            metrics += IngestStageMetric(name, i + 1, nCur, nNext,
-              (System.nanoTime() - t) / 1000000L)
-            cur = next
-            nCur = nNext
-          }
-        val accepted = cur
-        accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        graft.llm.Dedup.appendToExactDupIndex(accepted, idCol, textCol,
-          cfg.exactIndexPath)
-        graft.llm.Dedup.appendToSimhashWideIndex(accepted, idCol, textCol,
-          cfg.maxHamming, cfg.nearDupIndexPath)
-        graft.llm.Similarity.appendToLshIndex(accepted, idCol, vecCol,
-          cfg.numPlanes, cfg.numTables, cfg.semIndexPath)
-        maybeCompactIndexes(spark, Seq(cfg.exactIndexPath,
-          cfg.nearDupIndexPath, cfg.semIndexPath), batchId, compactEvery)
-        // The per-stage ops report, idempotent per batch like the
-        // landed output (overwrite of a batchId-named directory).
-        import spark.implicits._
-        metrics.toSeq.toDF().write.mode("overwrite")
-          .parquet(s"${monitorPath}_stages/batch_id=$batchId")
-        // Stage seven, the monitor: watches WHAT arrives (post-redact),
-        // not what survives — it must see the rows the gates reject.
-        graft.ops.Checks.psiAgainstReference(spark, cfg.driftRefPath,
-            redacted.select(length(col(textCol)).cast("double").as("__len")),
-            "__len")
-          .write.mode("overwrite").parquet(s"$monitorPath/batch_id=$batchId")
-      }
-      .start()
-  }
+                              compactEvery: Int = 0): StreamingQuery =
+    startGateSink(df, ingestGates(df.sparkSession, cfg, idCol, textCol,
+        vecCol), outPath, monitorPath, checkpoint,
+      prepare = ("redact", redactKeepVec(_, idCol, textCol, vecCol)),
+      monitor = Some(r => graft.ops.Checks.psiAgainstReference(
+        r.sparkSession, cfg.driftRefPath,
+        r.select(length(col(textCol)).cast("double").as("__len")), "__len")),
+      compactEvery = compactEvery)
 }

@@ -43,6 +43,27 @@ class StreamsSpec extends SparkSpec {
     Ev(ts(14), "view", 2, 3.0), Ev(ts(16), "click", 1, 4.0),
     Ev(ts(31), "view", 2, 5.0), Ev(ts(59), "click", 2, 6.0))
 
+  /** Asserts a gate sink's `<mon>_stages/batch_id=N` report for batches
+    * 0 until `batches`: stage names in order, each stage's rows_in equal
+    * to its predecessor's rows_out, survivors never growing, walls
+    * non-negative.
+    */
+  private def assertStageReports(mon: String, batches: Int,
+                                 stages: Seq[String]): Unit =
+    for (b <- 0 until batches) {
+      val m = spark.read.parquet(s"${mon}_stages/batch_id=$b")
+        .select("stage_idx", "stage", "rows_in", "rows_out", "wall_ms")
+        .as[(Int, String, Long, Long, Long)].collect().sortBy(_._1)
+      assert(m.map(_._2).toSeq === stages, s"batch $b")
+      m.sliding(2).foreach {
+        case Array(prev, next) => assert(next._3 === prev._4,
+          s"batch $b: ${next._2} rows_in ${next._3} != " +
+            s"${prev._2} rows_out ${prev._4}")
+        case _ => ()
+      }
+      m.foreach(r => assert(r._4 <= r._3 && r._5 >= 0L))
+    }
+
   test("streaming tumblingAgg over MemoryStream equals the batch result") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
@@ -190,9 +211,12 @@ class StreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("sink_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("sink_ckpt").toString
+    val mon = java.nio.file.Files.createTempDirectory("sink_mon").toString + "/mon"
     val mem = MemoryStream[Ev]
-    val q = Streams.startParquetSink(
-      mem.toDF().select($"event_type", $"user_id", $"value"), out, ckpt)
+    // No gates, default pass-through prepare: the plain parquet sink.
+    val q = Streams.startGateSink(
+      mem.toDF().select($"event_type", $"user_id", $"value"), Nil, out, mon,
+      ckpt)
     try {
       mem.addData(rows.take(3): _*)
       q.processAllAvailable()
@@ -201,6 +225,7 @@ class StreamsSpec extends SparkSpec {
       val written = spark.read.parquet(out)
       assert(written.count() === rows.size)
       assert(written.select("batch_id").distinct().count() >= 2)
+      assertStageReports(mon, 2, Seq("arrive"))
       // re-writing the same batch dir (replay) must not duplicate
       val before = spark.read.parquet(out).count()
       rows.take(3).toDF().select($"event_type", $"user_id", $"value")
@@ -213,16 +238,17 @@ class StreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("restart_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("restart_ckpt").toString
+    val mon = java.nio.file.Files.createTempDirectory("restart_mon").toString + "/mon"
     val mem = MemoryStream[Ev]
     val sel = (df: org.apache.spark.sql.DataFrame) =>
       df.select($"event_type", $"user_id", $"value")
-    val q1 = Streams.startParquetSink(sel(mem.toDF()), out, ckpt)
+    val q1 = Streams.startGateSink(sel(mem.toDF()), Nil, out, mon, ckpt)
     try {
       mem.addData(rows.take(3): _*)
       q1.processAllAvailable()
     } finally q1.stop()
     // restart with the SAME checkpoint: offsets resume, batch ids continue
-    val q2 = Streams.startParquetSink(sel(mem.toDF()), out, ckpt)
+    val q2 = Streams.startGateSink(sel(mem.toDF()), Nil, out, mon, ckpt)
     try {
       mem.addData(rows.drop(3): _*)
       q2.processAllAvailable()
@@ -230,6 +256,7 @@ class StreamsSpec extends SparkSpec {
       assert(written.count() === rows.size) // each row exactly once
       assert(written.groupBy("event_type", "user_id", "value").count()
         .filter($"count" > 1).count() === 0)
+      assertStageReports(mon, 2, Seq("arrive"))
     } finally q2.stop()
   }
 
@@ -308,8 +335,8 @@ class StreamsSpec extends SparkSpec {
     try {
       graft.llm.Dedup.writeExactDupIndex(corpus, "doc_id", "text", 8, idx)
       val mem = MemoryStream[Doc]
-      val q = Streams.startDedupGateSink(mem.toDF(), idx, out, ckpt,
-        "doc_id", "text")
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.exactGate(idx, "doc_id", "text")), out, s"$root/mon", ckpt)
       try {
         // Batch 0: a corpus dup (case/space noise) and a novel doc.
         mem.addData(
@@ -324,6 +351,7 @@ class StreamsSpec extends SparkSpec {
       val accepted = spark.read.parquet(out)
         .select("doc_id").as[Long].collect().sorted
       assert(accepted === Array(11L, 13L))
+      assertStageReports(s"$root/mon", 2, Seq("arrive", "exact", "exact_intra"))
       // The gate's batch body agrees with a direct batch probe of the
       // final index: everything already admitted is now a member.
       val replay = Streams.dedupGateBatch(spark, idx,
@@ -347,8 +375,8 @@ class StreamsSpec extends SparkSpec {
     try {
       graft.llm.TextAnalysis.writeKnLm(corpus, "doc_id", "text", lm)
       val mem = MemoryStream[Doc]
-      val q = Streams.startQualityGateSink(mem.toDF(), lm, out, ckpt,
-        "doc_id", "text")
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.qualityGate(lm, "doc_id", "text")), out, s"$root/mon", ckpt)
       try {
         // 10: corpus-typical (all bigrams frequent) -> accept.
         // 11: novel bigram ("mat sat" never seen) -> reject.
@@ -364,6 +392,7 @@ class StreamsSpec extends SparkSpec {
       assert(accepted.contains(10L) && !accepted.contains(11L))
       assert(!accepted.contains(12L), "all-rare-bigram doc must sit above " +
         "the corpus-mean threshold")
+      assertStageReports(s"$root/mon", 2, Seq("arrive", "kn"))
       // The gate is stateless per batch: a direct batch call against the
       // frozen artifact makes the identical decision.
       val again = graft.llm.TextAnalysis.knGateBatch(spark, lm,
@@ -391,8 +420,9 @@ class StreamsSpec extends SparkSpec {
       graft.llm.Curation.writeQualityClassifier(corpus, "doc_id", "text",
         "y", model)
       val mem = MemoryStream[Doc]
-      val q = Streams.startClassifierGateSink(mem.toDF(), model, out, ckpt,
-        "doc_id", "text")
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.classifierGate(model, "doc_id", "text")), out,
+        s"$root/mon", ckpt)
       try {
         mem.addData(Doc(100L, "alpha beta gamma common words here marker"),
           Doc(101L, "alpha beta gamma common words here"))
@@ -403,6 +433,7 @@ class StreamsSpec extends SparkSpec {
       val accepted = spark.read.parquet(out)
         .select("doc_id").as[Long].collect().sorted
       assert(accepted === Array(100L, 102L))
+      assertStageReports(s"$root/mon", 2, Seq("arrive", "clf"))
       // Stateless per batch: the direct batch call against the frozen
       // artifact makes the identical decision.
       val again = graft.llm.Curation.clfGateBatch(spark, model,
@@ -421,8 +452,11 @@ class StreamsSpec extends SparkSpec {
     val (out, ckpt) = (s"$root/out", s"$root/ckpt")
     try {
       val mem = MemoryStream[Doc]
-      val q = Streams.startPiiRedactSink(mem.toDF(), out, ckpt,
-        "doc_id", "text")
+      // Redaction as the prepare step of a gate sink with no gates.
+      def start() = Streams.startGateSink(mem.toDF(), Nil, out, s"$root/mon",
+        ckpt, prepare = ("redact",
+          df => graft.llm.TextAnalysis.redactPii(df, "doc_id", "text")))
+      val q = start()
       try {
         mem.addData(
           Doc(1L, "mail bob@example.com or call +1 (555) 010-2233 now"),
@@ -446,8 +480,7 @@ class StreamsSpec extends SparkSpec {
       // Restart from the same checkpoint: committed offsets resume,
       // late data lands in a NEW batch dir, and the earlier output is
       // untouched (per-batch overwrite idempotence).
-      val q2 = Streams.startPiiRedactSink(mem.toDF(), out, ckpt,
-        "doc_id", "text")
+      val q2 = start()
       try {
         mem.addData(Doc(4L, "reach eve@corp.io"))
         q2.processAllAvailable()
@@ -456,6 +489,7 @@ class StreamsSpec extends SparkSpec {
         .select("doc_id", "redacted").as[(Long, String)].collect().toMap
       assert(after.keySet === Set(1L, 2L, 3L, 4L))
       assert(after(4L) === "reach <EMAIL>")
+      assertStageReports(s"$root/mon", 3, Seq("redact"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
   }
@@ -472,8 +506,11 @@ class StreamsSpec extends SparkSpec {
         (1 to 100).map(i => IdEv2(i.toLong, ts(i), i.toDouble)).toDF(),
         "value", nBins = 10, path = ref)
       val mem = MemoryStream[IdEv2]
-      val q = Streams.startDriftMonitorSink(mem.toDF(), ref, out, ckpt,
-        "value")
+      // The PSI report is the monitor of a gate sink with no gates: it
+      // lands at the monitor path, the pass-through rows beside it.
+      val q = Streams.startGateSink(mem.toDF(), Nil, s"$root/rows", out,
+        ckpt, monitor = Some(b => graft.ops.Checks.psiAgainstReference(
+          b.sparkSession, ref, b, "value")))
       try {
         // Batch 0: same uniform shape -> PSI 0 in every bin.
         mem.addData((1 to 100).map(i =>
@@ -495,6 +532,7 @@ class StreamsSpec extends SparkSpec {
       assert(b1.map(_._3).sum > 250000L)  // far past the 0.25 alarm
       // The report is nBins rows per batch, rows never dropped.
       assert(b1.length === 10)
+      assertStageReports(out, 2, Seq("arrive"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
   }
@@ -511,8 +549,9 @@ class StreamsSpec extends SparkSpec {
       graft.llm.Dedup.writeSimhashWideIndex(corpus, "doc_id", "text",
         maxHamming = 7, nBuckets = 8, path = idx)
       val mem = MemoryStream[Doc]
-      val q = Streams.startNearDupGateSink(mem.toDF(), idx, out, ckpt,
-        "doc_id", "text", maxHamming = 7)
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.nearDupGate(idx, "doc_id", "text", maxHamming = 7)), out,
+        s"$root/mon", ckpt)
       try {
         // Batch 0: a REORDERED copy of corpus doc 1 (same token bag,
         // different string — verbatim membership misses it, the
@@ -533,6 +572,7 @@ class StreamsSpec extends SparkSpec {
       val accepted = spark.read.parquet(out)
         .select("doc_id").as[Long].collect().sorted
       assert(accepted === Array(11L, 13L))
+      assertStageReports(s"$root/mon", 2, Seq("arrive", "near", "near_intra"))
       // Gate body agrees with a direct probe of the final (grown) index.
       val replay = Streams.nearDupGateBatch(spark, idx,
         Seq(Doc(20L, "grey black white violet indigo blue green yellow orange red"),
@@ -555,8 +595,9 @@ class StreamsSpec extends SparkSpec {
       graft.llm.Dedup.writeSimhashWideIndex(corpus, "doc_id", "text",
         maxHamming = 7, nBuckets = 8, path = idx)
       val mem = MemoryStream[Doc]
-      val q = Streams.startNearDupGateSink(mem.toDF(), idx, out, ckpt,
-        "doc_id", "text", maxHamming = 7)
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.nearDupGate(idx, "doc_id", "text", maxHamming = 7)), out,
+        s"$root/mon", ckpt)
       try {
         // ONE batch: ids 10/11 are mutual near-dups (identical token
         // bag, reordered — hamming 0) both NOVEL vs the corpus; id 12
@@ -571,6 +612,7 @@ class StreamsSpec extends SparkSpec {
       val accepted = spark.read.parquet(out)
         .select("doc_id").as[Long].collect().sorted
       assert(accepted === Array(10L, 12L))
+      assertStageReports(s"$root/mon", 1, Seq("arrive", "near", "near_intra"))
       // The index grew with the SURVIVORS only, and rejects a later copy
       // of the kept clone (proves 10 was appended, not lost with 11).
       val replay = Streams.nearDupGateBatch(spark, idx,
@@ -602,8 +644,9 @@ class StreamsSpec extends SparkSpec {
         "media_id", "dhash", "vhash", nLoBits = 56, nHiBits = 54,
         maxHamming = 7, nBuckets = 8, path = idx)
       val mem = MemoryStream[graft.llm.Multimodal.MediaRecord]
-      val q = Streams.startImageGateSink(mem.toDF(), idx, out, ckpt,
-        maxHamming = 7)
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.perceptualGate(idx, maxHamming = 7)), out, s"$root/mon",
+        ckpt, prepare = Streams.imageDecode)
       try {
         // Batch 0: a RE-UPLOAD of corpus image 1 under a fresh id
         // (byte-identical payload — hamming 0, reject); two members of
@@ -620,6 +663,8 @@ class StreamsSpec extends SparkSpec {
       val accepted = spark.read.parquet(out)
         .select("media_id").as[Long].collect().sorted
       assert(accepted === Array(40L, 44L, 48L))
+      assertStageReports(s"$root/mon", 2,
+        Seq("decode", "perceptual", "perceptual_intra"))
       // Gate body agrees with a direct probe of the final grown index:
       // a near-copy of accepted 48 (same group) is rejected, a fresh
       // group accepted.
@@ -654,8 +699,9 @@ class StreamsSpec extends SparkSpec {
         "media_id", "ehash", "rhash", nLoBits = 56, nHiBits = 54,
         maxHamming = 7, nBuckets = 8, path = idx)
       val mem = MemoryStream[graft.llm.Multimodal.MediaRecord]
-      val q = Streams.startAudioGateSink(mem.toDF(), idx, out, ckpt,
-        maxHamming = 7)
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.perceptualGate(idx, maxHamming = 7)), out, s"$root/mon",
+        ckpt, prepare = Streams.audioDecode)
       try {
         // Batch 0: a re-upload of corpus clip 1 under a fresh id
         // (hamming 0 — reject); members 40/41 of novel group 10 in ONE
@@ -672,6 +718,8 @@ class StreamsSpec extends SparkSpec {
       val accepted = spark.read.parquet(out)
         .select("media_id").as[Long].collect().sorted
       assert(accepted === Array(40L, 44L, 48L))
+      assertStageReports(s"$root/mon", 2,
+        Seq("decode", "perceptual", "perceptual_intra"))
       // Gate body agrees with a direct probe of the final grown index:
       // a same-group near-copy of accepted 48 rejected, a fresh group
       // accepted.
@@ -708,8 +756,9 @@ class StreamsSpec extends SparkSpec {
         "media_id", "dhash", "vhash", nLoBits = 56, nHiBits = 54,
         maxHamming = 7, nBuckets = 8, path = idx)
       val mem = MemoryStream[graft.llm.Multimodal.MediaRecord]
-      val q = Streams.startVideoGateSink(mem.toDF(), idx, out, ckpt,
-        maxHamming = 7)
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.perceptualGate(idx, maxHamming = 7)), out, s"$root/mon",
+        ckpt, prepare = Streams.videoDecode)
       try {
         // Batch 0: a RE-UPLOAD of corpus video 1 under a fresh id
         // (byte-identical — every strided frame at hamming 0, reject);
@@ -729,6 +778,8 @@ class StreamsSpec extends SparkSpec {
       val accepted = spark.read.parquet(out)
         .select("media_id").as[Long].collect().sorted
       assert(accepted === Array(40L, 44L, 48L))
+      assertStageReports(s"$root/mon", 2,
+        Seq("decode", "perceptual", "perceptual_intra"))
       // Gate body agrees with a direct probe of the final grown index:
       // 49 is a same-group (frame-0-scrambled) near-copy of accepted
       // 48 — rejected; fresh group 20 (id 80) accepted.
@@ -778,8 +829,10 @@ class StreamsSpec extends SparkSpec {
         cap.toSeq.toDF("doc_id", "text"), "doc_id", "text",
         maxHamming = 7, nBuckets = 8, path = cidx)
       val mem = MemoryStream[PairRec]
-      val q = Streams.startPairGateSink(mem.toDF(), idx, cidx, out, ckpt,
-        "caption", maxHamming = 7, capMaxHamming = 7)
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.pairGate(idx, cidx, "caption", maxHamming = 7,
+          capMaxHamming = 7)), out, s"$root/mon", ckpt,
+        prepare = Streams.imageDecode)
       try {
         // Batch 0: CONTAMINATED re-upload of pair 0 (byte-identical
         // image, foreign caption — reject); CONSISTENT re-upload of
@@ -809,6 +862,7 @@ class StreamsSpec extends SparkSpec {
       val accepted = spark.read.parquet(out)
         .select("media_id").as[Long].collect().sorted
       assert(accepted === Array(101L, 102L, 103L, 111L))
+      assertStageReports(s"$root/mon", 2, Seq("decode", "pair", "pair_intra"))
       // Raw batch parity against the final grown indexes: image of
       // accepted pair 102 under yet another caption is rejected; a
       // fresh image group is accepted regardless of caption.
@@ -855,9 +909,10 @@ class StreamsSpec extends SparkSpec {
         cap.toSeq.toDF("doc_id", "text"), "doc_id", "text",
         maxHamming = 7, nBuckets = 8, path = cidx)
       val mem = MemoryStream[PairRec]
-      val q = Streams.startPairGateSink(mem.toDF(), idx, cidx, out, ckpt,
-        "caption", maxHamming = 7, capMaxHamming = 7,
-        rejectBoilerplate = true)
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.pairGate(idx, cidx, "caption", maxHamming = 7,
+          capMaxHamming = 7, rejectBoilerplate = true)), out, s"$root/mon",
+        ckpt, prepare = Streams.imageDecode)
       try {
         // Batch 0: BOILERPLATE pair (novel group-10 image under corpus
         // pair 0's caption — reject); CONSISTENT re-upload of pair 4
@@ -887,6 +942,7 @@ class StreamsSpec extends SparkSpec {
       val accepted = spark.read.parquet(out)
         .select("media_id").as[Long].collect().sorted
       assert(accepted === Array(101L, 102L, 112L))
+      assertStageReports(s"$root/mon", 2, Seq("decode", "pair", "pair_intra"))
       // Raw batch parity on the final grown indexes: corpus pair 8's
       // caption over a never-accepted image is boilerplate (reject);
       // the consistent re-upload of pair 8 passes both directions.
@@ -963,9 +1019,10 @@ class StreamsSpec extends SparkSpec {
       graft.llm.Similarity.writeLshIndex(corpus, "vec_id", "embedding",
         numPlanes = 4, numTables = 4, path = idx)
       val mem = MemoryStream[Vec]
-      val q = Streams.startSemanticGateSink(mem.toDF(), idx, out, ckpt,
-        "vec_id", "embedding", threshold = 0.95, numPlanes = 4,
-        numTables = 4)
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.semanticGate(spark, idx, "vec_id", "embedding",
+          threshold = 0.95, numPlanes = 4, numTables = 4)), out,
+        s"$root/mon", ckpt)
       try {
         // Batch 0: a scaled copy of corpus vector 1 (reject) and a novel
         // direction (accept).
@@ -982,6 +1039,8 @@ class StreamsSpec extends SparkSpec {
       val accepted = spark.read.parquet(out)
         .select("vec_id").as[Long].collect().sorted
       assert(accepted === Array(11L, 13L, 15L))
+      assertStageReports(s"$root/mon", 2,
+        Seq("arrive", "semantic", "semantic_intra"))
       // Gate body agrees with a direct probe of the final (grown) index:
       // the intra-batch survivor 13 was appended (20 rejected), 14 wasn't.
       // probeTables mirrors the sink's wired MULTI-PROBE default, so
@@ -1154,8 +1213,9 @@ class StreamsSpec extends SparkSpec {
       graft.llm.Dedup.writeExactDupIndex(corpus, "doc_id", "text", 2, idx)
       val mem = MemoryStream[Doc]
       // Compact every 2 micro-batches.
-      val q = Streams.startDedupGateSink(mem.toDF(), idx, out, ckpt,
-        "doc_id", "text", compactEvery = 2)
+      val q = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.exactGate(idx, "doc_id", "text")), out, s"$root/mon", ckpt,
+        compactEvery = 2)
       try {
         for (b <- 0 until 4) {
           mem.addData(Doc(10L + b, s"novel doc number $b"),
@@ -1173,6 +1233,7 @@ class StreamsSpec extends SparkSpec {
           s"${dirs.size} dirs")
       // All 8 novel rows were accepted and still reject their copies.
       assert(spark.read.parquet(out).count() === 8L)
+      assertStageReports(s"$root/mon", 4, Seq("arrive", "exact", "exact_intra"))
       assert(Streams.dedupGateBatch(spark, idx,
         Seq(Doc(90L, "novel doc number 2"), Doc(91L, "brand new")).toDF(),
         "doc_id", "text")
@@ -1289,25 +1350,9 @@ class StreamsSpec extends SparkSpec {
       // including after the restart.
       for (b <- 0 to 2)
         assert(spark.read.parquet(s"$mon/batch_id=$b").count() === 10L)
-      // The per-stage ops report landed beside it for every batch:
-      // stages in pipeline order, survivor counts chained (each stage's
-      // rows_in is its predecessor's rows_out, never growing), walls
-      // non-negative.
-      val stageNames = Seq("redact", "exact", "exact_intra", "near",
-        "near_intra", "semantic", "semantic_intra", "kn", "clf")
-      for (b <- 0 to 2) {
-        val m = spark.read.parquet(s"${mon}_stages/batch_id=$b")
-          .select("stage_idx", "stage", "rows_in", "rows_out", "wall_ms")
-          .as[(Int, String, Long, Long, Long)].collect().sortBy(_._1)
-        assert(m.map(_._2).toSeq === stageNames)
-        m.sliding(2).foreach {
-          case Array(prev, next) => assert(next._3 === prev._4,
-            s"batch $b: ${next._2} rows_in ${next._3} != " +
-              s"${prev._2} rows_out ${prev._4}")
-          case _ => ()
-        }
-        m.foreach(r => assert(r._4 <= r._3 && r._5 >= 0L))
-      }
+      // The per-stage ops report landed beside it for every batch.
+      assertStageReports(mon, 3, Seq("redact", "exact", "exact_intra", "near",
+        "near_intra", "semantic", "semantic_intra", "kn", "clf"))
       // Batch 0: 7 arrived, 2 accepted — the report carries the
       // decision totals the landed output implies.
       val m0 = spark.read.parquet(s"${mon}_stages/batch_id=0")
