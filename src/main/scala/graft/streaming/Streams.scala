@@ -386,12 +386,16 @@ object Streams {
     batch.join(hits, Seq(idCol), "left_anti")
   }
 
-  /** Bounded-small-files maintenance for the growing gate indexes:
-    * every `every` micro-batches (after the batch's appends commit),
-    * rewrite each index to one file per partition directory via
+  /** Bounded-small-files maintenance for one gate's growing indexes:
+    * every `every` micro-batches, right after that gate's own appends
+    * commit (on the gate's thread of [[startGateSink]]; the other gates
+    * append and compact concurrently, each to its own indexes), rewrite
+    * each index to one file per partition directory via
     * [[graft.llm.Dedup.compactIndex]] ([[graft.llm.BandedIndex
-    * .compactLayout]] — row set unchanged, sidecar preserved,
-    * rename-aside swap). Without a cadence, a long-running gate stream
+    * .compactLayout]] — one pass over the index, row set unchanged,
+    * sidecar preserved, rename-aside swap). The batch does not return
+    * until every compaction has swapped, so no probe of the next batch
+    * sees an index mid-swap. Without a cadence, a long-running gate stream
     * appends one delta file per (band, bkt) per batch and the probe's
     * per-file open cost grows without bound — the small-files regime
     * the round-10 nBuckets sweep measured. `every <= 0` disables
@@ -742,8 +746,23 @@ object Streams {
     */
   type Stage = (String, DataFrame => DataFrame)
 
+  /** A stage function whose verdict on a row depends only on that row
+    * (by `idCol`) and on frozen or index state, never on the other rows
+    * of the frame it gates: the corpus probes and the frozen-artifact
+    * filters. [[startGateSink]] decides every such stage at once over
+    * the prepared frame, as a keep-set of ids, and applies it in the
+    * fold as a left-semi join on `idCol`. That equals `keep(cur)`
+    * because `cur` is a subset of the prepared rows and no index
+    * changes until the fold ends. Called directly it is `keep`.
+    */
+  final case class PerRow(idCol: String, keep: DataFrame => DataFrame)
+      extends (DataFrame => DataFrame) {
+    def apply(df: DataFrame): DataFrame = keep(df)
+  }
+
   /** One gate of [[startGateSink]], three parts: its stages (the corpus
-    * decision, then for membership gates the keep-lowest-id INTRA-batch
+    * decision, a [[PerRow]] stage where its verdict is per row, then for
+    * membership gates the keep-lowest-id INTRA-batch
     * check of the same relation, which no corpus probe can see because
     * neither row is a member until the batch commits), the append that
     * grows its indexes with the batch's accepted rows, and the index
@@ -775,10 +794,11 @@ object Streams {
   def exactGate(indexPath: String, idCol: String, textCol: String): Gate =
     Gate(Seq(
       // staticPrune on every membership stage: stage inputs are PINNED
-      // survivor frames (unknown size stats), which silently disables
-      // DPP on the index probes — see BandedIndex.probeJoinStatic.
-      ("exact", df => dedupGateBatch(df.sparkSession, indexPath, df, idCol,
-        textCol, staticPrune = true)),
+      // frames (the prepared batch or its survivors; unknown size stats),
+      // which silently disables DPP on the index probes — see
+      // BandedIndex.probeJoinStatic.
+      ("exact", PerRow(idCol, df => dedupGateBatch(df.sparkSession,
+        indexPath, df, idCol, textCol, staticPrune = true))),
       ("exact_intra", df => df.join(
         df.select(col(idCol),
             md5(graft.llm.TextOps.normalize(col(textCol))).as("__h"))
@@ -797,8 +817,8 @@ object Streams {
   def nearDupGate(indexPath: String, idCol: String, textCol: String,
                   maxHamming: Int): Gate =
     Gate(Seq(
-      ("near", df => nearDupGateBatch(df.sparkSession, indexPath, df, idCol,
-        textCol, maxHamming, staticPrune = true)),
+      ("near", PerRow(idCol, df => nearDupGateBatch(df.sparkSession,
+        indexPath, df, idCol, textCol, maxHamming, staticPrune = true))),
       // simhashWidePairs emits id_a < id_b; dropping every id_b keeps the
       // lowest id of each intra-batch near-dup group.
       ("near_intra", df => df.join(
@@ -851,9 +871,9 @@ object Streams {
       streamLog.info(s"semantic gate posture at $indexPath: EXACT-BUCKET " +
         s"over all $layoutTables layout tables")
     Gate(Seq(
-      ("semantic", df => semanticGateBatch(df.sparkSession, indexPath, df,
-        idCol, vecCol, threshold, numPlanes, numTables, staticPrune = true,
-        probeTables = probeTables)),
+      ("semantic", PerRow(idCol, df => semanticGateBatch(df.sparkSession,
+        indexPath, df, idCol, vecCol, threshold, numPlanes, numTables,
+        staticPrune = true, probeTables = probeTables))),
       ("semantic_intra", df => df.join(
         semanticIntraBatchDups(df, idCol, vecCol, threshold, numPlanes,
           numTables, probeTables = probeTables),
@@ -868,24 +888,29 @@ object Streams {
     * threshold of the FROZEN Kneser–Ney artifact
     * ([[graft.llm.TextAnalysis.knGateBatch]]) pass. Stateless per batch:
     * accepted rows must NOT shift the bar mid-stream, so the decision is
-    * a pure function of (artifact, batch).
+    * a pure function of (artifact, batch). The artifact's `meta` is
+    * read once, through `spark`, when the gate is built.
     */
-  def qualityGate(lmPath: String, idCol: String, textCol: String): Gate =
-    Gate(Seq(("kn", df => graft.llm.TextAnalysis.knGateBatch(df.sparkSession,
-      lmPath, df, idCol, textCol))))
+  def qualityGate(spark: SparkSession, lmPath: String, idCol: String,
+                  textCol: String): Gate = {
+    val kn = graft.llm.TextAnalysis.knGate(spark, lmPath)
+    Gate(Seq(("kn", PerRow(idCol, kn(_, idCol, textCol)))))
+  }
 
   /** The TRAINED-CLASSIFIER gate: only documents with a positive logit
     * under the FROZEN [[graft.llm.Curation.writeQualityClassifier]]
     * artifact pass ([[graft.llm.Curation.clfGateBatch]]); stateless per
     * batch like [[qualityGate]]. The LM scores fluency against a
     * reference corpus; the classifier scores membership of a LABELED
-    * reference class.
+    * reference class. The artifact's `meta` is read once, through
+    * `spark`, when the gate is built.
     */
-  def classifierGate(modelPath: String, idCol: String, textCol: String): Gate =
-    Gate(Seq(("clf", df => df.join(
-      graft.llm.Curation.clfGateBatch(df.sparkSession, modelPath, df, idCol,
-        textCol).select(col(idCol)),
-      Seq(idCol), "left_semi"))))
+  def classifierGate(spark: SparkSession, modelPath: String, idCol: String,
+                     textCol: String): Gate = {
+    val clf = graft.llm.Curation.clfGate(spark, modelPath)
+    Gate(Seq(("clf", PerRow(idCol, df => df.join(
+      clf(df, idCol, textCol).select(col(idCol)), Seq(idCol), "left_semi")))))
+  }
 
   /** The signature-decode prepare steps of the media gates: each payload
     * (the [[graft.llm.Multimodal.MediaRecord]] columns) decodes ONCE into
@@ -924,8 +949,9 @@ object Streams {
     */
   def perceptualGate(indexPath: String, maxHamming: Int): Gate =
     Gate(Seq(
-      ("perceptual", df => df.join(perceptualHits(df.sparkSession, indexPath,
-        signatureRows(df), maxHamming), Seq("media_id"), "left_anti")),
+      ("perceptual", PerRow("media_id", df => df.join(perceptualHits(
+        df.sparkSession, indexPath, signatureRows(df), maxHamming),
+        Seq("media_id"), "left_anti"))),
       // Wide pairs emit id_a < id_b: dropping every id_b keeps the lowest
       // id of each intra-batch near-dup group.
       ("perceptual_intra", df => df.join(
@@ -946,7 +972,9 @@ object Streams {
     * batch-domain exclusion of [[pairGateFromHashes]] already makes a
     * replay's decisions independent of a half-append, and the order is
     * kept as defense in depth. Both indexes share one pair-id domain —
-    * [[pairGateBatch]]'s contract.
+    * [[pairGateBatch]]'s contract. The corpus decision is not
+    * [[PerRow]]: its batch-domain exclusion depends on the ids of the
+    * frame it gates, so it runs in the fold, on the survivors.
     */
   def pairGate(imageIndexPath: String, captionIndexPath: String,
                captionCol: String, maxHamming: Int, capMaxHamming: Int,
@@ -1033,8 +1061,8 @@ object Streams {
       nearDupGate(cfg.nearDupIndexPath, idCol, textCol, cfg.maxHamming),
       semanticGate(spark, cfg.semIndexPath, idCol, vecCol, cfg.semThreshold,
         cfg.numPlanes, cfg.numTables, cfg.semProbeTables),
-      qualityGate(cfg.lmPath, idCol, textCol),
-      classifierGate(cfg.clfModelPath, idCol, textCol))
+      qualityGate(spark, cfg.lmPath, idCol, textCol),
+      classifierGate(spark, cfg.clfModelPath, idCol, textCol))
   }
 
   /** Per-row audit of the composed pipeline: every arriving row labeled
@@ -1043,10 +1071,10 @@ object Streams {
     * or `accepted`, plus the row's total PII redaction count — the
     * "which gate is eating my data" observability view a production
     * ingest needs, and the full-replay surface the e2e oracle checks.
-    * Decision-identical to [[startIngestPipelineSink]] by construction
-    * (same [[ingestGates]] and redaction); each stage's survivor frame
-    * is pinned so the audit's anti-joins don't replan the whole chain
-    * per stage.
+    * Decision-identical to [[startIngestPipelineSink]] by construction:
+    * the same [[ingestGates]], redaction and [[foldStages]], so each
+    * stage's survivor frame is the pinned frame the sink folds (and the
+    * audit's anti-joins don't replan the whole chain per stage).
     */
   def ingestPipelineTrace(spark: SparkSession, cfg: IngestPipelineConfig,
                           batch: DataFrame, idCol: String, textCol: String,
@@ -1055,61 +1083,162 @@ object Streams {
       .select(col(idCol), graft.llm.TextAnalysis.piiPatterns
         .map { case (n, _, _) => col(s"n_$n") }
         .reduce(_ + _).as("n_pii"))
-    var cur = redactKeepVec(batch, idCol, textCol, vecCol)
-      .transform(Materialize.pin)
-    val rejected = ingestGates(spark, cfg, idCol, textCol, vecCol)
-      .flatMap(_.stages)
-      .map { case (name, stage) =>
-        val next = stage(cur).transform(Materialize.pin)
-        val rej = cur.select(col(idCol))
-          .join(next.select(col(idCol)), Seq(idCol), "left_anti")
-          .select(col(idCol), lit(name).as("rejected_by"))
-        cur = next
-        rej
-      }
-    (rejected :+ cur.select(col(idCol), lit("accepted").as("rejected_by")))
+    val prepared = Materialize.pin(redactKeepVec(batch, idCol, textCol, vecCol))
+    val stages = ingestGates(spark, cfg, idCol, textCol, vecCol).flatMap(_.stages)
+    val units = new Units(spark, stages.count(perRow))
+    val survivors = try foldStages(units, prepared, stages) finally units.close()
+    val frames = prepared +: survivors.map(_.frame)
+    val rejected = survivors.zipWithIndex.map { case (s, i) =>
+      frames(i).select(col(idCol))
+        .join(s.frame.select(col(idCol)), Seq(idCol), "left_anti")
+        .select(col(idCol), lit(s.name).as("rejected_by"))
+    }
+    (rejected :+ frames.last.select(col(idCol), lit("accepted").as("rejected_by")))
       .reduce(_ unionByName _)
       .join(nPii, Seq(idCol))
   }
 
   /** One stage's per-micro-batch operational metrics — the row shape of
     * the sink's `<monitorPath>_stages/batch_id=N` report: which gate
-    * saw how many rows, kept how many, and how long it took. The
-    * "which gate is slow / eating my data" view a production 100 TB
-    * ingest needs, complementing [[ingestPipelineTrace]]'s per-ROW
-    * decision audit.
+    * saw how many rows, kept how many, and how long its own work took
+    * (`wall_ms`: for a [[PerRow]] stage its decision plus its apply;
+    * decisions run concurrently, so stage walls overlap and do not sum
+    * to the batch's wall). The "which gate is slow / eating my data"
+    * view a production 100 TB ingest needs, complementing
+    * [[ingestPipelineTrace]]'s per-ROW decision audit.
     */
   final case class IngestStageMetric(stage: String, stage_idx: Int,
                                      rows_in: Long, rows_out: Long,
                                      wall_ms: Long)
 
-  /** THE streaming gate sink: one `foreachBatch` DAG per micro-batch.
+  private def perRow(stage: Stage): Boolean = stage._2.isInstanceOf[PerRow]
+
+  /** The bounded pool of one micro-batch of [[startGateSink]] (and of one
+    * [[ingestPipelineTrace]] call). Each unit runs through
+    * `SQLExecution.withThreadLocalCaptured`, which carries the calling
+    * thread's local properties into the pool thread: the stream's job
+    * group, so `stop()` still cancels every unit's jobs, and
+    * `streaming.sql.batchId`, so listeners attribute them to the batch.
+    * Units are started from the calling thread only. `close()` waits for
+    * every unit started, whatever failed, so no unit outlives its batch.
+    */
+  private final class Units(spark: SparkSession, threads: Int) extends AutoCloseable {
+    private val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(threads, 1), (r: Runnable) => {
+        val t = new Thread(r, "graft-gate-sink")
+        t.setDaemon(true)
+        t
+      })
+    private val started =
+      scala.collection.mutable.ArrayBuffer.empty[java.util.concurrent.CompletableFuture[_]]
+
+    def run[T](body: => T): java.util.concurrent.CompletableFuture[T] = {
+      val f = org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(body)
+      started += f
+      f
+    }
+
+    /** A unit's result, or its own error (not the future's wrapper). */
+    def await[T](f: java.util.concurrent.CompletableFuture[T]): T =
+      try f.join()
+      catch {
+        case e: java.util.concurrent.CompletionException if e.getCause != null =>
+          throw e.getCause
+      }
+
+    /** Waits for every unit started, then rethrows the first error. */
+    def awaitAll(): Unit =
+      started.toList.map(f => scala.util.Try(await(f)))
+        .collectFirst { case scala.util.Failure(e) => e }
+        .foreach(e => throw e)
+
+    def close(): Unit =
+      try started.foreach(f => scala.util.Try(f.join()))
+      finally pool.shutdown()
+  }
+
+  /** One stage's survivors in [[foldStages]]: the pinned frame, its row
+    * count (observed on the pin's job; the thunk waits for it) and the
+    * stage's own wall.
+    */
+  private final case class Survivors(name: String, frame: DataFrame,
+                                     rows: () => Long, wallMs: Long)
+
+  /** THE stage fold of [[startGateSink]] and [[ingestPipelineTrace]],
+    * over the pinned `prepared` frame. Every [[PerRow]] stage is decided
+    * first, all at once on `units`, over `prepared`: each decision is
+    * pinned as the keep-set of its ids. The fold then walks the stages
+    * in contract order, applying a per-row stage as a left-semi join of
+    * its keep-set on its id column and running every other stage (the
+    * intra-batch checks, the pair gate's batch-domain decision) on the
+    * survivors. Each survivor frame is pinned, and counted by the pin's
+    * own job.
+    */
+  private def foldStages(units: Units, prepared: DataFrame,
+                         stages: Seq[Stage]): Seq[Survivors] = {
+    val decisions = stages.map {
+      case (_, PerRow(idCol, keep)) => Some(units.run {
+        val t = System.nanoTime()
+        val ids = Materialize.pin(keep(prepared).select(col(idCol)))
+        (ids, System.nanoTime() - t)
+      })
+      case _ => None
+    }
+    var cur = prepared
+    stages.zip(decisions).map { case ((name, stage), decision) =>
+      val (apply, decideNs) = (stage, decision) match {
+        case (PerRow(idCol, _), Some(f)) =>
+          val (ids, ns) = units.await(f)
+          ((df: DataFrame) => df.join(ids, Seq(idCol), "left_semi"), ns)
+        case _ => (stage, 0L)
+      }
+      val t = System.nanoTime()
+      val (next, rows) = Materialize.pinCounted(apply(cur))
+      cur = next
+      Survivors(name, next, rows, (System.nanoTime() - t + decideNs) / 1000000L)
+    }
+  }
+
+  /** THE streaming gate sink: one `foreachBatch` DAG per micro-batch,
+    * its independent units run concurrently on a per-batch pool
+    * ([[Units]], one thread per unit that can be in flight at once,
+    * shut down when the batch ends).
     *
     *   1. `prepare` (stage 0 — redaction for text, signature decode for
     *      media; pass-through by default) runs once and is pinned: every
-    *      stage and the monitor consume it.
-    *   2. The gates' stages fold in order, each survivor frame pinned
-    *      BEFORE the appends mutate the indexes a lazy plan would
-    *      re-read, and counted.
-    *   3. Survivors land in `outPath/batch_id=N`, overwritten, so a
-    *      replayed batch (restart after failure between write and commit)
-    *      lands in the same place instead of duplicating: idempotent
-    *      writes plus the checkpoint's offset tracking give end-to-end
-    *      exactly-once. Readers scan `outPath` as one partitioned table.
-    *   4. Each gate appends the survivors to its indexes, in gate order,
-    *      then [[maybeCompactIndexes]] runs on the `compactEvery` cadence.
-    *   5. A per-batch [[IngestStageMetric]] report (stage, rows in/out,
-    *      wall) lands at `<monitorPath>_stages/batch_id=N`.
-    *   6. `monitor`, if set, maps the prepared frame — what ARRIVES, not
-    *      what survives — to a report at `monitorPath/batch_id=N` (e.g.
+    *      decision and the monitor consume it.
+    *   2. `monitor`, if set, starts as soon as `prepared` is pinned: it
+    *      maps the prepared frame — what ARRIVES, not what survives — to
+    *      a report at `monitorPath/batch_id=N` (e.g.
     *      [[graft.ops.Checks.psiAgainstReference]], the drift PSI).
+    *   3. [[foldStages]]: every [[PerRow]] stage (corpus probes, frozen
+    *      artifacts) is decided at once over `prepared`; the fold walks
+    *      the gates' stages in order, applying those decisions as
+    *      left-semi joins and running the intra-batch checks on the
+    *      survivors. Every survivor frame is pinned BEFORE the appends
+    *      mutate the indexes a lazy plan would re-read, and its row
+    *      count is observed on the pin's own job.
+    *   4. After the fold, concurrently: survivors land in
+    *      `outPath/batch_id=N`, overwritten, so a replayed batch (restart
+    *      after failure between write and commit) lands in the same
+    *      place instead of duplicating — idempotent writes plus the
+    *      checkpoint's offset tracking give end-to-end exactly-once, and
+    *      readers scan `outPath` as one partitioned table; each gate
+    *      appends the survivors to its indexes and then runs
+    *      [[maybeCompactIndexes]] on its own indexes, on the
+    *      `compactEvery` cadence (a gate's appends and compaction stay in
+    *      order; gates own disjoint indexes).
+    *   5. A per-batch [[IngestStageMetric]] report (stage, rows in/out,
+    *      own wall) lands at `<monitorPath>_stages/batch_id=N`.
+    *   6. The batch returns only when every unit has finished. On a
+    *      failure it still waits for every unit started before it
+    *      rethrows the first error, so no append or index swap can
+    *      overlap the next batch's (or the restarted query's) probes.
     *
     * With no gates the sink is the idempotent batchId parquet sink; with
     * `prepare = ("redact", TextAnalysis.redactPii(_, id, text))` it is
-    * the PII scrub that runs before anything persists. Pins are
-    * semantics-preserving and the counts read the pinned blocks the next
-    * stage consumes anyway, so the report costs one cheap job per stage
-    * on batch-sized frames.
+    * the PII scrub that runs before anything persists.
     */
   def startGateSink(df: DataFrame, gates: Seq[Gate], outPath: String,
                     monitorPath: String, checkpoint: String,
@@ -1121,29 +1250,40 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        def since(t: Long) = (System.nanoTime() - t) / 1000000L
-        val t0 = System.nanoTime()
-        val prepared = prepare._2(batch.toDF()).transform(Materialize.pin)
-        val nArrived = prepared.count()
-        val metrics = scala.collection.mutable.ArrayBuffer(
-          IngestStageMetric(prepare._1, 0, nArrived, nArrived, since(t0)))
-        val accepted = gates.flatMap(_.stages).zipWithIndex
-          .foldLeft(prepared) { case (cur, ((name, stage), i)) =>
-            val t = System.nanoTime()
-            val next = stage(cur).transform(Materialize.pin)
-            metrics += IngestStageMetric(name, i + 1, metrics.last.rows_out,
-              next.count(), since(t))
-            next
+        val stages = gates.flatMap(_.stages)
+        // In flight at once: the monitor, plus either every decision
+        // (during the fold) or the landing write, each gate's append and
+        // the report (after it).
+        val units = new Units(spark,
+          1 + math.max(stages.count(perRow), gates.size + 2))
+        try {
+          val t0 = System.nanoTime()
+          val (prepared, arrived) =
+            Materialize.pinCounted(prepare._2(batch.toDF()))
+          val prepareMs = (System.nanoTime() - t0) / 1000000L
+          monitor.foreach(m => units.run(m(prepared).write.mode("overwrite")
+            .parquet(s"$monitorPath/batch_id=$batchId")))
+          val survivors = foldStages(units, prepared, stages)
+          val accepted = survivors.lastOption.fold(prepared)(_.frame)
+          units.run(accepted.write.mode("overwrite")
+            .parquet(s"$outPath/batch_id=$batchId"))
+          gates.foreach(g => units.run {
+            g.append(accepted)
+            maybeCompactIndexes(spark, g.indexPaths, batchId, compactEvery)
+          })
+          units.run {
+            val rows = (arrived +: survivors.map(_.rows)).map(_())
+            val metrics = IngestStageMetric(prepare._1, 0, rows.head,
+              rows.head, prepareMs) +: survivors.zipWithIndex.map {
+              case (s, i) => IngestStageMetric(s.name, i + 1, rows(i),
+                rows(i + 1), s.wallMs)
+            }
+            import spark.implicits._
+            metrics.toDF().write.mode("overwrite")
+              .parquet(s"${monitorPath}_stages/batch_id=$batchId")
           }
-        accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        gates.foreach(_.append(accepted))
-        maybeCompactIndexes(spark, gates.flatMap(_.indexPaths), batchId,
-          compactEvery)
-        import spark.implicits._
-        metrics.toSeq.toDF().write.mode("overwrite")
-          .parquet(s"${monitorPath}_stages/batch_id=$batchId")
-        monitor.foreach(_(prepared).write.mode("overwrite")
-          .parquet(s"$monitorPath/batch_id=$batchId"))
+          units.awaitAll()
+        } finally units.close()
       }
       .start()
 

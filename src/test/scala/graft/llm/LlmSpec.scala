@@ -176,6 +176,29 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("readLayout under concurrent readers leaves the discovery-" +
+    "parallelism conf as it found it") {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    val dir = java.nio.file.Files.createTempDirectory("read_layout").toString
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      spark.range(0, 64).select($"id", ($"id" % 8).as("band"))
+        .write.mode("overwrite").partitionBy("band").parquet(dir)
+      spark.conf.unset(key)
+      // 8 threads x 25 reads: an unlocked set/restore pair saves another
+      // reader's override as its "prior" value and leaves it set.
+      val readers = (0 until 8).map(_ => pool.submit(new Runnable {
+        def run(): Unit = (0 until 25).foreach(_ =>
+          assert(BandedIndex.readLayout(spark, dir).columns.contains("band")))
+      }))
+      readers.foreach(_.get())
+      assert(!spark.conf.getAll.contains(key), spark.conf.getAll.get(key))
+    } finally {
+      pool.shutdown()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("compactIndex repairs a crash-replayed append: duplicate rows " +
     "dropped, row set equals the single-append layout, probe unchanged") {
     val docs = spark.read.parquet(sf("documents")).select($"doc_id", $"text")

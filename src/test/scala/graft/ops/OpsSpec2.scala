@@ -380,6 +380,24 @@ class SourcesChecksSpec extends SparkSpec {
     }
   }
 
+  test("filesUnder walks the same files as a recursive listFiles") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("files_under").toString
+    try {
+      // Partition subdirectories plus _SUCCESS and .crc side files.
+      (0 until 40).map(i => (i.toLong, i % 4)).toDF("id", "p")
+        .write.partitionBy("p").parquet(s"$dir/t")
+      val root = new org.apache.hadoop.fs.Path(s"$dir/t")
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(root, true)
+      val listed = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(st => (st.getPath.toString, st.getLen)).toSet
+      val walked = Sources.filesUnder(fs, root)
+        .map(st => (st.getPath.toString, st.getLen)).toSet
+      assert(walked.size > 4 && walked === listed)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("compactParquet lists partitioned layouts recursively; rejects bad target") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("compact_part").toString

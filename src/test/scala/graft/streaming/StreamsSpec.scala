@@ -376,7 +376,7 @@ class StreamsSpec extends SparkSpec {
       graft.llm.TextAnalysis.writeKnLm(corpus, "doc_id", "text", lm)
       val mem = MemoryStream[Doc]
       val q = Streams.startGateSink(mem.toDF(),
-        Seq(Streams.qualityGate(lm, "doc_id", "text")), out, s"$root/mon", ckpt)
+        Seq(Streams.qualityGate(spark, lm, "doc_id", "text")), out, s"$root/mon", ckpt)
       try {
         // 10: corpus-typical (all bigrams frequent) -> accept.
         // 11: novel bigram ("mat sat" never seen) -> reject.
@@ -421,7 +421,7 @@ class StreamsSpec extends SparkSpec {
         "y", model)
       val mem = MemoryStream[Doc]
       val q = Streams.startGateSink(mem.toDF(),
-        Seq(Streams.classifierGate(model, "doc_id", "text")), out,
+        Seq(Streams.classifierGate(spark, model, "doc_id", "text")), out,
         s"$root/mon", ckpt)
       try {
         mem.addData(Doc(100L, "alpha beta gamma common words here marker"),
@@ -1242,21 +1242,24 @@ class StreamsSpec extends SparkSpec {
       new java.io.File(root))
   }
 
-  test("composed ingest pipeline sink: all stages gate one stream, " +
-    "redaction lands (not raw PII), indexes grow cross-batch, intra-batch " +
-    "clones drop, state survives checkpoint restart, monitor reports") {
-    implicit val sqlCtx = spark.sqlContext
-    def e(i: Int, scale: Float = 1.0f): Array[Float] = {
-      val a = Array.fill(64)(0.0f); a(i) = scale; a
-    }
-    // Four disjoint-vocabulary corpus docs x10 copies each: every bigram
-    // has identical KN statistics (c12 = c1 = 10, single continuation),
-    // so the stored threshold equals the uniform per-bigram surprisal
-    // and EVERY all-seen-bigram document passes the KN gate — the gate
-    // rejects exactly the unseen-bigram rows, keeping this spec about
-    // the COMPOSITION, not the LM boundary (QualityGate spec owns that).
-    // C deliberately contains the '<EMAIL>' placeholder so an arriving
-    // PII row is acceptable ONLY through redaction. y: B-words negative.
+  /** A 64-dim one-hot embedding, scaled. */
+  private def e(i: Int, scale: Float = 1.0f): Array[Float] = {
+    val a = Array.fill(64)(0.0f); a(i) = scale; a
+  }
+
+  /** The composed pipeline's corpus indexes and frozen artifacts, built
+    * under `root`.
+    *
+    * Four disjoint-vocabulary corpus docs x10 copies each: every bigram
+    * has identical KN statistics (c12 = c1 = 10, single continuation),
+    * so the stored threshold equals the uniform per-bigram surprisal
+    * and EVERY all-seen-bigram document passes the KN gate — the gate
+    * rejects exactly the unseen-bigram rows, keeping these specs about
+    * the COMPOSITION, not the LM boundary (QualityGate spec owns that).
+    * C deliberately contains the '<EMAIL>' placeholder so an arriving
+    * PII row is acceptable ONLY through redaction. y: B-words negative.
+    */
+  private def ingestFixture(root: String): Streams.IngestPipelineConfig = {
     val A = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
     val B = "quark lepton boson hadron meson photon gluon tachyon axion " +
@@ -1269,109 +1272,291 @@ class StreamsSpec extends SparkSpec {
     val texts = Seq(A, B, C, D)
     val corpus = (0 until 40).map(i => DocVec(i.toLong, texts(i % 4),
       e(i % 40))).toDF()
-    val root = java.nio.file.Files.createTempDirectory("ingest_e2e").toString
-    val cfg = graft.streaming.Streams.IngestPipelineConfig(
+    val cfg = Streams.IngestPipelineConfig(
       exactIndexPath = s"$root/exact", nearDupIndexPath = s"$root/near",
       semIndexPath = s"$root/sem", lmPath = s"$root/lm",
       clfModelPath = s"$root/clf", driftRefPath = s"$root/drift",
       nBucketsExact = 8, maxHamming = 7, semThreshold = 0.95,
       numPlanes = 4, numTables = 4)
-    val (out, mon, ckpt) = (s"$root/out", s"$root/mon", s"$root/ckpt")
-    try {
-      graft.llm.Dedup.writeExactDupIndex(corpus, "doc_id", "text", 8,
-        cfg.exactIndexPath)
-      graft.llm.Dedup.writeSimhashWideIndex(corpus, "doc_id", "text",
-        maxHamming = 7, nBuckets = 8, path = cfg.nearDupIndexPath)
-      graft.llm.Similarity.writeLshIndex(corpus, "doc_id", "embedding",
-        numPlanes = 4, numTables = 4, path = cfg.semIndexPath)
-      graft.llm.TextAnalysis.writeKnLm(corpus, "doc_id", "text", cfg.lmPath)
-      graft.llm.Curation.writeQualityClassifier(
-        corpus.withColumn("y", (col("doc_id") % 4 =!= 1).cast("int")),
-        "doc_id", "text", "y", cfg.clfModelPath)
-      graft.ops.Checks.writeDriftReference(
-        corpus.select(length(col("text")).cast("double").as("len")),
-        "len", nBins = 10, path = cfg.driftRefPath)
+    graft.llm.Dedup.writeExactDupIndex(corpus, "doc_id", "text", 8,
+      cfg.exactIndexPath)
+    graft.llm.Dedup.writeSimhashWideIndex(corpus, "doc_id", "text",
+      maxHamming = 7, nBuckets = 8, path = cfg.nearDupIndexPath)
+    graft.llm.Similarity.writeLshIndex(corpus, "doc_id", "embedding",
+      numPlanes = 4, numTables = 4, path = cfg.semIndexPath)
+    graft.llm.TextAnalysis.writeKnLm(corpus, "doc_id", "text", cfg.lmPath)
+    graft.llm.Curation.writeQualityClassifier(
+      corpus.withColumn("y", (col("doc_id") % 4 =!= 1).cast("int")),
+      "doc_id", "text", "y", cfg.clfModelPath)
+    graft.ops.Checks.writeDriftReference(
+      corpus.select(length(col("text")).cast("double").as("len")),
+      "len", nBins = 10, path = cfg.driftRefPath)
+    cfg
+  }
 
+  /** `cfg` with fresh copies of its three growing indexes under `root`;
+    * the frozen artifacts stay shared.
+    */
+  private def freshIndexes(cfg: Streams.IngestPipelineConfig,
+                           root: String): Streams.IngestPipelineConfig = {
+    def copy(from: String, name: String): String = {
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(from),
+        new java.io.File(s"$root/$name"))
+      s"$root/$name"
+    }
+    cfg.copy(exactIndexPath = copy(cfg.exactIndexPath, "exact"),
+      nearDupIndexPath = copy(cfg.nearDupIndexPath, "near"),
+      semIndexPath = copy(cfg.semIndexPath, "sem"))
+  }
+
+  private val ingestStages = Seq("redact", "exact", "exact_intra", "near",
+    "near_intra", "semantic", "semantic_intra", "kn", "clf")
+
+  /** Two micro-batches with one row per decision outcome, then a restart
+    * on the same checkpoint, through the flagship sink over `cfg`'s
+    * indexes (which grow); asserts what lands, the monitor and stage
+    * reports, and that each grown index rejects a copy of an accepted row.
+    */
+  private def composedSinkRun(cfg: Streams.IngestPipelineConfig,
+                              root: String): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val (out, mon, ckpt) = (s"$root/out", s"$root/mon", s"$root/ckpt")
+    val mem = MemoryStream[DocVec]
+    def start() = Streams.startIngestPipelineSink(mem.toDF(), cfg, out,
+      mon, ckpt, "doc_id", "text", "embedding")
+    val q = start()
+    try {
+      mem.addData(ingestBatches(0): _*)
+      q.processAllAvailable()
+      mem.addData(ingestBatches(1): _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    // Restart on the SAME checkpoint: offsets resume, the indexes keep
+    // the pre-restart growth, and a copy of a pre-restart accept is
+    // rejected while novel rows still land.
+    val q2 = start()
+    try {
+      mem.addData(ingestBatches(2): _*)
+      q2.processAllAvailable()
+    } finally q2.stop()
+
+    val landed = spark.read.parquet(out)
+      .select("doc_id", "text").as[(Long, String)].collect().toMap
+    assert(landed.keySet === Set(100L, 102L, 113L, 121L))
+    // Raw PII never lands; the placeholder text does.
+    assert(landed(102L) === "contact <EMAIL> for access codes")
+    assert(!landed.values.exists(_.contains("dave@corp.io")))
+    // The monitor reported every micro-batch (nBins rows each),
+    // including after the restart.
+    for (b <- 0 to 2)
+      assert(spark.read.parquet(s"$mon/batch_id=$b").count() === 10L)
+    // The per-stage ops report landed beside it for every batch.
+    assertStageReports(mon, 3, ingestStages)
+    // Batch 0: 7 arrived, 2 accepted — the report carries the
+    // decision totals the landed output implies.
+    val m0 = spark.read.parquet(s"${mon}_stages/batch_id=0")
+    assert(m0.filter($"stage" === "redact")
+      .head.getAs[Long]("rows_in") === 7L)
+    assert(m0.filter($"stage" === "clf")
+      .head.getAs[Long]("rows_out") === 2L)
+    // Final-index replays: each family's gate now rejects a copy of an
+    // accepted row through the state grown across both processes.
+    assert(Streams.dedupGateBatch(spark, cfg.exactIndexPath,
+      Seq(DocVec(200L, "tern dove finch jay crow", e(60))).toDF(),
+      "doc_id", "text").count() === 0L)
+    assert(Streams.nearDupGateBatch(spark, cfg.nearDupIndexPath,
+      Seq(DocVec(201L, "crow jay finch dove tern", e(60))).toDF(),
+      "doc_id", "text", 7).count() === 0L)
+    assert(Streams.semanticGateBatch(spark, cfg.semIndexPath,
+      Seq(DocVec(202L, "unrelated words entirely", e(56, 9.0f))).toDF(),
+      "doc_id", "embedding", 0.95, 4, 4,
+      probeTables = cfg.semProbeTables).count() === 0L)
+  }
+
+  /** Micro-batches over [[ingestFixture]]'s corpus, planting every
+    * decision outcome; batch 3 plants copies of batch 0-2 accepts.
+    */
+  private lazy val ingestBatches: Seq[Seq[DocVec]] = Seq(
+    Seq(
+      // accept: novel A-prefix, all bigrams seen, positive class
+      DocVec(100L, "alpha beta gamma delta epsilon", e(50)),
+      // exact: case/space-noised verbatim corpus copy
+      DocVec(101L, "  ALPHA beta   GAMMA delta epsilon zeta eta theta " +
+        "iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon ",
+        e(51)),
+      // accept THROUGH redaction: lands as the C-prefix placeholder
+      // text; unredacted 'dave@corp.io' would be an unseen bigram
+      DocVec(102L, "contact dave@corp.io for access codes", e(52)),
+      // exact_intra: same normalized text as 100, larger id
+      DocVec(103L, "alpha beta gamma delta epsilon", e(53)),
+      // semantic_intra: novel text but 100's direction scaled
+      DocVec(105L, "robin sparrow falcon heron crane", e(50, 2.0f)),
+      // clf: negative-class (B-word) prefix
+      DocVec(106L, "quark lepton boson hadron meson", e(54)),
+      // kn: every-other-A tokens — unseen bigrams
+      DocVec(107L, "alpha gamma epsilon eta iota", e(57))),
+    Seq(
+      // exact via the GROWN index: verbatim copy of accepted 100
+      DocVec(110L, "alpha beta gamma delta epsilon", e(55)),
+      // near via the GROWN index: bag-reordered copy of 102's
+      // REDACTED landed text (also proves redact-before-probe)
+      DocVec(111L, "access for dave@corp.io codes contact", e(58)),
+      // semantic via the GROWN index: 100's direction again
+      DocVec(112L, "robin sparrow falcon heron crane swan goose",
+        e(50, 4.0f)),
+      // accept: contiguous D-substring, positive class
+      DocVec(113L, "lark wren kite hawk eagle", e(56))),
+    Seq(
+      DocVec(120L, "lark wren kite hawk eagle", e(57)),
+      DocVec(121L, "tern dove finch jay crow", e(58))),
+    Seq(
+      // exact via the grown index: copy of 121
+      DocVec(130L, "TERN dove finch jay crow", e(59)),
+      // near: reordered copy of 113
+      DocVec(131L, "eagle hawk kite wren lark", e(61)),
+      // semantic: 121's direction scaled
+      DocVec(132L, "sparrow falcon heron crane swan", e(58, 3.0f)),
+      // accept, then its exact_intra twin
+      DocVec(133L, "swan goose duck owl lark", e(62)),
+      DocVec(134L, "swan goose duck owl lark", e(63)),
+      // accept through redaction
+      DocVec(135L, "contact eve@corp.io for access", e(60))))
+
+  test("composed ingest pipeline sink: all stages gate one stream, " +
+    "redaction lands (not raw PII), indexes grow cross-batch, intra-batch " +
+    "clones drop, state survives checkpoint restart, monitor reports") {
+    val root = java.nio.file.Files.createTempDirectory("ingest_e2e").toString
+    try composedSinkRun(ingestFixture(root), root)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(root))
+  }
+
+  test("composed ingest pipeline sink, 20 runs over fresh indexes: the " +
+    "concurrent batch units never deadlock and decide the same each run") {
+    val root = java.nio.file.Files.createTempDirectory("ingest_rep").toString
+    try {
+      val cfg = ingestFixture(s"$root/fixture")
+      for (run <- 0 until 20) {
+        val dir = s"$root/run$run"
+        composedSinkRun(freshIndexes(cfg, dir), dir)
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(root))
+  }
+
+  test("flagship sink equals a sequential fold of the same gates: landed " +
+    "rows, stage reports and grown index rows over 4 batches") {
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("ingest_seq").toString
+    try {
+      val fixture = ingestFixture(s"$root/fixture")
+      // The flagship, compacting every 2nd batch, on its own indexes.
+      val sink = freshIndexes(fixture, s"$root/sink")
+      val (out, mon) = (s"$root/sink/out", s"$root/sink/mon")
       val mem = MemoryStream[DocVec]
-      def start() = Streams.startIngestPipelineSink(mem.toDF(), cfg, out,
-        mon, ckpt, "doc_id", "text", "embedding")
-      val q = start()
-      try {
-        mem.addData(
-          // accept: novel A-prefix, all bigrams seen, positive class
-          DocVec(100L, "alpha beta gamma delta epsilon", e(50)),
-          // exact: case/space-noised verbatim corpus copy
-          DocVec(101L, "  ALPHA beta   GAMMA delta epsilon zeta eta theta " +
-            "iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon ",
-            e(51)),
-          // accept THROUGH redaction: lands as the C-prefix placeholder
-          // text; unredacted 'dave@corp.io' would be an unseen bigram
-          DocVec(102L, "contact dave@corp.io for access codes", e(52)),
-          // exact_intra: same normalized text as 100, larger id
-          DocVec(103L, "alpha beta gamma delta epsilon", e(53)),
-          // semantic_intra: novel text but 100's direction scaled
-          DocVec(105L, "robin sparrow falcon heron crane", e(50, 2.0f)),
-          // clf: negative-class (B-word) prefix
-          DocVec(106L, "quark lepton boson hadron meson", e(54)),
-          // kn: every-other-A tokens — unseen bigrams
-          DocVec(107L, "alpha gamma epsilon eta iota", e(57)))
-        q.processAllAvailable()
-        mem.addData(
-          // exact via the GROWN index: verbatim copy of accepted 100
-          DocVec(110L, "alpha beta gamma delta epsilon", e(55)),
-          // near via the GROWN index: bag-reordered copy of 102's
-          // REDACTED landed text (also proves redact-before-probe)
-          DocVec(111L, "access for dave@corp.io codes contact", e(58)),
-          // semantic via the GROWN index: 100's direction again
-          DocVec(112L, "robin sparrow falcon heron crane swan goose",
-            e(50, 4.0f)),
-          // accept: contiguous D-substring, positive class
-          DocVec(113L, "lark wren kite hawk eagle", e(56)))
+      val q = Streams.startIngestPipelineSink(mem.toDF(), sink, out, mon,
+        s"$root/sink/ckpt", "doc_id", "text", "embedding", compactEvery = 2)
+      try ingestBatches.foreach { b =>
+        mem.addData(b: _*)
         q.processAllAvailable()
       } finally q.stop()
-      // Restart on the SAME checkpoint: offsets resume, the indexes keep
-      // the pre-restart growth, and a copy of a pre-restart accept is
-      // rejected while novel rows still land.
-      val q2 = start()
-      try {
-        mem.addData(
-          DocVec(120L, "lark wren kite hawk eagle", e(57)),
-          DocVec(121L, "tern dove finch jay crow", e(58)))
-        q2.processAllAvailable()
-      } finally q2.stop()
 
-      val landed = spark.read.parquet(out)
-        .select("doc_id", "text").as[(Long, String)].collect().toMap
-      assert(landed.keySet === Set(100L, 102L, 113L, 121L))
-      // Raw PII never lands; the placeholder text does.
-      assert(landed(102L) === "contact <EMAIL> for access codes")
-      assert(!landed.values.exists(_.contains("dave@corp.io")))
-      // The monitor reported every micro-batch (nBins rows each),
-      // including after the restart.
-      for (b <- 0 to 2)
-        assert(spark.read.parquet(s"$mon/batch_id=$b").count() === 10L)
-      // The per-stage ops report landed beside it for every batch.
-      assertStageReports(mon, 3, Seq("redact", "exact", "exact_intra", "near",
-        "near_intra", "semantic", "semantic_intra", "kn", "clf"))
-      // Batch 0: 7 arrived, 2 accepted — the report carries the
-      // decision totals the landed output implies.
-      val m0 = spark.read.parquet(s"${mon}_stages/batch_id=0")
-      assert(m0.filter($"stage" === "redact")
-        .head.getAs[Long]("rows_in") === 7L)
-      assert(m0.filter($"stage" === "clf")
-        .head.getAs[Long]("rows_out") === 2L)
-      // Final-index replays: each family's gate now rejects a copy of an
-      // accepted row through the state grown across both processes.
-      assert(Streams.dedupGateBatch(spark, cfg.exactIndexPath,
-        Seq(DocVec(200L, "tern dove finch jay crow", e(60))).toDF(),
-        "doc_id", "text").count() === 0L)
-      assert(Streams.nearDupGateBatch(spark, cfg.nearDupIndexPath,
-        Seq(DocVec(201L, "crow jay finch dove tern", e(60))).toDF(),
-        "doc_id", "text", 7).count() === 0L)
-      assert(Streams.semanticGateBatch(spark, cfg.semIndexPath,
-        Seq(DocVec(202L, "unrelated words entirely", e(56, 9.0f))).toDF(),
-        "doc_id", "embedding", 0.95, 4, 4,
-        probeTables = cfg.semProbeTables).count() === 0L)
+      // The reference: every stage in order on the survivors of the one
+      // before, then each gate's append in turn.
+      val ref = freshIndexes(fixture, s"$root/ref")
+      val gates = Seq(Streams.exactGate(ref.exactIndexPath, "doc_id", "text"),
+        Streams.nearDupGate(ref.nearDupIndexPath, "doc_id", "text",
+          ref.maxHamming),
+        Streams.semanticGate(spark, ref.semIndexPath, "doc_id", "embedding",
+          ref.semThreshold, ref.numPlanes, ref.numTables, ref.semProbeTables),
+        Streams.qualityGate(spark, ref.lmPath, "doc_id", "text"),
+        Streams.classifierGate(spark, ref.clfModelPath, "doc_id", "text"))
+      for ((rows, b) <- ingestBatches.zipWithIndex) {
+        val batch = rows.toDF()
+        val prepared = graft.ops.Materialize.pin(
+          graft.llm.TextAnalysis.redactPii(batch, "doc_id", "text")
+            .select(col("doc_id"), col("redacted").as("text"))
+            .join(batch.select("doc_id", "embedding"), Seq("doc_id")))
+        val n = prepared.count()
+        var cur = prepared
+        val report = ("redact", n, n) +: gates.flatMap(_.stages).map {
+          case (name, stage) =>
+            val in = cur.count()
+            cur = graft.ops.Materialize.pin(stage(cur))
+            (name, in, cur.count())
+        }
+        gates.foreach(_.append(cur))
+        val sinkReport = spark.read.parquet(s"${mon}_stages/batch_id=$b")
+          .select("stage_idx", "stage", "rows_in", "rows_out")
+          .as[(Int, String, Long, Long)].collect().sortBy(_._1)
+          .map(r => (r._2, r._3, r._4)).toSeq
+        assert(sinkReport === report, s"batch $b")
+        assert(spark.read.parquet(s"$out/batch_id=$b")
+          .select("doc_id", "text").as[(Long, String)].collect().toSet ===
+          cur.select("doc_id", "text").as[(Long, String)].collect().toSet,
+          s"batch $b")
+      }
+      // Every batch accepted something, and the landed rows are the ones
+      // the planted outcomes name.
+      assert(spark.read.parquet(out).select("doc_id").as[Long].collect()
+        .toSet === Set(100L, 102L, 113L, 121L, 133L, 135L))
+      for ((a, b) <- Seq(sink.exactIndexPath -> ref.exactIndexPath,
+          sink.nearDupIndexPath -> ref.nearDupIndexPath,
+          sink.semIndexPath -> ref.semIndexPath)) {
+        def rowsOf(p: String) =
+          spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
+        assert(rowsOf(a) === rowsOf(b), a)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(root))
+  }
+
+  test("gate sink failure: a throwing append fails the batch only after " +
+    "every unit finished; the restarted query lands that batch exactly once") {
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("gate_fail").toString
+    val (idx, out, ckpt) = (s"$root/idx", s"$root/out", s"$root/ckpt")
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger()
+    val slowDone = new java.util.concurrent.atomic.AtomicInteger()
+    val failNext = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // A gate whose append outlasts the failing one, and a gate whose
+    // append throws when armed.
+    val slow = Streams.Gate(Nil, append = acc => {
+      inFlight.incrementAndGet()
+      try { Thread.sleep(1500); acc.count(); slowDone.incrementAndGet() }
+      finally inFlight.decrementAndGet()
+    })
+    val failing = Streams.Gate(Nil, append = _ =>
+      if (failNext.getAndSet(false))
+        throw new IllegalStateException("append failed"))
+    try {
+      graft.llm.Dedup.writeExactDupIndex(Seq(Doc(1L, "alpha beta gamma")).toDF(),
+        "doc_id", "text", 2, idx)
+      val mem = MemoryStream[Doc]
+      def start() = Streams.startGateSink(mem.toDF(),
+        Seq(Streams.exactGate(idx, "doc_id", "text"), slow, failing), out,
+        s"$root/mon", ckpt)
+      val q = start()
+      try {
+        mem.addData(Doc(10L, "first batch doc"), Doc(11L, "alpha beta gamma"))
+        q.processAllAvailable()
+        failNext.set(true)
+        mem.addData(Doc(20L, "second batch doc"), Doc(21L, "first batch doc"),
+          Doc(22L, "second batch doc"))
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q.processAllAvailable()
+        }
+        // The batch failed only once the slow append had finished.
+        assert(inFlight.get() === 0)
+        assert(slowDone.get() === 2)
+      } finally q.stop()
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
+      val landed = spark.read.parquet(out).select("doc_id", "batch_id")
+        .as[(Long, Int)].collect().toSeq.sorted
+      assert(landed === Seq((10L, 0), (20L, 1)))
+      assertStageReports(s"$root/mon", 2, Seq("arrive", "exact", "exact_intra"))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
   }
