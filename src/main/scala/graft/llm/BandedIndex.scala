@@ -31,8 +31,9 @@ import graft.ops.Materialize
   *   None when `banding` emits a bounded `bkt` itself (the layout then
   *   records no `nBuckets`).
   * @param residual equi-join keys beyond the partition columns.
-  * @param pinsQuery whether a static-pruned probe pins the member frame
-  *   (wide hamming does not: its callers pin their own decoded hashes).
+  * @param pinsQuery whether the probe pins the member frame when it
+  *   prunes statically, which it does for a pinned query frame (wide
+  *   hamming does not pin: its callers pin their own decoded hashes).
   */
 private[llm] final case class BandFamily(
     params: Map[String, String],
@@ -54,12 +55,14 @@ private[llm] final case class BandFamily(
   *    rebuild would use — probing a grown index equals probing a rebuilt
   *    one.
   *  - PROBE: the (small) query side's band rows broadcast-join the index
-  *    on the PARTITION columns — dynamic partition pruning (or, for
-  *    pinned stats-less batches, a static key prune) reads only the
-  *    directories the delta hashes into — with any unbounded band key
-  *    finishing the match as an equi-join residual inside the pruned
-  *    read; self-pairs are dropped. The family's verify measure
-  *    (Jaccard / hamming / cosine) runs on the joined rows.
+  *    on the PARTITION columns, and only the directories the delta
+  *    hashes into are read — with any unbounded band key finishing the
+  *    match as an equi-join residual inside the pruned read; self-pairs
+  *    are dropped. The probe picks the pruning from its input: dynamic
+  *    partition pruning for a file-backed query frame, a static key
+  *    prune for one that reads from a pinned (stats-less) frame. The
+  *    family's verify measure (Jaccard / hamming / cosine) runs on the
+  *    joined rows.
   *
   * The families ([[BandFamily]] instances) and their params SIDECAR
   * entries (`_GRAFT_INDEX_PARAMS`, underscore-hidden from Spark's file
@@ -251,35 +254,38 @@ private[graft] object BandedIndex {
   }
 
   /** Probe family `f`'s layout at `indexPath` with `rows`: sidecar check
-    * + width readback, member kernel (pinned post-kernel when
-    * `staticPrune` and the family pins), band explode, then the
-    * static-prune ([[probeJoinStatic]]) or DPP ([[probeJoin]]) join.
-    * `verify` gets the joined rows and the (possibly pinned) member frame
-    * and applies the family's measure.
+    * + width readback, member kernel, band explode, then the join. The
+    * probe picks the join from its input: when `rows` reads from a
+    * pinned frame ([[readsPinned]]) it takes the static-prune join
+    * ([[probeJoinStatic]]), pinning post-kernel when the family pins
+    * ([[BandFamily.pinsQuery]]); otherwise the DPP join ([[probeJoin]]).
+    * A pinned (stats-less) frame defeats DPP's benefit heuristic, so
+    * the streaming gates, which pin their batches, prune statically,
+    * while query paths over file-backed frames keep DPP. `verify` gets
+    * the joined rows and the (possibly pinned) member frame and applies
+    * the family's measure.
     *
-    * `staticPrune` is the caller's call: pinned (stats-less) batch
-    * frames defeat DPP's benefit heuristic, so the streaming gates prune
-    * statically; query paths over plain frames keep DPP. On the DPP path
-    * the broadcast guard bound is `rows.count()` (or `rowsHint` when the
-    * caller already counted it) x the family's fan-out — a column-pruned
-    * count of the un-exploded input that never runs the signature kernel
-    * or the explode.
+    * On the DPP path the broadcast guard bound is `rows.count()` (or
+    * `rowsHint` when the caller already counted it) x the family's
+    * fan-out — a column-pruned count of the un-exploded input that never
+    * runs the signature kernel or the explode.
     */
   private[llm] def probe(spark: SparkSession, f: BandFamily, indexPath: String,
-                         rows: DataFrame, staticPrune: Boolean,
-                         rowsHint: Long = -1L)
+                         rows: DataFrame, rowsHint: Long = -1L)
                         (verify: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val nBuckets = layoutBuckets(spark, indexPath, f, "probe banded index")
+    val static = readsPinned(rows)
     // A static probe reads its query frame twice, so it pins post-kernel:
     // the member frame BEFORE the explode (an exploded frame would copy
     // the payload once per band), or, at fan-out one, the band frame
     // itself — no wider than the members, bucket column included.
-    val pin = staticPrune && f.pinsQuery
-    val members = Materialize.pinIf(pin && f.fanOut > 1, f.members(rows, true))
-    val qb = Materialize.pinIf(pin && f.fanOut == 1,
-      banded(f, members, query = true, nBuckets))
+    val pin = static && f.pinsQuery
+    val kernel = f.members(rows, true)
+    val members = if (pin && f.fanOut > 1) Materialize.pin(kernel) else kernel
+    val bands = banded(f, members, query = true, nBuckets)
+    val qb = if (pin && f.fanOut == 1) Materialize.pin(bands) else bands
     val joined =
-      if (staticPrune)
+      if (static)
         probeJoinStatic(spark, indexPath, qb, f.residual,
           maxBroadcastRows = f.maxBroadcastRows)
       else
@@ -287,6 +293,14 @@ private[graft] object BandedIndex {
           (if (rowsHint >= 0L) rowsHint else rows.count()) * f.fanOut)
     verify(joined, members)
   }
+
+  /** Whether `df` reads from a pinned frame: its analyzed plan has a
+    * `LogicalRDD` leaf, which is what a checkpoint ([[Materialize.pin]])
+    * plans as. A file-backed frame has none.
+    */
+  private def readsPinned(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves()
+      .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
 
   /** Write a banded layout. `banded` must carry `cand_id`, `band`, `bkt`
     * plus the family's payload columns. `sidecar` Some = (re)build:
@@ -382,9 +396,10 @@ private[graft] object BandedIndex {
     * probe costs one extra pass of `qb`'s plan, not a payload copy.
     * Column pruning does NOT prune the per-row KERNEL that computes
     * the band key (a simhash token pass, an md5 normalize, an LSH
-    * projection — the key derives from it), so [[probe]] pins the
-    * family's POST-KERNEL pre-explode member frame when static
-    * pruning is on (round-19; [[BandFamily.pinsQuery]]): one
+    * projection — the key derives from it), so [[probe]], which takes
+    * this path exactly when its query frame reads from a pinned frame,
+    * pins the family's POST-KERNEL pre-explode member frame first
+    * (round-19; [[BandFamily.pinsQuery]]): one
     * narrow row per doc, and both passes read stored blocks instead
     * of re-running the kernel. Round-18 measured the tempting
     * alternative — pinning `qb` itself here — at ~3× the whole

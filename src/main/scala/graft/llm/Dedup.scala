@@ -250,7 +250,7 @@ object Dedup {
                         threshold: Double,
                         mat: graft.ops.Materialize = graft.ops.Materialize.Local): DataFrame =
     BandedIndex.probe(spark, nearDupFamily(idCol, textCol, shingleK, bands,
-        rowsPerBand, mat), indexPath, delta, staticPrune = false) { (joined, _) =>
+        rowsPerBand, mat), indexPath, delta) { (joined, _) =>
       joined
         .withColumn("inter", size(array_intersect(col("q_sh"), col("shingles"))))
         .withColumn("jaccard",
@@ -301,19 +301,18 @@ object Dedup {
 
   /** Probe a [[writeExactDupIndex]] layout with a delta batch: bucket-key
     * equi-join under dynamic partition pruning (or a static key prune,
-    * for pinned streaming batches), then the carried md5 verifies true
-    * text equality (a 60-bit bucket-key collision cannot produce a false
-    * pair).
+    * which [[BandedIndex.probe]] picks itself for a pinned delta), then
+    * the carried md5 verifies true text equality (a 60-bit bucket-key
+    * collision cannot produce a false pair).
     *
     * @return (query_id, cand_id): delta docs paired with every index
     *   member whose normalized text is identical (self excluded).
     */
   def probeExactDupIndex(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, delta: DataFrame,
-                         idCol: String, textCol: String,
-                         staticPrune: Boolean = false): DataFrame =
-    BandedIndex.probe(spark, exactDupFamily(idCol, textCol), indexPath, delta,
-        staticPrune) { (joined, _) =>
+                         idCol: String, textCol: String): DataFrame =
+    BandedIndex.probe(spark, exactDupFamily(idCol, textCol), indexPath,
+        delta) { (joined, _) =>
       joined.filter(col("h128") === col("q_h128"))
         .select(col("query_id"), col("cand_id"))
     }
@@ -546,7 +545,7 @@ object Dedup {
                         idCol: String, textCol: String,
                         maxHamming: Int): DataFrame =
     BandedIndex.probe(spark, simhashFamily(idCol, textCol, maxHamming),
-        indexPath, delta, staticPrune = false) { (joined, _) =>
+        indexPath, delta) { (joined, _) =>
       joined.withColumn("hamming", bit_count(col("q_sh").bitwiseXOR(col("sh"))))
         .filter(col("hamming") <= maxHamming)
         .select(col("query_id"), col("cand_id"), col("hamming")).distinct()
@@ -828,8 +827,9 @@ object Dedup {
 
   /** Probe a [[writeHammingWideIndex]] layout with a delta's two-word
     * signatures: band slices join the index on the PARTITION columns
-    * (dynamic partition pruning, or a static key prune for pinned
-    * batches), survivors verify the exact two-word `bit_count(xor)` sum.
+    * (dynamic partition pruning, or a static key prune, which
+    * [[BandedIndex.probe]] picks itself for pinned signatures),
+    * survivors verify the exact two-word `bit_count(xor)` sum.
     *
     * @return (query_id, cand_id, hamming), cand ≠ query,
     *   hamming ≤ maxHamming.
@@ -837,10 +837,10 @@ object Dedup {
   def probeHammingWideIndex(spark: org.apache.spark.sql.SparkSession,
                             indexPath: String, sigs: DataFrame,
                             idCol: String, loCol: String, hiCol: String,
-                            nLoBits: Int, nHiBits: Int, maxHamming: Int,
-                            staticPrune: Boolean = false): DataFrame =
+                            nLoBits: Int, nHiBits: Int,
+                            maxHamming: Int): DataFrame =
     BandedIndex.probe(spark, hammingWideFamily(idCol, loCol, hiCol, nLoBits,
-      nHiBits, maxHamming), indexPath, sigs, staticPrune)(wideVerify(maxHamming))
+      nHiBits, maxHamming), indexPath, sigs)(wideVerify(maxHamming))
 
   /** [[probeHammingWideIndex]] lifted to signature SETS — the write-time
     * twin of [[hammingNearDupPairsSetWide]]: the index stores one row per
@@ -931,8 +931,9 @@ object Dedup {
       path)
 
   /** Probe a [[writeSimhashWideIndex]] layout with a delta batch — the
-    * [[probeSimhashIndex]] dataflow with the two-word verify;
-    * `staticPrune` as in [[BandedIndex.probe]].
+    * [[probeSimhashIndex]] dataflow with the two-word verify; the
+    * pruning (DPP, or static for a pinned delta) is picked by
+    * [[BandedIndex.probe]].
     *
     * @return (query_id, cand_id, hamming), cand ≠ query,
     *   hamming ≤ maxHamming.
@@ -940,10 +941,9 @@ object Dedup {
   def probeSimhashWideIndex(spark: org.apache.spark.sql.SparkSession,
                             indexPath: String, delta: DataFrame,
                             idCol: String, textCol: String,
-                            maxHamming: Int,
-                            staticPrune: Boolean = false): DataFrame =
+                            maxHamming: Int): DataFrame =
     BandedIndex.probe(spark, simhashWideFamily(idCol, textCol, maxHamming),
-      indexPath, delta, staticPrune)(wideVerify(maxHamming))
+      indexPath, delta)(wideVerify(maxHamming))
 
   /** Exact n-gram Jaccard similarity join: pairs with Jaccard ≥ `threshold`
     * over distinct word k-shingles — the count-based set-similarity join.

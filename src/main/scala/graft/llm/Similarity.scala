@@ -977,7 +977,7 @@ object Similarity {
     // RDD barrier. The width pass reads the PROBED partitions only
     // (semi-join on the partition columns), and its aggregate moves
     // (band, bkt) pairs, nothing wider.
-    BandedIndex.probe(spark, fam, indexPath, queries, staticPrune = false) { (joined, q) =>
+    BandedIndex.probe(spark, fam, indexPath, queries) { (joined, q) =>
       val capped =
         if (maxBucketWidth == Long.MaxValue) joined
         else {
@@ -1011,7 +1011,8 @@ object Similarity {
     * [[lshTopKFromIndex]]: the batch's band rows broadcast-join the
     * index on its partition columns, so only the bucket directories the
     * batch hashes into are read, and cosine is scored inline on the
-    * pruned scan.
+    * pruned scan. A pinned batch (the gate's) is pruned statically
+    * instead; [[BandedIndex.probe]] picks which.
     *
     * Deliberately NO hot-bucket cap here, unlike the top-k paths: a cap
     * drops candidates, which for a top-k ranking costs recall but for a
@@ -1026,10 +1027,9 @@ object Similarity {
   def probeLshThreshold(spark: org.apache.spark.sql.SparkSession,
                         indexPath: String, delta: DataFrame, idCol: String,
                         vecCol: String, threshold: Double, numPlanes: Int,
-                        numTables: Int = 4,
-                        staticPrune: Boolean = false): DataFrame =
+                        numTables: Int = 4): DataFrame =
     BandedIndex.probe(spark, lshFamily(idCol, vecCol, numPlanes, numTables),
-      indexPath, delta, staticPrune)((joined, _) => cosineAtLeast(joined, threshold))
+      indexPath, delta)((joined, _) => cosineAtLeast(joined, threshold))
 
   /** The threshold verify of the LSH membership probes: exact cosine of
     * each (query, candidate) collision, deduped on the identical value.
@@ -1073,15 +1073,14 @@ object Similarity {
     * frame before the cosine verify (the [[lshTopK]] two-bounded-
     * broadcasts pattern; carrying the 64-double vector through the
     * expansion would duplicate it ~68× at the p=16 clamp).
-    * `staticPrune` swaps in [[BandedIndex.probeJoinStatic]] for pinned
-    * (stats-less) batch frames — the streaming-gate posture.
+    * A pinned (stats-less) delta — the streaming-gate posture — gets
+    * [[BandedIndex.probeJoinStatic]]: [[BandedIndex.probe]] picks it.
     */
   def probeLshThresholdMultiProbe(spark: org.apache.spark.sql.SparkSession,
                                   indexPath: String, delta: DataFrame,
                                   idCol: String, vecCol: String,
                                   threshold: Double, numPlanes: Int,
-                                  numTables: Int, probeTables: Int,
-                                  staticPrune: Boolean = false)
+                                  numTables: Int, probeTables: Int)
       : DataFrame = {
     val fam = lshMultiProbeFamily(idCol, vecCol, numPlanes, numTables,
       probeTables)
@@ -1089,7 +1088,7 @@ object Similarity {
     // guards: the band-frame bound (via the core) and the batch-sized
     // re-attach frame, one row per query.
     val deltaRows = delta.count()
-    BandedIndex.probe(spark, fam, indexPath, delta, staticPrune, deltaRows) { (joined, q) =>
+    BandedIndex.probe(spark, fam, indexPath, delta, deltaRows) { (joined, q) =>
       // Distinct diagnostic key: the band-frame guard records under
       // indexPath; this one must not clobber it.
       cosineAtLeast(joined.join(BandedIndex.guardedQueryBroadcast(
@@ -1402,10 +1401,7 @@ object Similarity {
                        delta: DataFrame, idCol: String, vecCol: String,
                        indexPath: String): Unit = {
     import graft.functions.VectorFunctions.{dot => dotc}
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-      .collect() // nCells rows — a tiny driver-side model artifact
-      .map(r => (r.getAs[Int]("cell"),
-        r.getAs[scala.collection.Seq[Double]]("centroid").toArray))
+    val centroids = readCentroids(spark, indexPath)
     Dedup.ensureParallelism(
         delta.select(col(idCol).as("cand_id"), asDouble(col(vecCol)).as("cv")))
       // Same nearestCell as the build path — exact assignment parity.
@@ -1533,11 +1529,8 @@ object Similarity {
                       indexPath: String, nCells: Int): Unit = {
     val corpus = BandedIndex.readLayout(spark, s"$indexPath/corpus")
       .select(col("cand_id"), col("cv"))
-    val tmp = s"${indexPath}_REBUILDING"
-    BandedIndex.hadoopFs(spark, tmp)._1
-      .delete(new org.apache.hadoop.fs.Path(tmp), true)
-    writeIvfIndex(corpus, "cand_id", "cv", nCells, tmp)
-    BandedIndex.swapInPlace(spark, indexPath, tmp)
+    rebuildInPlace(spark, indexPath)(
+      writeIvfIndex(corpus, "cand_id", "cv", nCells, _))
   }
 
   /** [[rebuildIvfIndex]] for the [[writeIvfPqIndex]] layout. The PQ
@@ -1550,12 +1543,20 @@ object Similarity {
     */
   def rebuildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                         nCells: Int, m: Int, codebookK: Int,
-                        indexPath: String): Unit = {
-    val spark = corpus.sparkSession
+                        indexPath: String): Unit =
+    rebuildInPlace(corpus.sparkSession, indexPath)(
+      writeIvfPqIndex(corpus, idCol, vecCol, nCells, m, codebookK, _))
+
+  /** The whole-index rebuild of both IVF layouts: `build` writes the
+    * fresh layout at a cleared `<indexPath>_REBUILDING` path, which
+    * [[BandedIndex.swapInPlace]] then moves into place.
+    */
+  private def rebuildInPlace(spark: org.apache.spark.sql.SparkSession,
+                             indexPath: String)(build: String => Unit): Unit = {
     val tmp = s"${indexPath}_REBUILDING"
     BandedIndex.hadoopFs(spark, tmp)._1
       .delete(new org.apache.hadoop.fs.Path(tmp), true)
-    writeIvfPqIndex(corpus, idCol, vecCol, nCells, m, codebookK, tmp)
+    build(tmp)
     BandedIndex.swapInPlace(spark, indexPath, tmp)
   }
 

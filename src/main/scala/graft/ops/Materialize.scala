@@ -57,6 +57,11 @@ object Materialize {
     * same job the first consumer would have triggered anyway; the only
     * cost is that the consumer re-reads the stored blocks instead of
     * fusing with the materializing pass.
+    *
+    * A pinned frame plans as a `LogicalRDD` leaf with unknown size
+    * statistics, so it defeats dynamic partition pruning downstream.
+    * The banded-index probe reads that leaf off its query frame and
+    * prunes statically instead (`graft.llm.BandedIndex.probe`).
     */
   def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
@@ -73,16 +78,6 @@ object Materialize {
         org.apache.spark.sql.functions.lit(1)).as("rows")))
     (pinned, () => rows.get("rows").asInstanceOf[Long])
   }
-
-  /** [[pin]] behind a flag — the banded-index probes' static-prune
-    * posture: the probe plan evaluates its query frame twice (key
-    * collect + join), so when `cond` the POST-KERNEL narrow frame is
-    * pinned once and both passes read stored blocks; when not (the DPP
-    * query paths), the frame stays un-pinned so its stats survive for
-    * the pruning benefit check.
-    */
-  def pinIf(cond: Boolean, df: DataFrame): DataFrame =
-    if (cond) pin(df) else df
 
   /** Eager local checkpoint ([[pin]]): executor blocks, no lineage
     * fallback.

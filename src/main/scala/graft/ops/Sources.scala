@@ -208,13 +208,14 @@ object Sources {
     * produce exactly that. Compaction is one narrow shuffle whose output
     * is the target layout; no driver-side row handling (the listing
     * touches file METADATA only, never data).
-    */
-  /** `partitionCols`: pass the input's partition columns to PRESERVE the
-    * hive layout in the compacted output (files compact within each
-    * partition directory); the default compacts to a flat unpartitioned
-    * layout — correct for round-robin shard dirs, but it would silently
-    * drop partition pruning for readers of a "date=.../part-..." input,
-    * so partitioned inputs should always pass their columns.
+    *
+    * @param partitionCols pass the input's partition columns to PRESERVE
+    *   the hive layout in the compacted output (files compact within
+    *   each partition directory); the default compacts to a flat
+    *   unpartitioned layout — correct for round-robin shard dirs, but it
+    *   would silently drop partition pruning for readers of a
+    *   "date=.../part-..." input, so partitioned inputs should always
+    *   pass their columns.
     */
   def compactParquet(spark: SparkSession, inPath: String, outPath: String,
                      targetBytes: Long,

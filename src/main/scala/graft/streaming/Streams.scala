@@ -352,16 +352,16 @@ object Streams {
     * batch rows whose normalized text is NOT already in the write-time
     * exact-dup index ([[graft.llm.Dedup.writeExactDupIndex]]). The
     * membership check is [[graft.llm.Dedup.probeExactDupIndex]] — a
-    * DPP-pruned read of the bucket directories the batch hashes into,
-    * md5-verified — then a left-anti join back on the id. The corpus
-    * text is never re-read or re-hashed; at 100 TB the gate's cost is
-    * the BATCH size, not the corpus size.
+    * pruned read of the bucket directories the batch hashes into (DPP,
+    * or a static key prune when the batch is pinned, as in the gate
+    * sinks; the probe picks), md5-verified — then a left-anti join back
+    * on the id. The corpus text is never re-read or re-hashed; at
+    * 100 TB the gate's cost is the BATCH size, not the corpus size.
     */
   def dedupGateBatch(spark: SparkSession, indexPath: String, batch: DataFrame,
-                     idCol: String, textCol: String,
-                     staticPrune: Boolean = false): DataFrame = {
+                     idCol: String, textCol: String): DataFrame = {
     val hits = graft.llm.Dedup
-      .probeExactDupIndex(spark, indexPath, batch, idCol, textCol, staticPrune)
+      .probeExactDupIndex(spark, indexPath, batch, idCol, textCol)
       .select(col("query_id").as(idCol)).distinct()
     batch.join(hits, Seq(idCol), "left_anti")
   }
@@ -369,7 +369,7 @@ object Streams {
   /** One micro-batch of the streaming NEAR-dup gate: keep only the
     * batch rows whose 120-bit wide simhash is NOT within `maxHamming`
     * of any corpus member — [[graft.llm.Dedup.probeSimhashWideIndex]]
-    * (a DPP-pruned read of the band directories the batch hashes into,
+    * (a pruned read of the band directories the batch hashes into,
     * two-word bit_count verify) + left-anti on the id. The near-dup
     * twin of [[dedupGateBatch]]: the exact gate rejects only verbatim
     * (normalized) copies, this one also rejects lightly-edited copies
@@ -378,10 +378,10 @@ object Streams {
     */
   def nearDupGateBatch(spark: SparkSession, indexPath: String,
                        batch: DataFrame, idCol: String, textCol: String,
-                       maxHamming: Int, staticPrune: Boolean = false): DataFrame = {
+                       maxHamming: Int): DataFrame = {
     val hits = graft.llm.Dedup
       .probeSimhashWideIndex(spark, indexPath, batch, idCol, textCol,
-        maxHamming, staticPrune)
+        maxHamming)
       .select(col("query_id").as(idCol)).distinct()
     batch.join(hits, Seq(idCol), "left_anti")
   }
@@ -416,9 +416,10 @@ object Streams {
     * [[graft.llm.Multimodal.MediaRecord]] shape) whose 110-bit wide
     * image dHash is NOT within `maxHamming` of any corpus member in
     * the write-time wide hamming index
-    * ([[graft.llm.Dedup.probeHammingWideIndex]] — a DPP-pruned read of
-    * the band directories the batch hashes into, exact two-word
-    * bit_count verify) + left-anti on the id. The multimodal member of
+    * ([[graft.llm.Dedup.probeHammingWideIndex]] — a statically pruned
+    * read, since the hashes are pinned, of the band directories the
+    * batch hashes into, exact two-word bit_count verify) + left-anti
+    * on the id. The multimodal member of
     * the gate family: the exact/near/semantic gates cover text, this
     * one catches the re-uploaded / recompressed / brightness-nudged
     * image flood. Cost is the BATCH size (each delta image decoded
@@ -509,25 +510,23 @@ object Streams {
                                   maxHamming: Int): DataFrame = {
     // Decode-once, the SINK posture (round-19): pin the payload batch
     // (its source may be an expensive generator or a non-replayable
-    // frame), pin the signature kernel's narrow output, and probe with
-    // staticPrune — a pinned frame defeats DPP's benefit heuristic, so
-    // without the static key prune this probe would read the WHOLE
-    // index (see BandedIndex.probeJoinStatic). Before the pins this
-    // body evaluated the batch payload chain once per consumer (kernel,
-    // probe double-pass, final anti-join).
+    // frame) and the signature kernel's narrow output. Before the pins
+    // this body evaluated the batch payload chain once per consumer
+    // (kernel, probe double-pass, final anti-join).
     val b = Materialize.pin(batch)
     b.join(perceptualHits(spark, indexPath, Materialize.pin(kernel(b)),
       maxHamming), Seq("media_id"), "left_anti")
   }
 
   /** The arriving media ids with a corpus member within `maxHamming` in
-    * a wide (56, 54) hamming index, probed with the static key prune.
+    * a wide (56, 54) hamming index. The gates pass pinned hashes, which
+    * the probe prunes with the static key prune.
     */
   private def perceptualHits(spark: SparkSession, indexPath: String,
                              hashes: DataFrame, maxHamming: Int): DataFrame =
     graft.llm.Dedup.probeHammingWideIndex(spark, indexPath,
       hashes, "media_id", "sig_lo", "sig_hi", nLoBits = 56,
-      nHiBits = 54, maxHamming, staticPrune = true)
+      nHiBits = 54, maxHamming)
       .select(col("query_id").as("media_id")).distinct()
 
   /** Near-dup pairs (`id_a < id_b`) of a wide (56, 54) signature frame. */
@@ -549,7 +548,8 @@ object Streams {
     * perceptual/text dedup gates' job, not a pair-integrity defect.
     *
     * Both membership checks are the EXISTING banded index probes
-    * (batch-sized DPP/static-pruned reads); this gate adds only the
+    * (batch-sized reads; the batch and its hashes are pinned, so each
+    * probe prunes statically); this gate adds only the
     * per-(query, cand) anti-join between their hit sets — no new
     * candidate generation, nothing wider than two ids per row. `batch`
     * carries the [[graft.llm.Multimodal.MediaRecord]] columns plus
@@ -586,10 +586,7 @@ object Streams {
     // batch once per decision input (image kernel, caption probe —
     // itself a two-pass plan, batch-id domain, final anti-join), so an
     // un-pinned payload batch re-ran its source ~5x and the image
-    // decode once per probe pass. Both probes therefore run with the
-    // static key prune: the pinned frames defeat DPP's benefit
-    // heuristic, and without it both index probes read their whole
-    // layouts (see BandedIndex.probeJoinStatic).
+    // decode once per probe pass.
     val b = Materialize.pin(batch)
     pairGateFromHashes(spark, imageIndexPath, captionIndexPath, b,
       Materialize.pin(imageHashKernel(b)), captionCol, maxHamming,
@@ -621,12 +618,11 @@ object Streams {
     val batchIds = batch.select(col("media_id").as("cand_id")).distinct()
     val imgHits = graft.llm.Dedup.probeHammingWideIndex(spark,
       imageIndexPath, hashes, "media_id", "sig_lo", "sig_hi", nLoBits = 56,
-      nHiBits = 54, maxHamming, staticPrune = true)
+      nHiBits = 54, maxHamming)
       .select(col("query_id"), col("cand_id"))
       .join(broadcast(batchIds), Seq("cand_id"), "left_anti")
     val capHits = graft.llm.Dedup.probeSimhashWideIndex(spark,
-      captionIndexPath, batch, "media_id", captionCol, capMaxHamming,
-      staticPrune = true)
+      captionIndexPath, batch, "media_id", captionCol, capMaxHamming)
       .select(col("query_id"), col("cand_id"))
       .join(broadcast(batchIds), Seq("cand_id"), "left_anti")
     val flagged = pairDefects(imgHits, capHits, Seq("query_id", "cand_id"),
@@ -650,7 +646,7 @@ object Streams {
   /** One micro-batch of the streaming SEMANTIC ingest gate: keep only
     * the batch rows whose embedding has NO corpus bucket-mate with
     * cosine >= `threshold` in the write-time LSH index
-    * ([[graft.llm.Similarity.probeLshThreshold]] — a DPP-pruned read of
+    * ([[graft.llm.Similarity.probeLshThreshold]] — a pruned read of
     * the hyperplane-bucket directories the batch hashes into, exact
     * cosine verify) + left-anti on the id. The third gate of the
     * family: the exact gate rejects verbatim (normalized) copies, the
@@ -677,18 +673,15 @@ object Streams {
   def semanticGateBatch(spark: SparkSession,
                         indexPath: String, batch: DataFrame, idCol: String,
                         vecCol: String, threshold: Double, numPlanes: Int,
-                        numTables: Int, staticPrune: Boolean = false,
-                        probeTables: Int = 0): DataFrame = {
+                        numTables: Int, probeTables: Int = 0): DataFrame = {
     val probe =
       if (probeTables > 0)
         graft.llm.Similarity.probeLshThresholdMultiProbe(spark, indexPath,
           batch, idCol, vecCol, threshold, numPlanes, numTables,
-          probeTables = math.min(probeTables, numTables),
-          staticPrune = staticPrune)
+          probeTables = math.min(probeTables, numTables))
       else
         graft.llm.Similarity.probeLshThreshold(spark, indexPath, batch,
-          idCol, vecCol, threshold, numPlanes, numTables,
-          staticPrune = staticPrune)
+          idCol, vecCol, threshold, numPlanes, numTables)
     val hits = probe.select(col("query_id").as(idCol)).distinct()
     batch.join(hits, Seq(idCol), "left_anti")
   }
@@ -793,12 +786,8 @@ object Streams {
     */
   def exactGate(indexPath: String, idCol: String, textCol: String): Gate =
     Gate(Seq(
-      // staticPrune on every membership stage: stage inputs are PINNED
-      // frames (the prepared batch or its survivors; unknown size stats),
-      // which silently disables DPP on the index probes — see
-      // BandedIndex.probeJoinStatic.
       ("exact", PerRow(idCol, df => dedupGateBatch(df.sparkSession,
-        indexPath, df, idCol, textCol, staticPrune = true))),
+        indexPath, df, idCol, textCol))),
       ("exact_intra", df => df.join(
         df.select(col(idCol),
             md5(graft.llm.TextOps.normalize(col(textCol))).as("__h"))
@@ -818,7 +807,7 @@ object Streams {
                   maxHamming: Int): Gate =
     Gate(Seq(
       ("near", PerRow(idCol, df => nearDupGateBatch(df.sparkSession,
-        indexPath, df, idCol, textCol, maxHamming, staticPrune = true))),
+        indexPath, df, idCol, textCol, maxHamming))),
       // simhashWidePairs emits id_a < id_b; dropping every id_b keeps the
       // lowest id of each intra-batch near-dup group.
       ("near_intra", df => df.join(
@@ -873,7 +862,7 @@ object Streams {
     Gate(Seq(
       ("semantic", PerRow(idCol, df => semanticGateBatch(df.sparkSession,
         indexPath, df, idCol, vecCol, threshold, numPlanes, numTables,
-        staticPrune = true, probeTables = probeTables))),
+        probeTables = probeTables))),
       ("semantic_intra", df => df.join(
         semanticIntraBatchDups(df, idCol, vecCol, threshold, numPlanes,
           numTables, probeTables = probeTables),

@@ -907,7 +907,7 @@ class DedupSpec extends SparkSpec {
     assert(out === Array((0, 2, 1L), (6, 8, 1L)))
   }
 
-  test("probeHammingWideIndex staticPrune: a PINNED delta probes " +
+  test("probeHammingWideIndex: a PINNED delta probes " +
     "row-identically to the DPP path and reads only the probed directories") {
     // Synthetic two-word signatures: positive, inside the (56, 54)
     // widths, spread across band keys.
@@ -928,10 +928,11 @@ class DedupSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       // The STREAMING-SINK shape: the delta is pinned (localCheckpoint),
       // which hides its size stats and silently disables DPP — the
-      // static path must return the identical rows from a pruned read.
+      // probe must see the pin and prune statically on its own, with
+      // the identical rows from a pruned read.
       val pinned = graft.ops.Materialize.pin(delta)
       val viaStatic = Dedup.probeHammingWideIndex(spark, dir, pinned,
-        "id", "lo", "hi", 56, 54, maxHamming = 7, staticPrune = true)
+        "id", "lo", "hi", 56, 54, maxHamming = 7)
       val (rows, scanned) = {
         val plan = viaStatic.queryExecution.executedPlan
         val n = plan.execute().count()
@@ -1041,23 +1042,37 @@ class DedupSpec extends SparkSpec {
         // Re-uploads of corpus members under fresh ids: each collides
         // with its original in every band.
         val delta = corpus.filter(col(id) < 20).withColumn(id, col(id) + 1000000L)
-        def probe(path: String, static: Boolean) =
-          BandedIndex.probe(spark, fam, path, delta, static) { (joined, _) =>
+        def probe(path: String, rows: org.apache.spark.sql.DataFrame) =
+          BandedIndex.probe(spark, fam, path, rows) { (joined, _) =>
             joined.select("query_id", "cand_id").distinct()
           }
-        val plain = probe(full, static = false)
+        // The static key prune is a literal predicate on `bkt` among the
+        // index scan's partition filters; the DPP plan has none.
+        def keyPruned(df: org.apache.spark.sql.DataFrame) =
+          df.queryExecution.sparkPlan.collect {
+            case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+              s.partitionFilters
+          }.flatten.exists { e =>
+            e.references.exists(_.name == "bkt") &&
+            !e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.IsNotNull] &&
+            !e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.DynamicPruning]
+          }
+        val plain = probe(full, delta)
         val want = pairs(plain)
         assert(want.size >= 10, s"$name: re-uploads not found: $want")
-        assert(pairs(probe(grown, static = false)) === want,
+        assert(pairs(probe(grown, delta)) === want,
           s"$name: grown layout probes differently from the rebuilt one")
         assert(plain.queryExecution.executedPlan.toString.toLowerCase
           .contains("dynamicpruning"), s"$name: no partition pruning")
-        assert(pairs(probe(full, static = true)) === want, s"$name: static")
+        assert(!keyPruned(plain), s"$name: file-backed delta pruned statically")
+        // A pinned delta: the probe picks the static key prune itself.
+        val static = probe(full, graft.ops.Materialize.pin(delta))
+        assert(pairs(static) === want, s"$name: static")
         assert(BandedIndex.staticPruneFallback(full) === 0L, name)
+        assert(keyPruned(static), s"$name: pinned delta not pruned statically")
         val foreign = cases.map(_._2).find(_.params != fam.params).get
         val e1 = intercept[IllegalArgumentException] {
-          BandedIndex.probe(spark, foreign, full, delta, staticPrune = false)(
-            (joined, _) => joined)
+          BandedIndex.probe(spark, foreign, full, delta)((joined, _) => joined)
         }
         assert(e1.getMessage.contains("different parameters"), name)
         val e2 = intercept[IllegalArgumentException] {

@@ -6,23 +6,26 @@ import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
-/** Round-19 optimization-round harness: dump `.explain("formatted")` for
-  * every registered query (or SPARK_GRAFT_ONLY subset) to
-  * plans/r19/<name>_<SUFFIX>.txt, under the same session posture the bench
-  * uses (pinned partitions=cores at sf0.1). SUFFIX comes from
-  * SPARK_GRAFT_PLAN_SUFFIX (default "before").
+/** Dump `.explain("formatted")` of every registered query (or the
+  * comma-separated SPARK_GRAFT_ONLY subset) to
+  * <SPARK_GRAFT_PLAN_DIR>/<name>_<SUFFIX>.txt, under the bench's session
+  * posture (shuffle partitions = cores, AQE coalescing off). Two dumps of
+  * the same queries, one per revision, show whether a refactor changed
+  * any plan. Defaults: SPARK_GRAFT_SF_DIR the sf0.1 test data,
+  * SPARK_GRAFT_CPUS 4, SPARK_GRAFT_PLAN_DIR /tmp/graft_plans,
+  * SPARK_GRAFT_PLAN_SUFFIX "before".
   *
-  * Usage:
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_PLAN_SUFFIX=before \
-  *   sbt "set Compile/unmanagedSourceDirectories += file(\"scratch\"); runMain scratch.PlanDump"
+  * Usage, from the repo root:
+  *   SPARK_GRAFT_SF_DIR=<sf0.1 dir> SPARK_GRAFT_PLAN_SUFFIX=before \
+  *   sbt "set Compile/unmanagedSourceDirectories += file(\"tools\"); runMain scratch.PlanDump"
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val outDir = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR",
-      "/root/repo/plans/r19"))
+      "/tmp/graft_plans"))
     Files.createDirectories(outDir)
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
